@@ -435,7 +435,9 @@ object Dml {
     s.countStatus("number of rows merged", after)
   }
 
-  /** Source is `(subquery) [AS] alias` or `table [AS] alias`. */
+  /** Source is `(subquery) [AS] alias[(c1, …)]` or `table [AS] alias`.
+    * An alias column list renames the subquery's columns positionally
+    * (`USING (VALUES …) AS s(k, v)`). */
   private def parseSource(spec: String): (String, String) = {
     val t = spec.trim
     if (t.startsWith("(")) {
@@ -444,7 +446,11 @@ object Dml {
       val alias = t.substring(close + 1).trim
         .replaceAll("(?i)^AS\\s+", "").trim
       require(alias.nonEmpty, "MERGE subquery source needs an alias")
-      (body, alias)
+      val open = alias.indexOf('(')
+      if (open > 0 && alias.endsWith(")"))
+        (s"(SELECT * FROM $body AS __graft_cols${alias.substring(open)})",
+          alias.substring(0, open).trim)
+      else (body, alias)
     } else {
       val parts = t.split("\\s+")
       val name = parts(0)

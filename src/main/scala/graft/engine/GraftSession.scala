@@ -672,11 +672,11 @@ final class GraftSession(
         // substitute FIRST (registers the full base view), then re-bind
         // the view to the delta; spark.sql analysis inlines the binding
         val substituted = rewriteAndSubstitute(st.query)
-        Streams.readFiles(spark, cur, af(b), baseSchema)
-          .createOrReplaceTempView(viewName(b))
+        registry.bindTransient(b,
+          Streams.readFiles(spark, cur, af(b), baseSchema))
         val deltaResult =
           try spark.sql(substituted)
-          finally registry.load(cur).createOrReplaceTempView(viewName(b))
+          finally registry.bind(cur)
         DynamicTables.lastDeltaFiles = af(b).toSeq.sorted
         applyIncrement(plan, partialIfDerived(plan, deltaResult), "incremental-")
       case (Some(DynamicTables.JoinDelta(inner)), Some(af))
@@ -705,19 +705,16 @@ final class GraftSession(
           for (i <- st.bases.indices if af(st.bases(i)).nonEmpty) {
             for (j <- st.bases.indices) {
               val b = st.bases(j)
-              val bound =
-                if (j < i) oldView(b)
-                else if (j == i)
-                  Streams.readFiles(spark, curs(b), af(b), schemaOf(b))
-                else registry.load(curs(b))
-              bound.createOrReplaceTempView(viewName(b))
+              if (j < i) registry.bindTransient(b, oldView(b))
+              else if (j == i) registry.bindTransient(b,
+                Streams.readFiles(spark, curs(b), af(b), schemaOf(b)))
+              else registry.bind(curs(b))
             }
             // spark.sql analyzes eagerly, inlining the current bindings —
             // later iterations re-bind without disturbing earlier parts
             parts += partialIfDerived(inner, spark.sql(substituted))
           }
-        } finally st.bases.foreach(b =>
-          registry.load(curs(b)).createOrReplaceTempView(viewName(b)))
+        } finally st.bases.foreach(b => registry.bind(curs(b)))
         DynamicTables.lastDeltaFiles =
           st.bases.flatMap(af(_)).distinct.sorted
         applyIncrement(inner, parts.reduce(_ unionByName _),
@@ -734,11 +731,11 @@ final class GraftSession(
         // `removed` reads under the offset-time ref (its metadata still
         // lists those files), `added` under the current one
         def evalOver(files: Set[String], fileRef: TableRef): DataFrame = {
-          Streams.readFiles(spark, fileRef, files, baseSchema)
-            .createOrReplaceTempView(viewName(b))
+          registry.bindTransient(b,
+            Streams.readFiles(spark, fileRef, files, baseSchema))
           try DynamicTables.partialize(spark.sql(substituted),
             force = am.having.isDefined)
-          finally registry.load(cur).createOrReplaceTempView(viewName(b))
+          finally registry.bind(cur)
         }
         if (am.retractable) {
           val dNeg = DynamicTables.negateState(evalOver(removed, oref), am)
@@ -788,14 +785,12 @@ final class GraftSession(
                  if files.nonEmpty) {
               for (j <- st.bases.indices) {
                 val b = st.bases(j)
-                val bound =
-                  if (j < i) oldView(b)
-                  else if (j == i)
-                    Streams.readFiles(spark,
-                      if (neg) st.offsets(b)._1 else curs(b),
-                      files, schemaOf(b))
-                  else registry.load(curs(b))
-                bound.createOrReplaceTempView(viewName(b))
+                if (j < i) registry.bindTransient(b, oldView(b))
+                else if (j == i) registry.bindTransient(b,
+                  Streams.readFiles(spark,
+                    if (neg) st.offsets(b)._1 else curs(b),
+                    files, schemaOf(b)))
+                else registry.bind(curs(b))
               }
               val part = DynamicTables.partialize(spark.sql(substituted),
                 force = am.having.isDefined)
@@ -803,8 +798,7 @@ final class GraftSession(
                         else part)
             }
           }
-        } finally st.bases.foreach(b =>
-          registry.load(curs(b)).createOrReplaceTempView(viewName(b)))
+        } finally st.bases.foreach(b => registry.bind(curs(b)))
         DynamicTables.lastDeltaFiles =
           st.bases.flatMap(b => chg(b)._1 ++ chg(b)._2).distinct.sorted
         if (parts.isEmpty)
@@ -825,13 +819,13 @@ final class GraftSession(
         // touched rows is an empty dir)
         def evalDirs(dirs: Seq[String], partialOf:
             Option[DynamicTables.AggMerge]): DataFrame = {
-          spark.read.schema(baseSchema).parquet(dirs: _*)
-            .createOrReplaceTempView(viewName(b))
+          registry.bindTransient(b,
+            spark.read.schema(baseSchema).parquet(dirs: _*))
           try {
             val r = spark.sql(substituted)
             partialOf.fold(r)(am =>
               DynamicTables.partialize(r, force = am.having.isDefined))
-          } finally registry.load(cur).createOrReplaceTempView(viewName(b))
+          } finally registry.bind(cur)
         }
         DynamicTables.lastDeltaFiles = (addDirs ++ delDirs).sorted
         plan match {
@@ -1691,19 +1685,22 @@ final class GraftSession(
      "LOCALTIME(?:STAMP)?)\\b|" +
      "(?:SYSDATE|GETDATE|NOW|RANDOM|RAND|UUID_STRING|UUID|SEQ\\d)\\s*\\()").r
 
-  /** Per-base storage fingerprint (hashed file sets); None = some base is
-    * not file-addressable, which disables reuse for the statement. */
+  /** Per-base storage fingerprint: the version key of the binding the
+    * base's view holds, else (formats without a key) its hashed file
+    * sets; None = some base is not file-addressable, which disables
+    * reuse for the statement. */
   private def basesFingerprint(): Option[String] = {
     val parts = basesResolvedInStmt.toSeq.sortBy(_.flat).map { b =>
-      registry.resolve(b) match {
-        case Some(ref) =>
+      (registry.resolve(b), registry.boundVersion(b)) match {
+        case (Some(_), Some(key)) => key.toString
+        case (Some(ref), None) =>
           val (fs, ds) = Streams.filesOf(spark, ref)
           if (fs.isEmpty) return None
           val h = scala.util.hashing.MurmurHash3.orderedHash(
             fs.get.toSeq.sorted ++ Seq("|") ++
               ds.getOrElse(Set.empty[String]).toSeq.sorted)
           s"${b.flat}:${ref.format}:$h"
-        case None => return None
+        case (None, _) => return None
       }
     }
     Some(parts.mkString(";"))
@@ -2105,7 +2102,15 @@ final class GraftSession(
 
   /** Used by [[TableResolver]]: materialize `fqn` as a flat temp view and
     * return the view name; unknown names are left untouched so Spark can
-    * resolve its own temp views / raise its own errors. */
+    * resolve its own temp views / raise its own errors.
+    *
+    * A Lake base binds through [[TableRegistry.bind]], which keeps the
+    * session's binding across statements while the base's version key
+    * (ref + storage signature) is unchanged; it and
+    * [[TableRegistry.bindTransient]] are the only ways a base's session
+    * view may be rebound, so the memo always names the binding the
+    * catalog holds. Streams and information_schema views track state a
+    * version key does not see and are rebuilt on every reference. */
   private[engine] def ensureView(f: FQN): Option[String] =
     if (streams.contains(f)) {
       // stream read: materialize the CURRENT delta as the view (recomputed
@@ -2149,13 +2154,7 @@ final class GraftSession(
       }
     } else registry.resolve(f).orElse(resolveExternal(f)).map { ref =>
       basesResolvedInStmt += f
-      if (ref.kind == TableKind.Lake) {
-        val df = registry.load(ref)
-        // lazy auto-stats (rowCount + ndv, once per path per JVM) so the
-        // EagerAggregation profitability gate can evaluate in sessions
-        AutoStats.maybeCollect(spark, df)
-        df.createOrReplaceTempView(viewName(f))
-      }
+      if (ref.kind == TableKind.Lake) registry.bind(ref)
       viewName(f)
     }
 

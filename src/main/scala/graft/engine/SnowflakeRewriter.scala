@@ -285,6 +285,7 @@ object SnowflakeRewriter {
     toks = rewriteConnectBy(toks)
     toks = rewriteAsOfJoin(toks, resolver)
     toks = unwrapTableFn(toks)
+    toks = rewriteValuesColumns(toks)
     toks = rewriteFlatten(toks)
     toks = rewriteJsonPaths(toks)
     toks = rewriteCasts(toks)
@@ -1123,6 +1124,61 @@ object SnowflakeRewriter {
       (v.slice(0, sig(0) + 1) ++ v.slice(sig(2) + 1, v.length) ++
         lex(s" LIMIT $n")).toVector
     } else v
+  }
+
+  // ── pass: FROM|JOIN|USING [(] VALUES (r1), (r2) … [)]
+  //          → (SELECT col1 AS COLUMN1, … FROM VALUES (r1), (r2) …)
+  // Snowflake names an inline table's columns COLUMN1..n, Spark col1..n.
+  // The projection keeps any alias column list after it positional. ──
+  private def rewriteValuesColumns(toks: Vector[Tok]): Vector[Tok] = {
+    def prevSig(from: Int): Int = {
+      var k = from
+      while (k >= 0 && (toks(k).isInstanceOf[Ws] || toks(k).isInstanceOf[Comment])) k -= 1
+      k
+    }
+    def introduces(k: Int): Boolean = k >= 0 && (toks(k) match {
+      case Ident(w) => Set("FROM", "JOIN", "USING").contains(w.toUpperCase)
+      case _ => false
+    })
+    def isOpen(k: Option[Int]): Boolean = k.exists(toks(_) == Op("("))
+    /** (last token of the rows, column count, already parenthesized) of
+      * the inline table whose VALUES keyword is at `i`. */
+    def inlineTable(i: Int): Option[(Int, Int, Boolean)] = {
+      val p = prevSig(i - 1)
+      val inParens = p >= 0 && toks(p) == Op("(") && introduces(prevSig(p - 1))
+      val first = nextSig(toks, i)
+      if (!(inParens || introduces(p)) || !isOpen(first)) return None
+      var end = matchParen(toks, first.get)
+      val n = splitArgs(toks, first.get, end).length
+      var next = nextSig(toks, end)
+      while (next.exists(toks(_) == Op(",")) && isOpen(nextSig(toks, next.get))) {
+        end = matchParen(toks, nextSig(toks, next.get).get)
+        next = nextSig(toks, end)
+      }
+      // parenthesized form: the rows must fill the parens exactly
+      if (n > 0 && (!inParens || next.contains(matchParen(toks, p))))
+        Some((end, n, inParens))
+      else None
+    }
+    val out = ArrayBuffer.empty[Tok]
+    var i = 0
+    while (i < toks.length) {
+      val table = toks(i) match {
+        case Ident(w) if w.equalsIgnoreCase("VALUES") => inlineTable(i)
+        case _ => None
+      }
+      table match {
+        case Some((end, n, inParens)) =>
+          val proj = (1 to n).map(k => s"col$k AS COLUMN$k").mkString(", ")
+          if (!inParens) out += Op("(")
+          out ++= lex(s"SELECT $proj FROM ")
+          out ++= toks.slice(i, end + 1)
+          if (!inParens) out += Op(")")
+          i = end + 1
+        case None => out += toks(i); i += 1
+      }
+    }
+    out.toVector
   }
 
   // ── pass: <table> SAMPLE [BERNOULLI|ROW|SYSTEM|BLOCK] (p) →

@@ -103,6 +103,11 @@ final class SnowflakeServer(spark: SparkSession, lakeDir: Option[String],
   private var server: HttpServer = _
 
   def start(port: Int = 0): Int = {
+    // no-delay: the JDK server writes headers and body as two segments,
+    // and with Nagle on the body waits for the client's delayed ACK
+    // (~40 ms per response). Read once, when the first HttpServer is made.
+    if (System.getProperty("sun.net.httpserver.nodelay") == null)
+      System.setProperty("sun.net.httpserver.nodelay", "true")
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     server.createContext("/session/v1/login-request", handler(doLogin))
     server.createContext("/queries/v1/query-request", handler(doQuery))

@@ -7,7 +7,8 @@ import scala.collection.mutable
   * named gate (or a default hot list) runs the gate warm, then `reps`
   * timed passes with a listener recording every job's callsite and
   * wall-clock, so the fixed per-job cost of a gate is attributable to
-  * source lines (the same evidence StmtOverheadProbe gives statements).
+  * source lines (`perfbench/run.py --trace 1` gives statements the same
+  * evidence as a per-layer split).
   *
   * Usage: runMain graft.tools.GateJobProbe <sfDir> [reps] [gate,gate,...]
   */

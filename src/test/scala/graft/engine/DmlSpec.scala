@@ -108,6 +108,26 @@ class DmlSpec extends AnyFunSuite {
     s.sql("DROP TABLE t_ms")
   }
 
+  test("MERGE USING (VALUES …) with an alias column list, and COLUMNn names") {
+    val s = newSession()
+    s.sql("CREATE OR REPLACE TABLE t_mv AS SELECT n_nationkey AS k, n_name AS nm FROM nation WHERE n_nationkey < 3")
+    s.sql(
+      """MERGE INTO t_mv USING (VALUES (1, 'one'), (7, 'seven')) AS s(k, p)
+        |ON t_mv.k = s.k
+        |WHEN MATCHED THEN UPDATE SET nm = s.p
+        |WHEN NOT MATCHED THEN INSERT (k, nm) VALUES (s.k, s.p)""".stripMargin)
+    // without a column list the source columns are Snowflake's COLUMN1..n
+    s.sql(
+      """MERGE INTO t_mv USING (VALUES (2, 'two')) s
+        |ON t_mv.k = s.column1
+        |WHEN MATCHED THEN UPDATE SET nm = s.column2""".stripMargin)
+    val rows = s.sql("SELECT k, nm FROM t_mv ORDER BY k").collect()
+      .map(r => (r.getAs[Number](0).longValue, r.getString(1))).toSeq
+    assert(rows.map(_._1) == Seq(0L, 1L, 2L, 7L))
+    assert(rows.map(_._2).drop(1) == Seq("one", "two", "seven"))
+    s.sql("DROP TABLE t_mv")
+  }
+
   test("MERGE raises when multiple source rows match one target row") {
     val s = newSession()
     s.sql("CREATE OR REPLACE TABLE t_nd AS SELECT n_nationkey AS k, n_name AS nm FROM nation WHERE n_nationkey < 3")

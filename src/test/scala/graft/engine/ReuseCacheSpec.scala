@@ -98,4 +98,119 @@ class ReuseCacheSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("USE_CACHED_RESULT"))
   }
+
+  // ── bound-view memo (TableRegistry.bind): a base's session view stays
+  // bound across statements until its version key changes ──────────────
+
+  private def boundPlan(s: GraftSession, table: String) =
+    s.spark.sessionState.catalog.getRawTempView(s.viewName(s.qualify(table)))
+
+  private def count(s: GraftSession, q: String): Long =
+    s.sql(q).collect()(0).getLong(0)
+
+  test("bind memo: repeated SELECTs over an unchanged table keep the bound view") {
+    val s = newSession()
+    s.sql("ALTER SESSION SET USE_CACHED_RESULT = FALSE")
+    assert(count(s, "SELECT count(*) AS n FROM orders") == 1500)
+    val first = boundPlan(s, "orders")
+    assert(first.isDefined)
+    val key = s.registry.boundVersion(s.qualify("orders"))
+    assert(key.isDefined)
+    s.sql("SELECT max(o_orderkey) AS m FROM orders").collect()
+    // same TemporaryViewRelation instance: no new spark.read, no rebind
+    assert(boundPlan(s, "orders").get eq first.get)
+    assert(s.registry.boundVersion(s.qualify("orders")) == key)
+    // a direct resolver call binds through the same memo
+    val substituted = TableResolver.resolveAndSubstitute(
+      "SELECT count(*) FROM orders", s)
+    assert(substituted.contains(s.viewName(s.qualify("orders"))))
+    assert(boundPlan(s, "orders").get eq first.get)
+  }
+
+  test("bind memo: out-of-band parquet append and overwrite reach the next statement") {
+    val dir = java.nio.file.Files.createTempDirectory("bind_memo_lake").toString
+    val path = s"$dir/bm_lake.parquet"
+    spark.range(0, 10).toDF("id").coalesce(1).write.parquet(path)
+    val s = new GraftSession(spark)
+    s.attachLake(dir, names = Seq("bm_lake"))
+    val q = "SELECT count(*) AS n FROM bm_lake"
+    assert(count(s, q) == 10)
+    assert(count(s, q) == 10 && s.lastResultReused)
+    // append: a new part file beside the old one
+    spark.range(100, 105).toDF("id").coalesce(1).write.mode("append").parquet(path)
+    assert(count(s, q) == 15)
+    assert(!s.lastResultReused, "an appended file must change the fingerprint")
+    // overwrite one file in place: same name, new contents
+    val other = s"$dir/other.parquet"
+    spark.range(0, 3).toDF("id").coalesce(1).write.parquet(other)
+    def parts(p: String) = new java.io.File(p).listFiles()
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).toSeq
+    val target = parts(path).head
+    java.nio.file.Files.copy(parts(other).head.toPath, target.toPath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    // the local Hadoop filesystem would check the old file's .crc sidecar
+    new java.io.File(target.getParent, s".${target.getName}.crc").delete()
+    val expected = spark.read.parquet(path).count()
+    assert(expected != 15)
+    assert(count(s, q) == expected)
+    assert(count(s, "SELECT count(*) AS n2 FROM bm_lake") == expected)
+  }
+
+  test("bind memo: an Iceberg commit through another session is visible") {
+    val shared = scala.collection.concurrent.TrieMap.empty[FQN, TableRef]
+    val a = new GraftSession(spark, sharedCatalog = Some(shared))
+    a.attachLake("/root/testdata/sf0.001")
+    val b = new GraftSession(spark, sharedCatalog = Some(shared))
+    a.sql("CREATE OR REPLACE ICEBERG TABLE bm_ice AS SELECT n_nationkey AS k FROM nation")
+    val q = "SELECT count(*) AS n FROM bm_ice"
+    assert(count(a, q) == 25 && count(b, q) == 25)
+    assert(count(a, q) == 25 && a.lastResultReused)
+    b.sql("INSERT INTO bm_ice SELECT n_nationkey + 100 FROM nation WHERE n_nationkey < 5")
+    assert(count(a, q) == 30)
+    assert(!a.lastResultReused)
+    assert(count(a, "SELECT count(*) AS n2 FROM bm_ice") == 30)
+    a.sql("DROP TABLE bm_ice")
+  }
+
+  test("bind memo: after an incremental DT refresh a plain SELECT sees the full base") {
+    val s = newSession()
+    s.sql("CREATE OR REPLACE TABLE bm_base AS SELECT n_nationkey AS k, n_regionkey AS r FROM nation")
+    s.sql("""CREATE DYNAMIC TABLE bm_dt TARGET_LAG = '1 minute' AS
+      SELECT r, count(*) AS n FROM bm_base GROUP BY r""")
+    assert(count(s, "SELECT count(*) AS n FROM bm_base") == 25)
+    s.sql("INSERT INTO bm_base VALUES (100, 1), (101, 2)")
+    s.sql("ALTER DYNAMIC TABLE bm_dt REFRESH")
+    assert(DynamicTables.lastRefreshMode.startsWith("incremental"),
+      DynamicTables.lastRefreshMode)
+    // the refresh bound the base view to its 2-row delta and restored it
+    val f = s.qualify("bm_base")
+    assert(s.registry.boundVersion(f).map(_.ref) == s.registry.resolve(f))
+    assert(count(s, "SELECT count(*) AS n_after FROM bm_base") == 27)
+    assert(count(s, "SELECT sum(n) AS n FROM bm_dt") == 27)
+    s.sql("DROP TABLE bm_dt"); s.sql("DROP TABLE bm_base")
+  }
+
+  test("bind memo: AT/BEFORE and CHANGES views leave the base binding alone") {
+    val s = newSession()
+    s.sql("CREATE OR REPLACE TABLE bm_tt AS SELECT n_nationkey AS k FROM nation")
+    s.sql("DELETE FROM bm_tt WHERE k >= 20")
+    assert(count(s, "SELECT count(*) AS n FROM bm_tt") == 20)
+    val bound = boundPlan(s, "bm_tt").get
+    val r = s.sql("""SELECT (SELECT count(*) FROM bm_tt) AS now_n,
+      (SELECT count(*) FROM bm_tt BEFORE(STATEMENT => LAST_QUERY_ID(-2))) AS then_n""")
+      .collect()(0)
+    assert(r.getLong(0) == 20 && r.getLong(1) == 25)
+    val chg = count(s, """SELECT count(*) AS n
+      FROM bm_tt CHANGES (INFORMATION => DEFAULT)
+        BEFORE(STATEMENT => LAST_QUERY_ID(-3))""")
+    assert(chg == 5)
+    assert(boundPlan(s, "bm_tt").get eq bound)
+    assert(count(s, "SELECT count(*) AS n2 FROM bm_tt") == 20)
+    // DROP forgets the binding; a re-created table binds afresh
+    s.sql("DROP TABLE bm_tt")
+    assert(s.registry.boundVersion(s.qualify("bm_tt")).isEmpty)
+    s.sql("CREATE TABLE bm_tt AS SELECT 1 AS k")
+    assert(count(s, "SELECT count(*) AS n FROM bm_tt") == 1)
+    s.sql("DROP TABLE bm_tt")
+  }
 }

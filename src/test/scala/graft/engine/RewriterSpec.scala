@@ -10,6 +10,22 @@ class RewriterSpec extends AnyFunSuite {
     assert(rw("SELECT a::int FROM t") == "SELECT CAST(a AS INT) FROM t")
   }
 
+  test("VALUES inline tables name their columns COLUMN1..n") {
+    assert(rw("SELECT column1 FROM (VALUES (1, 'a'), (2, 'b'))") ==
+      "SELECT column1 FROM (SELECT col1 AS COLUMN1, col2 AS COLUMN2 " +
+        "FROM VALUES (1, 'a'), (2, 'b'))")
+    // unparenthesized: wrapped, so an alias binds to the projection
+    assert(rw("SELECT v.column2 FROM VALUES (1, 2) v") ==
+      "SELECT v.column2 FROM (SELECT col1 AS COLUMN1, col2 AS COLUMN2 " +
+        "FROM VALUES (1, 2)) v")
+    // an alias column list still renames positionally
+    assert(rw("SELECT k FROM (VALUES (1), (2)) AS s(k) JOIN t ON t.k = s.k") ==
+      "SELECT k FROM (SELECT col1 AS COLUMN1 FROM VALUES (1), (2)) " +
+        "AS s(k) JOIN t ON t.k = s.k")
+    // INSERT … VALUES is not an inline table
+    assert(rw("INSERT INTO t VALUES (1, 2)") == "INSERT INTO t VALUES (1, 2)")
+  }
+
   test("cast of qualified column and literal") {
     assert(rw("SELECT t.a::bigint, '1'::number(10,2) FROM t") ==
       "SELECT CAST(t.a AS BIGINT), CAST('1' AS DECIMAL(10,2)) FROM t")

@@ -697,4 +697,43 @@ class SnowflakeServerSpec extends AnyFunSuite {
       assert(resp.path("data").path("finalSchemaName").asText() == "PUBLIC")
     } finally server.stop()
   }
+
+  test("keep-alive round trips do not wait on the client's delayed ACK") {
+    val server = new SnowflakeServer(spark, None)
+    val port = server.start()
+    val sock = new java.net.Socket("127.0.0.1", port)
+    try {
+      sock.setTcpNoDelay(true) // the client sends each request in one write
+      val out = sock.getOutputStream
+      val in = new java.io.BufferedInputStream(sock.getInputStream)
+      val req = (s"POST /session/heartbeat HTTP/1.1\r\nHost: 127.0.0.1:$port\r\n" +
+        "Content-Type: application/json\r\nContent-Length: 2\r\n\r\n{}")
+        .getBytes(UTF_8)
+      def readLine(): String = {
+        val b = new StringBuilder
+        var c = in.read()
+        while (c >= 0 && c != '\n') { if (c != '\r') b += c.toChar; c = in.read() }
+        b.toString
+      }
+      def roundTripMs(): Double = {
+        val t0 = System.nanoTime()
+        out.write(req); out.flush()
+        assert(readLine().contains(" 200"))
+        var len = 0
+        var h = readLine()
+        while (h.nonEmpty) {
+          if (h.toLowerCase.startsWith("content-length:"))
+            len = h.substring(15).trim.toInt
+          h = readLine()
+        }
+        assert(in.readNBytes(len).length == len)
+        (System.nanoTime() - t0) / 1e6
+      }
+      (1 to 5).foreach(_ => roundTripMs()) // warm the handler path
+      val ms = (1 to 30).map(_ => roundTripMs()).sorted
+      // with Nagle on, each response's body segment waits ~40 ms for the
+      // ACK of its header segment
+      assert(ms(ms.length / 2) < 20.0, ms.mkString(", "))
+    } finally { sock.close(); server.stop() }
+  }
 }
