@@ -58,7 +58,8 @@ object Bench {
       // runs): re-measured round 4 with a two-JVM A/B on the h09 join —
       // lz4 wins ~12% here (min 3.10 vs 3.47/3.58 s both orders; the
       // 2.8 GB uncompressed exchange costs more in page-cache writes
-      // than lz4 costs in CPU at 32 threads). tools/ShufCompProbe.
+      // than lz4 costs in CPU at 32 threads); re-confirmed under full
+      // drain in probes/h09_serialization.json (compression off +25-40%).
       .config("spark.shuffle.compress", "true")
       .config("spark.shuffle.spill.compress", "true")
       // trust the bucket pre-sort on h09b's one-sorted-file-per-bucket

@@ -49,10 +49,10 @@ final class GraftSession(
     * Session-scoped confs (CBO for AutoStats, bucketed-scan sort trust)
     * therefore never leak into other workloads sharing the JVM — ADVICE r5
     * flagged the previous global `spark.sql.cbo.enabled` mutation, and
-    * tools/CboProbe measured a 2.7→16.6 s heavy-join regression when that
-    * conf leaked into a non-session workload. DataFrames returned by
-    * [[sql]] are bound to this clone, so their (lazy) planning sees the
-    * session confs too. */
+    * the h09 heavy join measured 2.7→16.6 s when that conf leaked into a
+    * non-session workload (IMPLEMENTATION.md, "Session-scoped confs").
+    * DataFrames returned by [[sql]] are bound to this clone, so their
+    * (lazy) planning sees the session confs too. */
   val spark: SparkSession =
     // cloneSession() is public bytecode but `private[sql]` to scalac in
     // Spark 4 (classic.SparkSession); newSession() would lose the caller's
@@ -488,14 +488,13 @@ final class GraftSession(
     // clustered) — and the result splices over the previous
     // materialization (or state sidecar, HAVING/derived shapes).
     // Groups that emptied out don't reappear, so no hidden row count
-    // is consulted. Returns false when the touched-key set exceeds the
-    // cap (the IN-plan stops paying) — callers go full.
+    // is consulted. Returns false when the touched-key set exceeds
+    // RegroupKeyCap (the IN-plan stops paying) — callers go full.
     def regroupSplice(am: DynamicTables.AggMerge, touched: DataFrame,
         deltaFiles: Seq[String], mode: String): Boolean = {
       import org.apache.spark.sql.functions.{coalesce, col, lit, not}
-      val cap = sys.props.getOrElse("graft.dt.regroupKeyCap", "100000").toInt
-      val keyRows = touched.limit(cap + 1).collect()
-      if (keyRows.length > cap) return false
+      val keyRows = touched.limit(GraftSession.RegroupKeyCap + 1).collect()
+      if (keyRows.length > GraftSession.RegroupKeyCap) return false
       val pred = am.keys.map { k =>
         val vals = keyRows.map(_.getAs[Any](k)).toSeq
         val nn = vals.filter(_ != null).distinct
@@ -3146,6 +3145,9 @@ final class GraftSession(
 object GraftSession {
   private val idSeq = new java.util.concurrent.atomic.AtomicLong(0)
   private val snapshotSeq = new java.util.concurrent.atomic.AtomicLong(0)
+  /** Most touched group keys a dynamic-table recompute-splice refreshes
+    * under a key-IN filter; past it a full refresh is cheaper. */
+  private val RegroupKeyCap = 100000
 
   /** Snowflake single-quoted string literals process backslash escapes
     * (`FIELD_DELIMITER='\t'` is ONE tab, `ESCAPE='\\'` is ONE backslash) —

@@ -56,19 +56,14 @@ object LowCardAgg extends Rule[SparkPlan] {
   private val FlushConf = "spark.graft.lowCardAgg.flushGroups"
   private val MaxNdvConf = "spark.graft.lowCardAgg.maxNdv"
   private val MaxStrConf = "spark.graft.lowCardAgg.maxStringKeys"
-  private val DirectConf = "spark.graft.lowCardAgg.direct"
-  private val ComputedConf = "spark.graft.lowCardAgg.computedInputs"
   private[plans] val ShufConf = "spark.graft.lowCardAgg.shufflePartitions"
-  /** Per-partition stderr timing breakdown (dev probes only). */
-  private[graft] val debugTiming =
-    sys.env.getOrElse("GRAFT_LOWCARD_DEBUG", "0") == "1"
 
   // ── serializable per-row accessor specs ────────────────────────────────
   /** Read one value from a batch column: `width` 8=getLong 4=getInt
     * 2=getShort 1=getByte, 0=double, -1=float, -2=string, -3=computed
-    * (idx indexes the exec's computedExprs — a deterministic double
-    * expression over scan columns, evaluated per batch through Spark's
-    * generated projection);
+    * (idx indexes the exec's computedVecs — a deterministic double
+    * expression over scan columns, evaluated per batch as a
+    * [[VecSpec]] program);
     * `floorUnit` > 0 applies FloorTimestamp's micros floor. */
   private[graft] final case class Get(idx: Int, width: Int,
       floorUnit: Long = 0L) extends Serializable
@@ -195,7 +190,6 @@ object LowCardAgg extends Rule[SparkPlan] {
     * value per column chunk. */
   private[graft] sealed abstract class StringPredAtom extends FilterAtom {
     def idx: Int
-    def dictPred: Boolean
     protected def test(s: UTF8String): Boolean
 
     @transient private var seen: Array[Boolean] = null
@@ -208,7 +202,7 @@ object LowCardAgg extends Rule[SparkPlan] {
       val noNull = !c.hasNull
       val wv = c match {
         case w: org.apache.spark.sql.execution.vectorized.WritableColumnVector
-            if dictPred && w.hasDictionary => w
+            if w.hasDictionary => w
         case _ => null
       }
       val dict = if (wv == null) null else dictOf(wv)
@@ -245,7 +239,7 @@ object LowCardAgg extends Rule[SparkPlan] {
 
   /** String predicate: kind 0 contains, 1 prefix, 2 suffix, 3 equals. */
   private[graft] final case class StrAtom(idx: Int, kind: Int,
-      needle: UTF8String, dictPred: Boolean = true) extends StringPredAtom {
+      needle: UTF8String) extends StringPredAtom {
     protected def test(s: UTF8String): Boolean =
       (kind: @annotation.switch) match {
         case 0 => s.contains(needle)
@@ -272,8 +266,7 @@ object LowCardAgg extends Rule[SparkPlan] {
     * driver-side in `decomposeFilter` (invalid regex keeps the stock
     * path so errors surface identically). */
   private[graft] final case class RegexAtom(idx: Int, pattern: String,
-      fullMatch: Boolean, negated: Boolean = false,
-      dictPred: Boolean = true) extends StringPredAtom {
+      fullMatch: Boolean, negated: Boolean = false) extends StringPredAtom {
     @transient private var m: java.util.regex.Matcher = null
     protected def test(s: UTF8String): Boolean = {
       if (m == null) m = java.util.regex.Pattern.compile(pattern).matcher("")
@@ -503,8 +496,7 @@ object LowCardAgg extends Rule[SparkPlan] {
   /** Decompose a residual predicate into vectorizable atoms; None keeps
     * the generated-Predicate path. */
   private[graft] def decomposeFilter(cond: Expression,
-      scanOutput: Seq[Attribute],
-      dictPred: Boolean = true): Option[Array[FilterAtom]] = {
+      scanOutput: Seq[Attribute]): Option[Array[FilterAtom]] = {
     import org.apache.spark.sql.catalyst.expressions._
     val colIdx = scanOutput.map(_.exprId).zipWithIndex.toMap
     def conjuncts(e: Expression): Seq[Expression] = e match {
@@ -538,7 +530,7 @@ object LowCardAgg extends Rule[SparkPlan] {
               DateType | TimestampType | TimestampNTZType) =>
             Some(CmpLongAtom(idx, longWidth(t), op, litLong(lit.value)))
           case StringType if op == 4 =>
-            Some(StrAtom(idx, 3, lit.value.asInstanceOf[UTF8String], dictPred))
+            Some(StrAtom(idx, 3, lit.value.asInstanceOf[UTF8String]))
           case _ => None
         }
       }
@@ -554,7 +546,7 @@ object LowCardAgg extends Rule[SparkPlan] {
       colIdx.get(a.exprId).flatMap { idx =>
         try {
           java.util.regex.Pattern.compile(regex)
-          Some(RegexAtom(idx, regex, fullMatch, negated, dictPred))
+          Some(RegexAtom(idx, regex, fullMatch, negated))
         } catch { case _: Exception => None }
       }
     def atomOf(e: Expression): Option[FilterAtom] = e match {
@@ -578,13 +570,13 @@ object LowCardAgg extends Rule[SparkPlan] {
         }
       case Contains(a: AttributeReference,
           Literal(s: UTF8String, StringType)) =>
-        colIdx.get(a.exprId).map(StrAtom(_, 0, s, dictPred))
+        colIdx.get(a.exprId).map(StrAtom(_, 0, s))
       case StartsWith(a: AttributeReference,
           Literal(s: UTF8String, StringType)) =>
-        colIdx.get(a.exprId).map(StrAtom(_, 1, s, dictPred))
+        colIdx.get(a.exprId).map(StrAtom(_, 1, s))
       case EndsWith(a: AttributeReference,
           Literal(s: UTF8String, StringType)) =>
-        colIdx.get(a.exprId).map(StrAtom(_, 2, s, dictPred))
+        colIdx.get(a.exprId).map(StrAtom(_, 2, s))
       // RLIKE: Spark's RLike = Pattern.compile(p).matcher(s).find(0);
       // LIKE reaching the physical plan is the non-simplifiable multi-
       // wildcard form (LikeSimplification rewrites the rest) = full
@@ -814,47 +806,28 @@ object LowCardAgg extends Rule[SparkPlan] {
     if (keySpecs.exists(_.isEmpty)) return None
 
     // computed aggregate inputs: a deterministic double EXPRESSION over
-    // scan columns (the revenue shape `sum(a*(1-b))`). Modes
-    // (spark.graft.lowCardAgg.computedInputs):
-    //   off (legacy "false") — expression inputs bail to stock;
-    //   row (legacy "true")  — per-row generated projection. MEASURED A
-    //       LOSS on the h05 global+filter shape (-25%: stock codegen
-    //       fuses the arithmetic; this pays getRow + projection per
-    //       row — probes/lowcard_agg.json addendum);
-    //   vector (DEFAULT) — column-at-a-time [[VecSpec]] program (one
-    //       monomorphic loop per node per batch, the shape that won for
-    //       the residual predicate): probes/vector_compute.json measured
-    //       the grouped revenue shape at -39% vs stock codegen and the
-    //       global+filter h05 shape at parity; expressions that don't
-    //       compile bail to stock.
-    val computedMode =
-      conf.getConfString(ComputedConf, "vector").toLowerCase match {
-        case "true" | "row" => "row"
-        case "vector" => "vector"
-        case _ => "off"
-      }
-    val computed = scala.collection.mutable.ArrayBuffer.empty[Expression]
+    // scan columns (the revenue shape `sum(a*(1-b))`) compiled to a
+    // column-at-a-time [[VecSpec]] program — one monomorphic loop per
+    // node per batch, the shape that won for the residual predicate:
+    // probes/vector_compute.json measured the grouped revenue shape at
+    // -39% vs stock codegen and the global+filter h05 shape at parity.
+    // A per-row generated projection measured a 25% LOSS on h05
+    // (probes/lowcard_agg.json addendum), so expressions that don't
+    // compile bail to stock.
     val computedVec = scala.collection.mutable.ArrayBuffer.empty[VecSpec]
     def getOrCompute(e0: Expression): Option[Get] = getOf(e0).orElse {
-      if (computedMode == "off") return None
       val e = e0.transformUp {
         case a: AttributeReference if aliasMap.contains(a.exprId.id) =>
           aliasMap(a.exprId.id)
       }
       if (e.deterministic && e.dataType == DoubleType &&
           e.references.subsetOf(
-            org.apache.spark.sql.catalyst.expressions.AttributeSet(scan.output))) {
-        if (computedMode == "vector") {
-          compileVec(e, colIdx).map { spec =>
-            computedVec += spec
-            computed += e // row-path parity for the exec's arity checks
-            Get(computed.length - 1, -3)
-          }
-        } else {
-          computed += e
-          Some(Get(computed.length - 1, -3))
+            org.apache.spark.sql.catalyst.expressions.AttributeSet(scan.output)))
+        compileVec(e, colIdx).map { spec =>
+          computedVec += spec
+          Get(computedVec.length - 1, -3)
         }
-      } else None
+      else None
     }
     // aggregates — buffer layout must match what the FINAL agg merges
     def aggOf(ae: AggregateExpression): Option[AggSpec] =
@@ -920,10 +893,8 @@ object LowCardAgg extends Rule[SparkPlan] {
     val maxStr = conf.getConfString(MaxStrConf, "2").toInt
     if (keySpecs.flatten.count(_._1.width == -2) > maxStr) return None
     val flush = conf.getConfString(FlushConf, (1 << 20).toString).toInt
-    val direct = conf.getConfString(DirectConf, "true").toBoolean
     Some(LowCardAggExec(agg.output, keySpecs.flatten, aggSpecs.flatten,
-      outCols.flatten, flush, filterCond, scan, direct, computed.toSeq,
-      computedVec.toSeq))
+      outCols.flatten, flush, filterCond, scan, computedVec.toSeq))
   }
 }
 
@@ -975,8 +946,6 @@ final case class LowCardAggExec(
     flushGroups: Int,
     filterCond: Option[Expression],
     child: SparkPlan,
-    direct: Boolean = true,
-    computedExprs: Seq[Expression] = Nil,
     computedVecs: Seq[LowCardAgg.VecSpec] = Nil) extends UnaryExecNode {
 
   import LowCardAgg._
@@ -991,7 +960,6 @@ final case class LowCardAggExec(
     val outTypes = output.map(_.dataType).toArray
     val flushCap = flushGroups
     val cond = filterCond
-    val computedExprs = this.computedExprs
     val computedVecs = this.computedVecs
     // transition + codegen rules may wrap the scan in ColumnarToRow /
     // WholeStageCodegen / InputAdapter shells below this operator —
@@ -1009,18 +977,9 @@ final case class LowCardAggExec(
     // vectorized residual predicate when every conjunct decomposes —
     // evaluated column-at-a-time into the mask instead of per-row
     // through a batch-row view (h01 profile: the row detour was ~50%
-    // of the filtered global aggregate). A/B lever + escape hatch:
-    // spark.graft.lowCardAgg.vectorFilter (default true).
+    // of the filtered global aggregate)
     val atoms: Array[FilterAtom] =
-      if (!conf.getConfString(
-          "spark.graft.lowCardAgg.vectorFilter", "true").toBoolean) null
-      else cond.flatMap(decomposeFilter(_, scanOutput,
-        conf.getConfString(
-          "spark.graft.lowCardAgg.dictPredicate", "true").toBoolean)).orNull
-    // perfect-hash over per-batch dictionary codes for string keys —
-    // A/B lever + escape hatch (probes/dict_combo.json)
-    val dictCombo = conf.getConfString(
-      "spark.graft.lowCardAgg.dictCombo", "true").toBoolean
+      cond.flatMap(decomposeFilter(_, scanOutput)).orNull
     columnar.executeColumnar().mapPartitionsWithIndex { (pi, batches) =>
       // fallback: the scan's residual predicate via Spark's own
       // generated Predicate over reused batch-row views
@@ -1032,22 +991,8 @@ final case class LowCardAggExec(
           p.initialize(pi)
           p
         }.orNull
-      // computed inputs: vector programs when compiled, else the
-      // generated row projection
-      val vecComp: Array[VecNode] =
-        if (computedVecs.nonEmpty) computedVecs.map(new VecNode(_)).toArray
-        else null
-      val compProj =
-        if (computedExprs.isEmpty || vecComp != null) null
-        else {
-          val p = org.apache.spark.sql.catalyst.expressions.MutableProjection
-            .create(computedExprs, scanOutput)
-          p.initialize(pi)
-          p
-        }
       new LowCardAggIterator(batches, keys, aggs, outs, outTypes, flushCap,
-        pred, direct, compProj, computedExprs.length, atoms, vecComp,
-        dictCombo)
+        pred, atoms, computedVecs.map(new VecNode(_)).toArray)
     }
   }
 }
@@ -1062,17 +1007,14 @@ private[graft] final class LowCardAggIterator(
     outTypes: Array[DataType],
     flushCap: Int,
     pred: org.apache.spark.sql.catalyst.expressions.BasePredicate = null,
-    directConf: Boolean = true,
-    compProj: org.apache.spark.sql.catalyst.expressions.MutableProjection = null,
-    nComp: Int = 0,
     atoms: Array[LowCardAgg.FilterAtom] = null,
-    vecComp: Array[LowCardAgg.VecNode] = null,
-    dictCombo: Boolean = true)
+    vecComp: Array[LowCardAgg.VecNode] = Array.empty)
     extends Iterator[InternalRow] {
 
   import LowCardAgg._
 
   private val nKeys = keys.length
+  private val nComp = vecComp.length
   private val proj = UnsafeProjection.create(outTypes)
   private val scratch = new GenericInternalRow(outTypes.length)
 
@@ -1218,7 +1160,7 @@ private[graft] final class LowCardAggIterator(
   // hash table, so a key outside [0, cap) just disables the shortcut
   // and the generic probe continues seamlessly.
   private val DirectCap = 1 << 21
-  private var directEnabled = directConf &&
+  private var directEnabled =
     nKeys == 1 && keys(0)._1.width > 0 && keys(0)._1.floorUnit == 0L
   private var direct: Array[Int] = null
   private var directLen = 0
@@ -1505,20 +1447,10 @@ private[graft] final class LowCardAggIterator(
     g
   }
 
-  private var tExtract = 0L
-  private var tHash = 0L
-  private var tProbe = 0L
-  private var tAgg = 0L
-
   private def processBatch(b: ColumnarBatch): Unit = {
     val n = b.numRows()
     ensureTmp(n)
     curBatch = b
-    val dbg = LowCardAgg.debugTiming
-    var tMark = if (dbg) System.nanoTime() else 0L
-    def mark(acc: Long): Long = if (dbg) {
-      val now = System.nanoTime(); val d = now - tMark; tMark = now; acc + d
-    } else acc
     // residual-filter selection mask: vectorized atoms when the
     // predicate decomposed (column-at-a-time, no row views), else the
     // generated Predicate over reused batch-row views
@@ -1531,35 +1463,15 @@ private[graft] final class LowCardAggIterator(
       var i = 0
       while (i < n) { sl(i) = pred.eval(b.getRow(i)); i += 1 }
     }
-    if (nComp > 0) {
-      if (vecComp != null) {
-        // column-at-a-time programs: branchless full-batch evaluation,
-        // buffers swapped in by reference (filtered-out slots hold
-        // valid-but-unread doubles)
-        var c = 0
-        while (c < nComp) {
-          val nd = vecComp(c)
-          nd.ensure(n); nd.eval(b, n)
-          compV(c) = nd.out; compN(c) = nd.nulls
-          c += 1
-        }
-      } else {
-        // one generated-projection pass materializes every computed input
-        // (rows the filter drops are skipped; their slots are never read)
-        var i = 0
-        while (i < n) {
-          if (!hasFilter || sl(i)) {
-            val r = compProj(b.getRow(i))
-            var c = 0
-            while (c < nComp) {
-              if (r.isNullAt(c)) compN(c)(i) = true
-              else { compN(c)(i) = false; compV(c)(i) = r.getDouble(c) }
-              c += 1
-            }
-          }
-          i += 1
-        }
-      }
+    // computed inputs — column-at-a-time programs: branchless
+    // full-batch evaluation, buffers swapped in by reference
+    // (filtered-out slots hold valid-but-unread doubles)
+    var c = 0
+    while (c < nComp) {
+      val nd = vecComp(c)
+      nd.ensure(n); nd.eval(b, n)
+      compV(c) = nd.out; compN(c) = nd.nulls
+      c += 1
     }
     // grouping-free (global) aggregate: one group, no key passes — the
     // h01/h05 shape; the whole batch maps to group 0 modulo the filter
@@ -1569,9 +1481,7 @@ private[graft] final class LowCardAggIterator(
       var i = 0
       if (hasFilter) while (i < n) { ids(i) = if (sl(i)) 0 else -1; i += 1 }
       else while (i < n) { ids(i) = 0; i += 1 }
-      tProbe = mark(tProbe)
       runAggPass(b, n)
-      tAgg = mark(tAgg)
       return
     }
     // pass 1a: key materialization + hashing. Loop state lives in LOCAL
@@ -1580,12 +1490,11 @@ private[graft] final class LowCardAggIterator(
     // fields measured 3× slower than the hand-inlined loop.
     var k = 0
     while (k < nKeys) { extractKey(b, k, n); k += 1 }
-    tExtract = mark(tExtract)
     // dictionary-code combo path: every key of THIS batch id-encoded →
     // (code0[, code1]) is a perfect within-batch key; one array load
     // replaces hash + probe per row, with the generic probe paid once
     // per distinct code combo per batch (and for NULL-key rows)
-    if (dictCombo && nKeys <= 2 && batchDict(0) &&
+    if (nKeys <= 2 && batchDict(0) &&
         (nKeys == 1 || batchDict(1)) && {
           val s1 = if (nKeys == 2) batchDictMax(1) + 1 else 1
           (batchDictMax(0).toLong + 1) * s1 <= (1 << 22)
@@ -1599,7 +1508,6 @@ private[graft] final class LowCardAggIterator(
       val id0 = tmpId(0); val id1 = if (two) tmpId(1) else null
       val n0 = tmpN(0); val n1 = if (two) tmpN(1) else null
       val ids = gids
-      tHash = mark(tHash) // hash pass skipped entirely
       var i = 0
       while (i < n) {
         if (hasFilter && !sl(i)) ids(i) = -1
@@ -1615,9 +1523,7 @@ private[graft] final class LowCardAggIterator(
         }
         i += 1
       }
-      tProbe = mark(tProbe)
       runAggPass(b, n)
-      tAgg = mark(tAgg)
       return
     }
     val hsh = rowHash
@@ -1644,7 +1550,6 @@ private[graft] final class LowCardAggIterator(
       }
       k += 1
     }
-    tHash = mark(tHash)
     // pass 1b: probe/insert, filling gids. One- and two-key shapes
     // compare inline from hoisted locals (packed strings compare as
     // (prefix, len) longs; a varlen side mismatches on len and falls to
@@ -1735,9 +1640,7 @@ private[graft] final class LowCardAggIterator(
       }
       }
     }
-    tProbe = mark(tProbe)
     runAggPass(b, n)
-    tAgg = mark(tAgg)
   }
 
   /** Pass 2: one tight loop per aggregate over (gids, source vector),
@@ -1994,24 +1897,7 @@ private[graft] final class LowCardAggIterator(
   private def fill(): Unit = {
     // accumulate until the input is exhausted or the cap is reached;
     // then drain the current groups (partial rows merge downstream)
-    if (LowCardAgg.debugTiming) {
-      var tNext = 0L; var tProc = 0L; var rows = 0L; var nb = 0L
-      while (batches.hasNext && nGroups < flushCap) {
-        val t0 = System.nanoTime()
-        val b = batches.next()
-        val t1 = System.nanoTime()
-        rows += b.numRows(); nb += 1
-        processBatch(b)
-        tNext += t1 - t0; tProc += System.nanoTime() - t1
-      }
-      System.err.println(f"LOWCARD part: rows=$rows batches=$nb " +
-        f"next=${tNext / 1e9}%.3f " +
-        f"proc=${tProc / 1e9}%.3f groups=$nGroups " +
-        f"ext=${tExtract / 1e9}%.3f hash=${tHash / 1e9}%.3f " +
-        f"probe=${tProbe / 1e9}%.3f agg=${tAgg / 1e9}%.3f")
-    } else {
-      while (batches.hasNext && nGroups < flushCap) processBatch(batches.next())
-    }
+    while (batches.hasNext && nGroups < flushCap) processBatch(batches.next())
     draining = true
     emitG = 0
     emitN = nGroups

@@ -65,14 +65,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => TruncToFloor)
     ext.injectOptimizerRule(_ => PartitionFilterMirror)
     ext.injectOptimizerRule(_ => BoundsFilePrune)
-    ext.injectOptimizerRule(_ => EagerProjection)
     ext.injectOptimizerRule(_ => EagerAggregation)
     // integral COUNT(DISTINCT) → mergeable bitmap aggregate (off by
     // default; NDV-stats-gated in auto mode — see DistinctToBitmap)
     ext.injectOptimizerRule(_ => DistinctToBitmap)
-    // physical: bypass near-useless partial aggregation (off by default;
-    // stats-gated in auto mode — see SkipPartialAggregation)
-    ext.injectQueryStagePrepRule(_ => SkipPartialAggregation)
     // physical: columnar low-cardinality partial aggregation (see
     // LowCardAgg — off by default, NDV-stats-gated in auto mode), then
     // the exchange shrink for its group-count-sized partial output

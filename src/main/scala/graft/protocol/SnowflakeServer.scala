@@ -92,11 +92,16 @@ final class SnowflakeServer(spark: SparkSession, lakeDir: Option[String],
   // the server-minted query id — keep the translation
   private val requestToQuery =
     scala.collection.concurrent.TrieMap.empty[String, String]
-  /** Executor for asyncExec statements (daemon threads: an abandoned
-    * async query must not pin a main()-driven JVM open). */
-  private lazy val asyncPool = java.util.concurrent.Executors
-    .newFixedThreadPool(4, (r: Runnable) => {
-      val t = new Thread(r, "graft-wire-async")
+  /** One executor serves every HTTP exchange and every asyncExec
+    * statement. It is cached (unbounded): a synchronous query-request
+    * holds its thread for the whole collect, and one token's statements
+    * queue on the session lock, so a fixed pool would let a few long
+    * statements starve every other request — another session's
+    * abort-request and heartbeat included. Daemon threads: an abandoned
+    * async query must not pin a main()-driven JVM open. */
+  private val pool = java.util.concurrent.Executors
+    .newCachedThreadPool((r: Runnable) => {
+      val t = new Thread(r, "graft-wire")
       t.setDaemon(true)
       t
     })
@@ -168,20 +173,14 @@ final class SnowflakeServer(spark: SparkSession, lakeDir: Option[String],
         try os.write(bytes) finally os.close()
       } finally ex.close()
     })
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+    server.setExecutor(pool)
     server.start()
     server.getAddress.getPort
   }
 
   def stop(): Unit = if (server != null) {
     server.stop(0)
-    // the handler pool's threads are non-daemon; without shutdown they
-    // keep a main()-driven JVM (graft.VerifyProtocol) alive after stop
-    server.getExecutor match {
-      case es: java.util.concurrent.ExecutorService => es.shutdown()
-      case _ =>
-    }
-    asyncPool.shutdown()
+    pool.shutdown()
     // spilled chunk files die with the server
     queries.keys.foreach(dropQuery)
     try java.nio.file.Files.deleteIfExists(chunkDir)
@@ -331,7 +330,7 @@ final class SnowflakeServer(spark: SparkSession, lakeDir: Option[String],
       // polls /monitoring/queries/{id} and fetches
       // GET /queries/{id}/result when SUCCESS. Job-group keyed like the
       // sync path, so abort-request cancels async queries too.
-      asyncPool.submit(new Runnable {
+      pool.submit(new Runnable {
         override def run(): Unit =
           try runTracked(session, state)
           catch { case NonFatal(_) => () } // outcome recorded on state

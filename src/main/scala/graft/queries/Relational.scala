@@ -626,10 +626,10 @@ object Relational extends QueryPack {
     },
 
     // ── LowCardAgg vector-wave gates (round-11 directive #6) ─────────────
-    // The vectorFilter / dictCombo / computedInputs paths are default-on
-    // in every GraftSession but rode only the (untimed-compare) h-queries;
-    // these three gates FORCE the operator in a cloned session so the
-    // DuckDB oracle catches a vector regression. Aggregate inputs are
+    // The vector-filter / dictionary-combo / computed-input paths are on
+    // whenever the operator fires but rode only the (untimed-compare)
+    // h-queries; these gates FORCE the operator in a cloned session so
+    // the DuckDB oracle catches a vector regression. Aggregate inputs are
     // integral-valued doubles (l_quantity ≤ 50, l_linenumber ≤ 7), so
     // sums are exactly representable and the hash compare is
     // order-insensitive. Fire-assertions for the same shapes live in
@@ -663,7 +663,8 @@ object Relational extends QueryPack {
       WHERE l_quantity > 45 OR l_discount < 0.02
       GROUP BY 1, 2 ORDER BY 1, 2""")) { (s, dir) =>
       // OR condition: non-decomposable → the generated-Predicate fallback
-      // inside the operator; two dict-encoded string keys → dictCombo
+      // inside the operator; two dict-encoded string keys → the
+      // dictionary-code combo path
       val f = forcedVector(s)
       Tables.load(f, dir, "lineitem")
         .filter(col("l_quantity") > 45 || col("l_discount") < 0.02)
@@ -704,8 +705,9 @@ object Relational extends QueryPack {
       // are low-NDV (parquet dictionary-backs them → once-per-code
       // verdicts, the expensive-atom shape the cache was built for;
       // probes/dict_regex.json); text is high-NDV so NOT RLIKE there
-      // pins the per-row Matcher path in the same plan.
-      // Fire-assertions live in LowCardAggSpec and tools/GateFireChk.
+      // pins the per-row Matcher path in the same plan. Fire-assertions
+      // live in LowCardAggSpec; that this gate fires is recorded in
+      // probes/dict_regex.json.
       val f = forcedVector(s)
       Tables.load(f, dir, "documents")
         .filter(col("lang").rlike("^(en|de|f)") &&
@@ -718,15 +720,13 @@ object Relational extends QueryPack {
     }
   )
 
-  /** Cloned session with the LowCardAgg vector paths FORCED — the gate
-    * session defaults them off/auto; extensions re-inject on newSession
-    * (same `spark.sql.extensions` static conf). */
+  /** Cloned session with LowCardAgg FORCED (the operator's vector paths
+    * are always on once it fires) — the gate session defaults it to
+    * auto; extensions re-inject on newSession (same
+    * `spark.sql.extensions` static conf). */
   private def forcedVector(s: SparkSession): SparkSession = {
     val f = s.newSession()
     f.conf.set("spark.graft.lowCardAgg", "force")
-    f.conf.set("spark.graft.lowCardAgg.computedInputs", "vector")
-    f.conf.set("spark.graft.lowCardAgg.vectorFilter", "true")
-    f.conf.set("spark.graft.lowCardAgg.dictCombo", "true")
     f
   }
 }

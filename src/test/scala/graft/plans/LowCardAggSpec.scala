@@ -241,10 +241,41 @@ class LowCardAggSpec extends AnyFunSuite {
       .groupBy("kint").agg(count(lit(1)).as("n"), max(col("vd")).as("m")))
   }
 
-  test("regex atoms: dictPredicate off pins the per-row regex path") {
-    assertSame(t.filter(col("klongstr").rlike("a_long.*_[0-5]$"))
-      .groupBy("kshort").agg(count(lit(1)).as("n"), avg(col("vd")).as("a")),
-      extra = Map("spark.graft.lowCardAgg.dictPredicate" -> "false"))
+  /** True when any parquet file under `dir` stores a dictionary-encoded
+    * page for `column`. */
+  private def hasDictPages(dir: String, column: String): Boolean = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+      .exists { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.getPath), conf))
+        try r.getFooter.getBlocks.asScala.exists(_.getColumns.asScala.exists(
+          c => c.getPath.toDotString == column && (c.hasDictionaryPage ||
+            Option(c.getEncodingStats).exists(_.hasDictionaryEncodedPages))))
+        finally r.close()
+      }
+  }
+
+  test("regex atoms: an un-dictionaried high-NDV column takes the per-row path") {
+    // every value distinct (gate q37's `text` shape): parquet's
+    // dictionary does not pay, so the writer stores plain pages and the
+    // RegexAtom runs its per-row Matcher instead of per-code verdicts
+    val dir = java.nio.file.Files.createTempDirectory("graft_lc_hndv").toString
+    spark.range(0, 20000).select(
+      (col("id") % 5).cast("int").as("k"),
+      when(col("id") % 29 === 0, lit(null)).otherwise(
+        concat(lit("doc "), col("id").cast("string"), lit(" "),
+          sha2(col("id").cast("string"), 256))).as("txt"),
+      (col("id") % 1000).cast("double").as("v"))
+      .repartition(3).write.mode("overwrite").parquet(dir)
+    assert(!hasDictPages(dir, "txt"), "fixture column came out dictionaried")
+    val hn = spark.read.parquet(dir)
+    assertSame(hn.filter(col("txt").rlike("[0-9]{4,}") &&
+        !col("txt").like("%a%b%"))
+      .groupBy("k").agg(count(lit(1)).as("n"), avg(col("v")).as("a")))
   }
 
   test("decomposeFilter lowers RLIKE/LIKE (and NOT forms) to RegexAtom") {
@@ -291,72 +322,49 @@ class LowCardAggSpec extends AnyFunSuite {
     }.toDF("k", "v").repartition(3).write.mode("overwrite").parquet(dir)
     val nd = spark.read.parquet(dir)
     assertSame(nd.groupBy("k").agg(count(lit(1)).as("n"), sum(col("v")).as("s")))
-    // and the lever off pins the generic probe path
-    assertSame(nd.groupBy("k").agg(count(lit(1)).as("n")),
-      extra = Map("spark.graft.lowCardAgg.direct" -> "false"))
-  }
-
-  test("expression aggregate inputs: opt-in computed-column path") {
-    // probed a LOSS on the h05 shape (stock codegen fuses the
-    // arithmetic) — off by default, correctness pinned under the lever
-    val on = Map("spark.graft.lowCardAgg.computedInputs" -> "true")
-    assertSame(t.groupBy("kint").agg(
-      sum(col("vd") * (lit(1.0) - col("vf"))).as("rev"),
-      avg(col("vd") + col("vl")).as("a"),
-      count(lit(1)).as("n")), extra = on)
-    // global + filter + NULL-propagating expression (vd or vl NULL)
-    assertSame(t.filter(col("kint") =!= 2).agg(
-      sum(col("vd") * col("vl")).as("s"), count(lit(1)).as("n")), extra = on)
-    // mode off: expression inputs bail to stock (default is now vector)
-    assertSame(t.groupBy("kint").agg(
-      sum(col("vd") * col("vl")).as("s")),
-      extra = Map("spark.graft.lowCardAgg.computedInputs" -> "off"),
-      expectFire = false)
   }
 
   test("expression aggregate inputs: vectorized computed-column path") {
-    val on = Map("spark.graft.lowCardAgg.computedInputs" -> "vector")
     // the revenue shape + mixed-width operands (double, float, long)
     assertSame(t.groupBy("kint").agg(
       sum(col("vd") * (lit(1.0) - col("vf"))).as("rev"),
       avg(col("vd") + col("vl")).as("a"),
-      count(lit(1)).as("n")), extra = on)
+      count(lit(1)).as("n")))
     // global + filter + NULL-propagating expression (vd or vl NULL)
     assertSame(t.filter(col("kint") =!= 2).agg(
-      sum(col("vd") * col("vl")).as("s"), count(lit(1)).as("n")), extra = on)
+      sum(col("vd") * col("vl")).as("s"), count(lit(1)).as("n")))
     // nested arithmetic + subtraction ordering
     assertSame(t.groupBy("kshort").agg(
       sum((col("vd") - col("vl")) * (col("vf") + lit(2.5))).as("x"),
-      avg(col("vd") + col("vd")).as("a2")), extra = on)
+      avg(col("vd") + col("vd")).as("a2")))
     // a shape the compiler rejects (division: ANSI error-on-zero
     // semantics) bails to stock rather than mis-evaluating
     assertSame(t.groupBy("kint").agg(
       sum(col("vd") / (col("vl") + lit(1))).as("s")),
-      extra = on, expectFire = false)
+      expectFire = false)
   }
 
   test("vector computed inputs: narrowing casts / integral math bail") {
-    val on = Map("spark.graft.lowCardAgg.computedInputs" -> "vector")
     // narrowing cast double→int truncates in Spark; a read-as-double
     // no-op would return wrong sums — must bail to stock
     assertSame(t.groupBy("kint").agg(
       sum(col("vd").cast("int").cast("double")).as("s")),
-      extra = on, expectFire = false)
+      expectFire = false)
     // int→float rounds to float precision (values past 2^24) — a
     // keep-double no-op diverges, must bail
     assertSame(t.filter(col("rid") > 16777).groupBy("kint").agg(
       sum((col("rid") * lit(1001L)).cast("int").cast("float")
         .cast("double")).as("s")),
-      extra = on, expectFire = false)
+      expectFire = false)
     // integral-typed arithmetic under a widening cast uses wrapping
     // long semantics (exact beyond 2^53) — must bail
     assertSame(t.groupBy("kint").agg(
       sum((col("vl") * col("rid") * col("rid")).cast("double")).as("s")),
-      extra = on, expectFire = false)
+      expectFire = false)
     // but genuinely widening shapes still compile and fire
     assertSame(t.groupBy("kint").agg(
       sum(col("vl").cast("double") * col("vd")).as("s"),
-      avg(col("vf").cast("double") + col("vd")).as("a")), extra = on)
+      avg(col("vf").cast("double") + col("vd")).as("a")))
   }
 
   test("grouping-free (global) aggregates fire: plain, filtered, empty") {

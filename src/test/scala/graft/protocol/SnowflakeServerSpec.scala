@@ -190,37 +190,62 @@ class SnowflakeServerSpec extends AnyFunSuite {
   test("abort-request cancels a long query mid-flight; session stays usable") {
     val server = new SnowflakeServer(spark, Some("/root/testdata/sf0.001"))
     val port = server.start()
+    // the clients' own threads: the global ExecutionContext has only as
+    // many threads as cores, fewer than the requests in flight here
+    val clients = java.util.concurrent.Executors.newFixedThreadPool(8)
     try {
-      val token = post(port, "/session/v1/login-request", "{}")
+      def login() = post(port, "/session/v1/login-request", "{}")
         .path("data").path("token").asText()
+      val tokens = (1 to 4).map(_ => login())
+      val idle = login()
       // ~9e10-row cross join — minutes of work if not cancelled
       val longSql =
         """SELECT max(a.s * b.s) AS m FROM
            (SELECT seq4() AS s FROM TABLE(GENERATOR(ROWCOUNT => 300000))) a,
            (SELECT seq4() AS s FROM TABLE(GENERATOR(ROWCOUNT => 300000))) b"""
-      val requestId = java.util.UUID.randomUUID().toString
-      import scala.concurrent.{Await, Future}
+      val requestIds = tokens.map(_ => java.util.UUID.randomUUID().toString)
+      import scala.concurrent.{Await, ExecutionContext, Future}
       import scala.concurrent.duration._
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val pending = Future(post(port,
-        s"/queries/v1/query-request?requestId=$requestId",
-        mapper.createObjectNode().put("sqlText", longSql).toString,
-        token = Some(token)))
-      Thread.sleep(2000) // let the collect start
-      val t0 = System.nanoTime()
-      val ab = post(port, "/queries/v1/abort-request",
-        s"""{"requestId":"$requestId"}""", token = Some(token))
-      assert(ab.path("success").asBoolean(), ab.toString)
-      val resp = Await.result(pending, 60.seconds)
-      val cancelSec = (System.nanoTime() - t0) / 1e9
-      assert(!resp.path("success").asBoolean(), resp.toString)
-      assert(cancelSec < 30, s"cancel took ${cancelSec}s")
-      // the session is not poisoned: the next statement runs fine
+      implicit val ec: ExecutionContext =
+        ExecutionContext.fromExecutorService(clients)
+      def abort(i: Int) = post(port, "/queries/v1/abort-request",
+        s"""{"requestId":"${requestIds(i)}"}""", token = Some(tokens(i)))
+      // one long synchronous statement per session: each holds an HTTP
+      // thread for its whole collect
+      val pending = tokens.indices.map { i =>
+        Future(post(port,
+          s"/queries/v1/query-request?requestId=${requestIds(i)}",
+          mapper.createObjectNode().put("sqlText", longSql).toString,
+          token = Some(tokens(i))))
+      }
+      try {
+        Thread.sleep(2000) // let the collects start
+        // a fifth session is not queued behind them
+        val hb = Await.result(Future(post(port, "/session/heartbeat", "{}",
+          token = Some(idle))), 5.seconds)
+        assert(hb.path("success").asBoolean(), hb.toString)
+        val t0 = System.nanoTime()
+        val ab = Await.result(Future(abort(0)), 5.seconds)
+        assert(ab.path("success").asBoolean(), ab.toString)
+        val resp = Await.result(pending.head, 60.seconds)
+        val cancelSec = (System.nanoTime() - t0) / 1e9
+        assert(!resp.path("success").asBoolean(), resp.toString)
+        assert(cancelSec < 30, s"cancel took ${cancelSec}s")
+      } finally {
+        val aborts = tokens.indices.tail.map(i => Future(abort(i)))
+        val done = scala.util.Try(
+          Await.result(Future.sequence(pending ++ aborts), 60.seconds))
+        // a starved server never serves the aborts: cancel directly so
+        // the suite does not wait out three cross joins
+        if (done.isFailure) spark.sparkContext.cancelAllJobs()
+      }
+      // the session is not poisoned: once the other cross joins (which
+      // hold every core) are gone, its next statement runs fine
       val after = post(port, "/queries/v1/query-request",
         """{"sqlText":"SELECT count(*) AS n FROM orders"}""",
-        token = Some(token))
+        token = Some(tokens.head))
       assert(after.path("success").asBoolean(), after.toString)
-    } finally server.stop()
+    } finally { server.stop(); clients.shutdownNow() }
   }
 
   test("monitoring endpoint serves status by query id") {
