@@ -73,8 +73,4 @@ object Tables {
     val df = spark.read.schema(schema).parquet(path)
     if (name == "events") normalizeEventsTs(df) else df
   }
-
-  /** Register every testdata table as a temp view for SQL-path queries. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

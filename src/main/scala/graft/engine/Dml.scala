@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.DataFrame
+import SqlTokens._
 
 /** UPDATE / DELETE / MERGE over parquet-backed managed tables.
   *
@@ -35,8 +36,9 @@ object Dml {
 
   private val deleteRe =
     "(?is)^DELETE\\s+FROM\\s+([\\w$\".]+)(?:\\s+WHERE\\s+(.*))?$".r
-  // SET/WHERE split happens paren-aware in execute(): a regex split at
-  // the first WHERE would cut inside a SET subquery's own WHERE clause
+  // SET/WHERE split happens on tokens in execute(): a regex split at the
+  // first WHERE would cut inside a SET subquery's own WHERE clause, or at
+  // a WHERE inside a comment or a string
   private val updateRe =
     "(?is)^UPDATE\\s+([\\w$\".]+)\\s+SET\\s+(.*)$".r
   private val mergeRe =
@@ -60,13 +62,13 @@ object Dml {
       stmt.trim match {
         case deleteRe(name, where) => doDelete(session, name, Option(where))
         case updateRe(name, rest) =>
-          val wIdx = topLevelKeyword(rest, "WHERE")
+          val toks = lex(rest)
+          val w = topKeyword(toks, "WHERE")
           val (sets, where) =
-            if (wIdx < 0) (rest, None)
-            else (rest.substring(0, wIdx), Some(rest.substring(wIdx + 5)))
+            if (w < 0) (toks, None) else (toks.take(w), Some(text(toks.drop(w + 1))))
           doUpdate(session, name, sets, where)
         case mergeRe(name, alias, rest) =>
-          doMerge(session, name, Option(alias), rest)
+          doMerge(session, name, Option(alias), lex(rest))
         case other =>
           throw new IllegalArgumentException(s"cannot parse DML: $other")
       }
@@ -206,7 +208,7 @@ object Dml {
   }
 
   // ── UPDATE ─────────────────────────────────────────────────────────────
-  private def doUpdate(s: GraftSession, rawName: String, sets: String,
+  private def doUpdate(s: GraftSession, rawName: String, sets: Vector[Tok],
       where: Option[String]): DataFrame = {
     val (f, ref) = managedTarget(s, rawName)
     // captured before the commit: the (before, after) file-set pair is
@@ -278,31 +280,32 @@ object Dml {
 
   /** `a = e1, b = e2` split at top level; keys normalized upper-case and
     * checked against the target schema. */
-  private def parseAssignments(sets: String,
+  private def parseAssignments(sets: Vector[Tok],
       fields: Set[String]): Map[String, String] = {
     val upper = fields.map(_.toUpperCase)
-    splitTop(sets, ',').map { a =>
-      val eq = topLevelIndexOf(a, '=')
-      require(eq > 0, s"bad assignment: $a")
-      val colRaw = a.substring(0, eq).trim
-      // allow alias-qualified targets (t.col) as Snowflake does
-      val col = Identifiers.normalizePart(
-        colRaw.substring(colRaw.lastIndexOf('.') + 1))
-      require(upper.contains(col), s"unknown column in SET: $colRaw")
-      col -> a.substring(eq + 1).trim
+    splitTop(sets, 0, sets.length)(_ == Op(",")).map { case (a, b) =>
+      val eq = indexTop(sets, a)(_ == Op("="))
+      // the column is the last token before `=`: alias-qualified targets
+      // (t.col) are allowed, as Snowflake does
+      val colTok = if (eq < 0 || eq >= b) None else prevSig(sets, eq).filter(_ >= a)
+      require(colTok.isDefined, s"bad assignment: ${text(sets.slice(a, b))}")
+      val col = Identifiers.normalizePart(sets(colTok.get).text)
+      require(upper.contains(col), s"unknown column in SET: ${text(sets.slice(a, eq))}")
+      col -> text(sets.slice(eq + 1, b))
     }.toMap
   }
 
   // ── MERGE ──────────────────────────────────────────────────────────────
+  /** `kind` is the action's first word: UPDATE, DELETE or INSERT. */
   private final case class WhenClause(matched: Boolean, cond: Option[String],
-      action: String)
+      kind: String, action: Vector[Tok])
 
   /** `MERGE INTO t [alias] USING src [alias] ON cond WHEN …` compiled to a
     * single SELECT: survivors + updates via LEFT JOIN on a marked source,
     * inserts via the source's LEFT ANTI JOIN, UNION ALL. One distributed
     * job; Catalyst broadcasts the small side and AQE handles skew. */
   private def doMerge(s: GraftSession, rawName: String,
-      tAliasOpt: Option[String], rest: String): DataFrame = {
+      tAliasOpt: Option[String], rest: Vector[Tok]): DataFrame = {
     val (f, ref) = managedTarget(s, rawName)
     // merge-inserted rows land mixed into the rewritten files — the
     // append-only insert log cannot describe them; clear it so streams
@@ -313,16 +316,14 @@ object Dml {
     val tAlias = tAliasOpt.getOrElse(f.table)
 
     // split `src ON cond WHEN … WHEN …` at the top-level ON / WHEN keywords
-    val onIdx = topLevelKeyword(rest, "ON")
+    val onIdx = topKeyword(rest, "ON")
     require(onIdx >= 0, "MERGE requires ON")
-    val srcSpec = rest.substring(0, onIdx).trim
-    val afterOn = rest.substring(onIdx + 2)
-    val whenIdx = topLevelKeyword(afterOn, "WHEN")
+    val whenIdx = indexTop(rest, onIdx + 1)(outsideCase("WHEN"))
     require(whenIdx >= 0, "MERGE requires at least one WHEN clause")
-    val onCond = afterOn.substring(0, whenIdx).trim
-    val clauses = parseWhenClauses(afterOn.substring(whenIdx))
+    val onCond = text(rest.slice(onIdx + 1, whenIdx))
+    val clauses = parseWhenClauses(rest.drop(whenIdx))
 
-    val (srcBody, sAlias) = parseSource(srcSpec)
+    val (srcBody, sAlias) = parseSource(rest.take(onIdx))
     val marked =
       s"(SELECT __graft_src.*, TRUE AS __graft_m FROM $srcBody __graft_src) ${q(sAlias)}"
     val matchedFlag = s"COALESCE(${q(sAlias)}.__graft_m, FALSE)"
@@ -330,13 +331,13 @@ object Dml {
     def withCond(c: WhenClause) =
       matchedFlag + c.cond.map(x => s" AND ($x)").getOrElse("")
 
-    val updates = clauses.filter(c => c.matched && c.action != "DELETE")
-    val deletes = clauses.filter(c => c.matched && c.action == "DELETE")
+    val updates = clauses.filter(c => c.matched && c.kind != "DELETE")
+    val deletes = clauses.filter(c => c.matched && c.kind == "DELETE")
     val inserts = clauses.filterNot(_.matched)
 
     val proj = schema.fields.map { fd =>
       val arms = updates.flatMap { u =>
-        parseAssignments(u.action.replaceAll("(?is)^UPDATE\\s+SET\\s+", ""),
+        parseAssignments(u.action.drop(topKeyword(u.action, "SET") + 1),
           schema.fieldNames.toSet).get(fd.name.toUpperCase)
           .map(e => s"WHEN ${withCond(u)} THEN CAST(($e) AS ${fd.dataType.sql})")
       }
@@ -433,69 +434,98 @@ object Dml {
   /** Source is `(subquery) [AS] alias[(c1, …)]` or `table [AS] alias`.
     * An alias column list renames the subquery's columns positionally
     * (`USING (VALUES …) AS s(k, v)`). */
-  private def parseSource(spec: String): (String, String) = {
-    val t = spec.trim
-    if (t.startsWith("(")) {
-      val close = matchingParen(t, 0)
-      val body = t.substring(0, close + 1)
-      val alias = t.substring(close + 1).trim
-        .replaceAll("(?i)^AS\\s+", "").trim
-      require(alias.nonEmpty, "MERGE subquery source needs an alias")
-      val open = alias.indexOf('(')
-      if (open > 0 && alias.endsWith(")"))
-        (s"(SELECT * FROM $body AS __graft_cols${alias.substring(open)})",
-          alias.substring(0, open).trim)
-      else (body, alias)
-    } else {
-      val parts = t.split("\\s+")
-      val name = parts(0)
-      val alias =
-        if (parts.length > 1) parts.last else name.substring(name.lastIndexOf('.') + 1)
-      (name, alias)
+  private def parseSource(src: Vector[Tok]): (String, String) = {
+    val start = nextSig(src, -1).getOrElse(
+      throw new IllegalArgumentException("MERGE requires a USING source"))
+    // the body, and the significant tokens after it ([AS] alias)
+    val (body, rest) =
+      if (src(start) == Op("(")) {
+        val close = matchParen(src, start)
+        (text(src.slice(start, close + 1)), close + 1)
+      } else {
+        val end = src.indexWhere(!isSig(_), start)
+        if (end < 0) (text(src.drop(start)), src.length)
+        else (text(src.slice(start, end)), end)
+      }
+    val words = significant(src).filter(_ >= rest)
+    val aliasAt = words.filterNot(j => isKw(src(j), "AS")).headOption
+    if (src(start) == Op("(")) {
+      val a = aliasAt.getOrElse(
+        throw new IllegalArgumentException("MERGE subquery source needs an alias"))
+      parenAfter(src, a) match {
+        case Some(open) =>
+          val cols = text(src.slice(open, matchParen(src, open) + 1))
+          (s"(SELECT * FROM $body AS __graft_cols$cols)", src(a).text)
+        case None => (body, src(a).text)
+      }
+    } else
+      (body, words.lastOption.map(src(_).text)
+        .getOrElse(body.substring(body.lastIndexOf('.') + 1)))
+  }
+
+  /** A top-level search predicate for keyword `word` that skips the word
+    * inside a CASE … END: stateful, so one per search. */
+  private def outsideCase(word: String): Tok => Boolean = {
+    var cases = 0
+    t => {
+      if (isKw(t, "CASE")) cases += 1
+      else if (isKw(t, "END") && cases > 0) cases -= 1
+      cases == 0 && isKw(t, word)
     }
   }
 
-  private def parseWhenClauses(text: String): Seq[WhenClause] = {
-    // text starts at the first WHEN
-    val starts = allTopLevelKeywords(text, "WHEN")
-    starts.zipAll(starts.drop(1), -1, text.length).map { case (a, b) =>
-      val clause = text.substring(a + 4, b).trim
-      val notMatched = "(?is)^NOT\\s+MATCHED\\b(.*)$".r
-      val matched = "(?is)^MATCHED\\b(.*)$".r
-      val (isMatched, rest) = clause match {
-        case notMatched(r) => (false, r)
-        case matched(r) => (true, r)
-        case other => throw new IllegalArgumentException(s"bad WHEN clause: $other")
-      }
-      val thenIdx = topLevelKeyword(rest, "THEN")
-      require(thenIdx >= 0, s"WHEN clause missing THEN: $clause")
-      val condPart = rest.substring(0, thenIdx).trim
-        .replaceAll("(?is)^AND\\s+", "").trim
-      val cond = if (condPart.isEmpty) None else Some(condPart)
-      WhenClause(isMatched, cond, rest.substring(thenIdx + 4).trim)
+  private def parseWhenClauses(toks: Vector[Tok]): Seq[WhenClause] = {
+    // toks start at the first WHEN: drop the empty piece before it
+    splitTop(toks, 0, toks.length)(outsideCase("WHEN")).drop(1).map { case (a, b) =>
+      val clause = toks.slice(a, b)
+      val sig = significant(clause)
+      def word(n: Int, w: String) = sig.length > n && isKw(clause(sig(n)), w)
+      val (isMatched, from) =
+        if (word(0, "MATCHED")) (true, sig(0) + 1)
+        else if (word(0, "NOT") && word(1, "MATCHED")) (false, sig(1) + 1)
+        else throw new IllegalArgumentException(s"bad WHEN clause: ${text(clause)}")
+      val thenIdx = indexTop(clause, from)(outsideCase("THEN"))
+      require(thenIdx >= 0, s"WHEN clause missing THEN: ${text(clause)}")
+      // optional AND <condition>
+      val condFrom = nextSig(clause, from - 1).filter(j =>
+        j < thenIdx && isKw(clause(j), "AND")).fold(from)(_ + 1)
+      val cond = Some(text(clause.slice(condFrom, thenIdx))).filter(_.nonEmpty)
+      val action = clause.drop(thenIdx + 1)
+      val kind = nextSig(action, -1).map(action(_).text.toUpperCase).getOrElse("")
+      WhenClause(isMatched, cond, kind, action)
     }
   }
 
   /** `INSERT [(c1, c2)] VALUES (e1, e2)` → (columns, expressions). */
-  private def parseInsert(action: String,
+  private def parseInsert(action: Vector[Tok],
       allCols: Seq[String]): (Seq[String], Seq[String]) = {
-    val insRe = "(?is)^INSERT\\s*(\\([^)]*\\))?\\s*VALUES\\s*\\((.*)\\)\\s*$".r
-    action.trim match {
-      case insRe(colList, exprs) =>
-        val cols = Option(colList)
-          .map(_.stripPrefix("(").stripSuffix(")")
-            .split(',').toSeq.map(_.trim))
-          .getOrElse(allCols)
-        val es = splitTop(exprs, ',').map(_.trim)
-        require(cols.length == es.length,
-          s"INSERT column/value count mismatch: $cols vs $es")
-        (cols, es)
-      case other =>
-        throw new IllegalArgumentException(s"bad MERGE INSERT action: $other")
+    def bad = new IllegalArgumentException(s"bad MERGE INSERT action: ${text(action)}")
+    val ins = nextSig(action, -1).filter(j => isKw(action(j), "INSERT"))
+      .getOrElse(throw bad)
+    def items(open: Int): (Seq[String], Int) = {
+      val close = matchParen(action, open)
+      (splitArgs(action, open, close).map(r => text(action.slice(r._1, r._2))), close)
     }
+    val (cols, afterCols) = parenAfter(action, ins) match {
+      case Some(open) =>
+        val (names, close) = items(open)
+        (names.map(Identifiers.normalizePart), close)
+      case None => (allCols, ins)
+    }
+    val values = nextSig(action, afterCols).filter(j => isKw(action(j), "VALUES"))
+      .flatMap(parenAfter(action, _)).getOrElse(throw bad)
+    val (es, close) = items(values)
+    if (nextSig(action, close).isDefined) throw bad
+    require(cols.length == es.length,
+      s"INSERT column/value count mismatch: $cols vs $es")
+    (cols, es)
   }
 
-  // ── text utilities (string/paren-aware) ────────────────────────────────
+  /** A fragment's SQL text for splicing into a generated statement:
+    * comments become a space, so a `--` comment can never swallow what
+    * follows the fragment. */
+  private def text(toks: Seq[Tok]): String =
+    toks.map { case _: Comment => " "; case t => t.text }.mkString.trim
 
   /** Column/alias names usually come from parquet schemas as plain
     * identifiers and pass through unquoted; anything else (spaces,
@@ -522,96 +552,5 @@ object Dml {
     require(ref.kind == TableKind.Lake && ref.path.isDefined,
       s"DML target must be a managed table: $f")
     (f, ref)
-  }
-
-  private def splitTop(s: String, sep: Char): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0; var inStr = false; var inDq = false; var start = 0; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (inDq) { if (c == '"') inDq = false }
-      else c match {
-        case '\'' => inStr = true
-        case '"' => inDq = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case x if x == sep && depth == 0 =>
-          out += s.substring(start, i); start = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    out += s.substring(start)
-    out.toSeq
-  }
-
-  private def topLevelIndexOf(s: String, ch: Char): Int = {
-    var depth = 0; var inStr = false; var inDq = false; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (inDq) { if (c == '"') inDq = false }
-      else c match {
-        case '\'' => inStr = true
-        case '"' => inDq = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case x if x == ch && depth == 0 => return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
-
-  private def topLevelKeyword(s: String, kw: String): Int =
-    allTopLevelKeywords(s, kw).headOption.getOrElse(-1)
-
-  private def allTopLevelKeywords(s: String, kw: String): Seq[Int] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val upper = s.toUpperCase; val k = kw.toUpperCase
-    var depth = 0; var inStr = false; var inDq = false; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (inDq) { if (c == '"') inDq = false }
-      else c match {
-        case '\'' => inStr = true
-        case '"' => inDq = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-          if (depth == 0 && upper.startsWith(k, i) &&
-              (i == 0 || !Character.isLetterOrDigit(upper.charAt(i - 1)) &&
-                upper.charAt(i - 1) != '_') &&
-              (i + k.length >= s.length ||
-                !Character.isLetterOrDigit(upper.charAt(i + k.length)) &&
-                upper.charAt(i + k.length) != '_'))
-            out += i
-      }
-      i += 1
-    }
-    out.toSeq
-  }
-
-  private def matchingParen(s: String, open: Int): Int = {
-    var depth = 0; var inStr = false; var inDq = false; var i = open
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (inDq) { if (c == '"') inDq = false }
-      else c match {
-        case '\'' => inStr = true
-        case '"' => inDq = true
-        case '(' => depth += 1
-        case ')' =>
-          depth -= 1
-          if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    throw new IllegalArgumentException(s"unbalanced parens: $s")
   }
 }

@@ -1,9 +1,11 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
+import SqlTokens._
 
 /** Per-connection session state + statement execution — the engine analog
   * of `UniverSQLSession` (`universql/protocol/session.py:31-44`) with the
@@ -83,7 +85,7 @@ final class GraftSession(
     * body stays declarative and Catalyst optimizes straight through it —
     * no black-box UDF in the plan. */
   private val sqlFunctions = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[String], String)]
+    .empty[String, (Seq[String], Vector[Tok])]
   /** CREATE SEQUENCE registry: name → (start, increment, next window
     * base). NEXTVAL draws are distributed: each textual occurrence
     * reserves a disjoint value window driver-side, and rows inside the
@@ -1022,37 +1024,6 @@ final class GraftSession(
     }
   }
 
-  /** SYSTEM$STREAM_HAS_DATA('name') → TRUE|FALSE literal, resolved
-    * eagerly against the stream registry (file-set comparison — no Spark
-    * job on the append path). Token-level like LAST_QUERY_ID. */
-  private def substituteStreamHasData(sql: String): String = {
-    if (!sql.toUpperCase.contains("SYSTEM$STREAM_HAS_DATA")) return sql
-    import SqlTokens._
-    val toks = lex(sql)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Tok]
-    var i = 0
-    while (i < toks.length) {
-      toks(i) match {
-        case Ident(w) if w.equalsIgnoreCase("SYSTEM$STREAM_HAS_DATA") =>
-          var j = i + 1
-          while (j < toks.length && (toks(j).isInstanceOf[Ws] ||
-                 toks(j).isInstanceOf[Comment])) j += 1
-          if (j < toks.length && toks(j) == Op("(")) {
-            val close = matchParenTok(toks, j)
-            val arg = render(toks.slice(j + 1, close)).trim
-              .stripPrefix("'").stripSuffix("'")
-            val f = fqn(arg)
-            val st = streams.getOrElse(f, throw new IllegalArgumentException(
-              s"SYSTEM$$STREAM_HAS_DATA: unknown stream ${f.flat}"))
-            out += Ident(if (Streams.hasData(spark, registry, st)) "TRUE" else "FALSE")
-            i = close + 1
-          } else { out += toks(i); i += 1 }
-        case t => out += t; i += 1
-      }
-    }
-    render(out.toSeq)
-  }
-
   /** External (Iceberg-REST / Polaris-shape) catalogs consulted on a
     * registry miss, in attach order — the reference's `--universql-catalog`
     * seam (`universql/catalog/iceberg.py`). Resolutions are cached into
@@ -1273,24 +1244,28 @@ final class GraftSession(
     * (DT refresh) are fine. */
   private val stmtLock = new Object
   /** Execute a (possibly multi-statement) Snowflake-dialect batch; returns
-    * the last statement's result. */
-  def sql(batch: String): DataFrame = stmtLock.synchronized {
+    * the last statement's result. `queryId` names the batch's last
+    * statement in LAST_QUERY_ID, RESULT_SCAN and QUERY_HISTORY — the wire
+    * façade passes the id its client sees; every other statement gets a
+    * session-minted id. */
+  def sql(batch: String, queryId: Option[String] = None): DataFrame = stmtLock.synchronized {
     val stmts = SqlTokens.splitStatements(batch)
     require(stmts.nonEmpty, "empty batch")
-    stmts.map { st =>
+    stmts.zipWithIndex.map { case (st, k) =>
       currentSeq = stmtSeqGen.incrementAndGet()
       val t0 = System.nanoTime()
       streamsReadInStmt.clear()
       streamReadVersion.clear()
       infoSchemaReadInStmt = false
-      val res = executeOne(substituteStreamHasData(substituteLastQueryId(st)))
+      val res = executeOne(substitutePreDispatch(st))
       if (streamsReadInStmt.nonEmpty &&
           consumesStreamsRe.pattern.matcher(st).matches())
         advanceStreams()
       val elapsedSec = (System.nanoTime() - t0) / 1e9
       lastQueryLog =
         s"Run locally on Spark: ${GraftSession.costEstimate(elapsedSec)}"
-      val qid = f"01-graft-$sessionId%04d-$currentSeq%06d"
+      val qid = queryId.filter(_ => k == stmts.length - 1)
+        .getOrElse(f"01-graft-$sessionId%04d-$currentSeq%06d")
       queryLog += ((currentSeq, qid))
       statementHistory.synchronized {
         statementHistory += ((qid, st.trim, System.currentTimeMillis(),
@@ -1362,36 +1337,32 @@ final class GraftSession(
     }
   }
 
-  /** LAST_QUERY_ID([n]) → the qid string literal, resolved against this
-    * session's statement log (token-level: occurrences inside string
-    * literals survive). Snowflake indexing: default/−1 = most recent,
-    * −2 = one earlier, positive n = n-th statement of the session. */
-  private def substituteLastQueryId(sql: String): String = {
-    if (!sql.toUpperCase.contains("LAST_QUERY_ID")) return sql
-    import SqlTokens._
-    val toks = lex(sql)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Tok]
-    var i = 0
-    while (i < toks.length) {
-      toks(i) match {
-        case Ident(w) if w.equalsIgnoreCase("LAST_QUERY_ID") =>
-          var j = i + 1
-          while (j < toks.length && (toks(j).isInstanceOf[Ws] ||
-                 toks(j).isInstanceOf[Comment])) j += 1
-          if (j < toks.length && toks(j) == Op("(")) {
-            val close = matchParenTok(toks, j)
-            val argText = render(toks.slice(j + 1, close)).trim
-            val n = if (argText.isEmpty) -1 else argText.toInt
-            val idx = if (n > 0) n - 1 else queryLog.length + n
-            require(idx >= 0 && idx < queryLog.length,
-              s"LAST_QUERY_ID($argText): no such statement in this session")
-            out += Str("'" + queryLog(idx)._2 + "'")
-            i = close + 1
-          } else { out += toks(i); i += 1 }
-        case t => out += t; i += 1
-      }
-    }
-    render(out.toSeq)
+  /** The substitutions that run before dispatch, in one walk:
+    * LAST_QUERY_ID([n]) → the qid string literal, resolved against this
+    * session's statement log (Snowflake indexing: default/−1 = most
+    * recent, −2 = one earlier, positive n = n-th statement of the
+    * session), and SYSTEM$STREAM_HAS_DATA('name') → TRUE|FALSE, resolved
+    * eagerly against the stream registry (file-set comparison — no Spark
+    * job on the append path). Occurrences inside string literals and
+    * comments survive. */
+  private def substitutePreDispatch(stmt: String): String = {
+    val up = stmt.toUpperCase
+    if (!up.contains("LAST_QUERY_ID") && !up.contains("SYSTEM$STREAM_HAS_DATA"))
+      return stmt
+    render(replaceCalls(lex(stmt), Set("LAST_QUERY_ID", "SYSTEM$STREAM_HAS_DATA")) {
+      case ("LAST_QUERY_ID", args) =>
+        val argText = render(args.filter(isSig))
+        val n = if (argText.isEmpty) -1 else argText.toInt
+        val idx = if (n > 0) n - 1 else queryLog.length + n
+        require(idx >= 0 && idx < queryLog.length,
+          s"LAST_QUERY_ID($argText): no such statement in this session")
+        Some(Seq(Str("'" + queryLog(idx)._2 + "'")))
+      case (_, args) =>
+        val f = fqn(render(args).trim.stripPrefix("'").stripSuffix("'"))
+        val st = streams.getOrElse(f, throw new IllegalArgumentException(
+          s"SYSTEM$$STREAM_HAS_DATA: unknown stream ${f.flat}"))
+        Some(Seq(Ident(if (Streams.hasData(spark, registry, st)) "TRUE" else "FALSE")))
+    })
   }
 
   /** Resolve `table AT|BEFORE (OFFSET|TIMESTAMP|STATEMENT => v)` to the
@@ -1580,7 +1551,7 @@ final class GraftSession(
       require(body.trim.nonEmpty, "CREATE FUNCTION needs a body")
       val ps = params.split(",").toSeq.map(_.trim).filter(_.nonEmpty)
         .map(p => Identifiers.normalizePart(p.split("\\s+").head))
-      sqlFunctions.put(Identifiers.normalizePart(name), (ps, body))
+      sqlFunctions.put(Identifiers.normalizePart(name), (ps, lex(body)))
       status(s"Function ${name.toUpperCase} successfully created.")
     case dropFnRe(name) =>
       sqlFunctions.remove(Identifiers.normalizePart(name))
@@ -1759,48 +1730,13 @@ final class GraftSession(
   private val resultCache =
     scala.collection.mutable.LinkedHashMap.empty[String, DataFrame]
 
-  /** [TABLE(]RESULT_SCAN('qid')[)] → temp view over the cached result.
+  /** RESULT_SCAN('qid') → temp view over the cached result; a TABLE(…)
+    * wrapper unwraps in the rewriter like any table function's.
     * LAST_QUERY_ID() has already been substituted to a literal by the
-    * statement driver. Token-level, so string literals elsewhere survive. */
-  private def substituteResultScan(sql: String): String = {
-    if (!sql.toUpperCase.contains("RESULT_SCAN")) return sql
-    import SqlTokens._
-    val toks = lex(sql)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Tok]
-    def sigIdx(from: Int): Int = {
-      var j = from
-      while (j < toks.length && (toks(j).isInstanceOf[Ws] ||
-             toks(j).isInstanceOf[Comment])) j += 1
-      j
-    }
-    var i = 0
-    while (i < toks.length) {
-      toks(i) match {
-        case Ident(w) if w.equalsIgnoreCase("TABLE") && {
-            val p = sigIdx(i + 1)
-            p < toks.length && toks(p) == Op("(") && {
-              val r = sigIdx(p + 1)
-              r < toks.length && toks(r).text.equalsIgnoreCase("RESULT_SCAN")
-            }
-          } =>
-          // TABLE( RESULT_SCAN('qid') ) — consume the whole wrapper
-          val open = sigIdx(i + 1)
-          val close = matchParenTok(toks, open)
-          out += Ident(resultScanView(render(toks.slice(open + 1, close))))
-          i = close + 1
-        case Ident(w) if w.equalsIgnoreCase("RESULT_SCAN") && {
-            val p = sigIdx(i + 1)
-            p < toks.length && toks(p) == Op("(")
-          } =>
-          val open = sigIdx(i + 1)
-          val close = matchParenTok(toks, open)
-          out += Ident(resultScanView(render(toks.slice(i, close + 1))))
-          i = close + 1
-        case t => out += t; i += 1
-      }
-    }
-    render(out.toSeq)
-  }
+    * statement driver. */
+  private def substituteResultScan(toks: Vector[Tok]): Vector[Tok] =
+    replaceCalls(toks, Set("RESULT_SCAN"))((_, args) =>
+      Some(Seq(Ident(resultScanView(args)))))
 
   /** Per-statement history for `TABLE(INFORMATION_SCHEMA.QUERY_HISTORY())`
     * — (qid, text, start ms, elapsed ms, cost line). The queryable face
@@ -1810,62 +1746,16 @@ final class GraftSession(
   private val statementHistory = scala.collection.mutable.ArrayBuffer
     .empty[(String, String, Long, Long, String)]
 
-  /** `[TABLE(][INFORMATION_SCHEMA.]QUERY_HISTORY([RESULT_LIMIT => n])[)]`
-    * → temp view over the session's statement history, most recent
-    * first. Token-level like RESULT_SCAN so literals survive. */
-  private def substituteQueryHistory(sql: String): String = {
-    if (!sql.toUpperCase.contains("QUERY_HISTORY")) return sql
-    import SqlTokens._
-    val toks = lex(sql)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Tok]
-    def sigIdx(from: Int): Int = {
-      var j = from
-      while (j < toks.length && (toks(j).isInstanceOf[Ws] ||
-             toks(j).isInstanceOf[Comment])) j += 1
-      j
-    }
-    // is toks(i) the start of [INFORMATION_SCHEMA.]QUERY_HISTORY( ? If so
-    // returns the index of the opening paren, else -1
-    def callOpen(i: Int): Int = toks(i) match {
-      case Ident(w) if w.equalsIgnoreCase("INFORMATION_SCHEMA") =>
-        val d = sigIdx(i + 1)
-        if (d < toks.length && toks(d) == Op(".")) {
-          val q = sigIdx(d + 1)
-          if (q < toks.length && toks(q).text.equalsIgnoreCase("QUERY_HISTORY"))
-            callOpen(q)
-          else -1
-        } else -1
-      case Ident(w) if w.equalsIgnoreCase("QUERY_HISTORY") =>
-        val p = sigIdx(i + 1)
-        if (p < toks.length && toks(p) == Op("(")) p else -1
-      case _ => -1
-    }
-    var i = 0
-    while (i < toks.length) {
-      val tableWrapped = toks(i) match {
-        case Ident(w) if w.equalsIgnoreCase("TABLE") =>
-          val p = sigIdx(i + 1)
-          p < toks.length && toks(p) == Op("(") && callOpen(sigIdx(p + 1)) >= 0
-        case _ => false
-      }
-      if (tableWrapped) {
-        val open = sigIdx(i + 1)
-        val close = matchParenTok(toks, open)
-        out += Ident(queryHistoryView(render(toks.slice(open + 1, close))))
-        i = close + 1
-      } else if (callOpen(i) >= 0) {
-        val open = callOpen(i)
-        val close = matchParenTok(toks, open)
-        out += Ident(queryHistoryView(render(toks.slice(i, close + 1))))
-        i = close + 1
-      } else { out += toks(i); i += 1 }
-    }
-    render(out.toSeq)
-  }
+  /** `[INFORMATION_SCHEMA.]QUERY_HISTORY([RESULT_LIMIT => n])` → temp view
+    * over the session's statement history, most recent first; a TABLE(…)
+    * wrapper unwraps in the rewriter like any table function's. */
+  private def substituteQueryHistory(toks: Vector[Tok]): Vector[Tok] =
+    replaceCalls(toks, Set("QUERY_HISTORY"))((_, args) =>
+      Some(Seq(Ident(queryHistoryView(render(args))))))
 
-  private def queryHistoryView(call: String): String = {
+  private def queryHistoryView(args: String): String = {
     val limit = "(?is).*RESULT_LIMIT\\s*=>\\s*(\\d+).*".r
-    val n = call match {
+    val n = args match {
       case limit(v) => v.toInt
       case _ => 100
     }
@@ -1887,13 +1777,12 @@ final class GraftSession(
     vn
   }
 
-  /** `RESULT_SCAN('qid')` (rendered text) → registered temp-view name. */
-  private def resultScanView(call: String): String = {
-    val m = "(?is).*RESULT_SCAN\\s*\\(\\s*'([^']+)'\\s*\\).*".r
-    val qid = call.trim match {
-      case m(q) => q
-      case other => throw new IllegalArgumentException(
-        s"RESULT_SCAN expects a query id literal, got: $other")
+  /** `RESULT_SCAN('qid')` (its argument tokens) → registered temp-view name. */
+  private def resultScanView(args: Vector[Tok]): String = {
+    val qid = args.filter(isSig) match {
+      case Vector(q: Str) => q.value
+      case _ => throw new IllegalArgumentException(
+        s"RESULT_SCAN expects a query id literal, got: ${render(args).trim}")
     }
     val df = resultCache.synchronized { resultCache.get(qid) }.getOrElse(
       throw new IllegalArgumentException(
@@ -1910,8 +1799,7 @@ final class GraftSession(
   private lazy val asOfSchemaResolver: SnowflakeRewriter.SchemaResolver =
     (withPrefix, rel) => try {
       val probe = s"$withPrefix SELECT * FROM $rel AS _ga_probe WHERE 1=0"
-      val substituted = TableResolver.resolveAndSubstitute(
-        substituteSessionContext(SnowflakeRewriter.rewrite(probe)), this)
+      val substituted = rewriteAndSubstitute(probe, sessionSubstitutions = false)
       Some(spark.sql(substituted).schema.fieldNames.toSeq)
     } catch { case scala.util.control.NonFatal(_) => None }
 
@@ -1946,95 +1834,46 @@ final class GraftSession(
   /** The full rewrite pipeline WITHOUT execution — dynamic-table refresh
     * re-binds a base's temp view to its delta between substitution and
     * `spark.sql` (analysis inlines the view's plan, so the binding is
-    * captured at that point). */
-  private def rewriteAndSubstitute(snowflakeSql: String): String = {
-    val rewritten = SnowflakeRewriter.rewrite(
-      expandSqlFunctions(substituteNextval(substituteResultScan(
-        substituteQueryHistory(snowflakeSql)))),
-      asOfSchemaResolver)
+    * captured at that point). The statement is lexed once and every
+    * stage works on its tokens. Without `sessionSubstitutions` (the ASOF
+    * schema probe) the session's query-path substitutions and the ASOF
+    * emitter's own probe are skipped: they have side effects — NEXTVAL
+    * reserves a counter window, RESULT_SCAN registers a view. */
+  private def rewriteAndSubstitute(snowflakeSql: String,
+      sessionSubstitutions: Boolean = true): String = {
+    var toks = lex(snowflakeSql)
+    if (sessionSubstitutions) toks = expandSqlFunctions(substituteNextval(
+      substituteResultScan(substituteQueryHistory(toks))))
+    toks = SnowflakeRewriter.rewriteTokens(toks,
+      if (sessionSubstitutions) asOfSchemaResolver else null)
     // session-context functions resolve against THIS session (a shared
-    // SparkSession can't carry per-session UDF state); token-level so the
-    // function name inside a string literal survives untouched
-    val contextual = substituteSessionContext(rewritten)
-    TableResolver.resolveAndSubstitute(contextual, this)
+    // SparkSession can't carry per-session UDF state)
+    render(TableResolver.resolveTokens(substituteSessionContext(toks), this))
   }
 
   /** Expand SQL-function calls as macros: `f(a, b)` → `(body[p1←(a),
     * p2←(b)])`, recursively (functions may call functions; depth-capped
-    * against cycles). Runs on the ORIGINAL Snowflake text, before dialect
-    * rewrite, since bodies are written in the Snowflake dialect too. */
-  private def expandSqlFunctions(sql: String, depth: Int = 0): String = {
-    import SqlTokens._
-    if (sqlFunctions.isEmpty || depth > 8) return sql
-    val toks = lex(sql)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Tok]
+    * against cycles). Runs on the ORIGINAL Snowflake tokens, before
+    * dialect rewrite, since bodies are written in the Snowflake dialect
+    * too. */
+  private def expandSqlFunctions(toks: Vector[Tok], depth: Int = 0): Vector[Tok] = {
+    if (sqlFunctions.isEmpty || depth > 8) return toks
     var changed = false
-    var i = 0
-    while (i < toks.length) {
-      toks(i) match {
-        case Ident(name)
-            if sqlFunctions.contains(Identifiers.normalizePart(name)) =>
-          var j = i + 1
-          while (j < toks.length && (toks(j).isInstanceOf[Ws] ||
-                 toks(j).isInstanceOf[Comment])) j += 1
-          if (j < toks.length && toks(j) == Op("(")) {
-            val close = matchParenTok(toks, j)
-            val (params, body) =
-              sqlFunctions(Identifiers.normalizePart(name))
-            val args = splitArgsTok(toks, j, close).map(r =>
-              render(toks.slice(r._1, r._2)).trim)
-            require(args.count(_.nonEmpty) == params.length ||
-                (params.isEmpty && args.forall(_.isEmpty)),
-              s"function $name expects ${params.length} args, got ${args.length}")
-            val byParam = params.zip(args).toMap
-            val bodyOut = lex(body).map {
-              case Ident(w)
-                  if byParam.contains(Identifiers.normalizePart(w)) =>
-                Ident(s"(${byParam(Identifiers.normalizePart(w))})")
-              case t => t
-            }
-            out += Op("(")
-            out ++= bodyOut
-            out += Op(")")
-            changed = true
-            i = close + 1
-          } else { out += toks(i); i += 1 }
-        case t => out += t; i += 1
-      }
+    val out = replaceCalls(toks, sqlFunctions.keySet.toSet) { (name, argToks) =>
+      val (params, body) = sqlFunctions(name)
+      val args = splitArgs(argToks, -1, argToks.length)
+        .map { case (a, b) => argToks.slice(a, b) }
+      require(args.length == params.length && args.forall(_.exists(isSig)),
+        s"function $name expects ${params.length} args, got ${args.length}")
+      val byParam = params.zip(args).toMap
+      changed = true
+      Some(Op("(") +: body.flatMap {
+        case Ident(w) if byParam.contains(Identifiers.normalizePart(w)) =>
+          Op("(") +: byParam(Identifiers.normalizePart(w)) :+ Op(")")
+        case t => Seq(t)
+      } :+ Op(")"))
     }
-    if (changed) expandSqlFunctions(render(out.toSeq), depth + 1) else sql
-  }
-
-  private def matchParenTok(toks: Vector[SqlTokens.Tok], open: Int): Int = {
-    var depth = 0; var j = open
-    while (j < toks.length) {
-      toks(j) match {
-        case SqlTokens.Op("(") => depth += 1
-        case SqlTokens.Op(")") => depth -= 1; if (depth == 0) return j
-        case _ =>
-      }
-      j += 1
-    }
-    toks.length - 1
-  }
-
-  private def splitArgsTok(toks: Vector[SqlTokens.Tok], open: Int,
-      close: Int): Seq[(Int, Int)] = {
-    val ranges = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-    var depth = 0; var start = open + 1; var j = open
-    while (j <= close) {
-      toks(j) match {
-        case SqlTokens.Op("(") => depth += 1
-        case SqlTokens.Op(")") =>
-          depth -= 1
-          if (depth == 0 && j > open) { ranges += ((start, j)) }
-        case SqlTokens.Op(",") if depth == 1 =>
-          ranges += ((start, j)); start = j + 1
-        case _ =>
-      }
-      j += 1
-    }
-    ranges.toSeq
+    if (changed) expandSqlFunctions(out, depth + 1) else toks
   }
 
   /** `<seq>.NEXTVAL` → `(base + monotonically_increasing_id() * inc)`;
@@ -2042,62 +1881,34 @@ final class GraftSession(
     * counter (see [[sequences]]), so draws are unique across statements
     * and step-aligned to the increment at any parallelism. Token-level,
     * so NEXTVAL inside string literals survives. */
-  private def substituteNextval(sql: String): String = {
-    if (sequences.isEmpty || !sql.toUpperCase.contains("NEXTVAL")) return sql
-    import SqlTokens._
-    val toks = lex(sql)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Tok]
+  private def substituteNextval(toks: Vector[Tok]): Vector[Tok] = {
+    if (sequences.isEmpty) return toks
+    val out = Vector.newBuilder[Tok]
     var i = 0
     while (i < toks.length) {
-      val matched = toks(i) match {
+      toks(i) match {
         case Ident(w) if sequences.contains(Identifiers.normalizePart(w)) &&
             i + 2 < toks.length && toks(i + 1) == Op(".") &&
             toks(i + 2).text.equalsIgnoreCase("NEXTVAL") =>
           val (_, inc, ctr) = sequences(Identifiers.normalizePart(w))
           // window sized for 2^11 partitions × 2^33 rows per partition
           val base = ctr.getAndAdd((1L << 44) * math.abs(inc))
-          out += Ident(
-            s"($base + monotonically_increasing_id() * $inc)")
+          // one opaque token: no later pass looks inside the expression
+          out += Ident(s"($base + monotonically_increasing_id() * $inc)")
           i += 3
-          true
-        case _ => false
-      }
-      if (!matched) { out += toks(i); i += 1 }
-    }
-    render(out.toSeq)
-  }
-
-  /** CURRENT_DATABASE() / CURRENT_SCHEMA() → session-value string literals,
-    * on the token stream (literals are already classified by the lexer). */
-  private def substituteSessionContext(sql: String): String = {
-    import SqlTokens._
-    val toks = lex(sql)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Tok]
-    var i = 0
-    while (i < toks.length) {
-      toks(i) match {
-        case Ident(w)
-            if w.equalsIgnoreCase("CURRENT_DATABASE") ||
-               w.equalsIgnoreCase("CURRENT_SCHEMA") =>
-          // must be followed by '(' ')' (whitespace/comments allowed)
-          var j = i + 1
-          while (j < toks.length && (toks(j).isInstanceOf[Ws] ||
-                 toks(j).isInstanceOf[Comment])) j += 1
-          var k = j + 1
-          while (k < toks.length && (toks(k).isInstanceOf[Ws] ||
-                 toks(k).isInstanceOf[Comment])) k += 1
-          if (j < toks.length && toks(j) == Op("(") &&
-              k < toks.length && toks(k) == Op(")")) {
-            val v = if (w.equalsIgnoreCase("CURRENT_DATABASE")) currentDatabase
-                    else currentSchema
-            out += Str("'" + v.replace("'", "''") + "'")
-            i = k + 1
-          } else { out += toks(i); i += 1 }
         case t => out += t; i += 1
       }
     }
-    render(out.toSeq)
+    out.result()
   }
+
+  /** CURRENT_DATABASE() / CURRENT_SCHEMA() → session-value string literals. */
+  private def substituteSessionContext(toks: Vector[Tok]): Vector[Tok] =
+    replaceCalls(toks, Set("CURRENT_DATABASE", "CURRENT_SCHEMA")) { (name, args) =>
+      val v = if (name == "CURRENT_DATABASE") currentDatabase else currentSchema
+      if (args.exists(isSig)) None
+      else Some(Seq(Str("'" + v.replace("'", "''") + "'")))
+    }
 
   /** Used by [[TableResolver]]: materialize `fqn` as a flat temp view and
     * return the view name; unknown names are left untouched so Spark can
@@ -2336,9 +2147,10 @@ final class GraftSession(
         status(s"Table ${f.table} successfully created.")
       case colDefs if colDefs.startsWith("(") =>
         // CREATE TABLE t (col type, …): empty table with translated schema
-        val ddl = SnowflakeRewriter.rewrite(
-          s"SELECT * FROM VALUES (1) WHERE 1=0") // placeholder, schema below
-        val schema = parseColumnDefs(colDefs)
+        val schema = StructType(SnowflakeRewriter.columnDefs(colDefs).map {
+          case (name, tpe) =>
+            StructField(Identifiers.normalizePart(name), CatalystSqlParser.parseDataType(tpe))
+        })
         val path = tablePath(f, temp)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[Row], schema)
@@ -2350,41 +2162,10 @@ final class GraftSession(
         AutoStats.recordEmpty(spark, path, schema)
         registry.register(TableRef(f, TableKind.Lake, Some(path)))
         resetHistory(f, TableRef(f, TableKind.Lake, Some(path)))
-        val _ = ddl
         status(s"Table ${f.table} successfully created.")
       case other =>
         throw new IllegalArgumentException(s"cannot CREATE: $other")
     }
-  }
-
-  /** Parse `(col type, col type, …)` into a StructType via the rewriter's
-    * type map + Spark's DDL parser. */
-  private def parseColumnDefs(defs: String): StructType = {
-    val inner = defs.trim.stripPrefix("(").stripSuffix(")")
-    // translate each "name TYPE" pair through the cast-type rewriter by
-    // wrapping in a CAST so the type map applies
-    val fields = splitTopLevel(inner, ',').map { d =>
-      val trimmed = d.trim
-      val sp = trimmed.indexWhere(_.isWhitespace)
-      require(sp > 0, s"bad column def: $trimmed")
-      val name = Identifiers.normalizePart(trimmed.substring(0, sp))
-      StructField(name, parseSnowflakeType(trimmed.substring(sp + 1)))
-    }
-    StructType(fields)
-  }
-
-  private def splitTopLevel(s: String, sep: Char): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0; var start = 0; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '(') depth += 1
-      else if (c == ')') depth -= 1
-      else if (c == sep && depth == 0) { out += s.substring(start, i); start = i + 1 }
-      i += 1
-    }
-    out += s.substring(start)
-    out.toSeq
   }
 
   /** Hard-link `src` (a parquet snapshot file or directory) into `dest`,
@@ -2619,12 +2400,8 @@ final class GraftSession(
 
   /** Translate one Snowflake type name to a Spark DataType via the
     * rewriter's type map (shared with CREATE TABLE column defs). */
-  private def parseSnowflakeType(typeSql: String): org.apache.spark.sql.types.DataType = {
-    val cleaned = typeSql.replaceAll("(?i)\\s+NOT\\s+NULL$", "").trim
-    val mapped = SnowflakeRewriter.rewrite(s"CAST(x AS $cleaned)")
-      .replaceAll("(?is)^CAST\\(x AS\\s*", "").replaceAll("\\)$", "").trim
-    org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parseDataType(mapped)
-  }
+  private def parseSnowflakeType(typeSql: String): org.apache.spark.sql.types.DataType =
+    CatalystSqlParser.parseDataType(SnowflakeRewriter.sparkType(typeSql))
 
   /** LIST @stage[/path]: stage files with sizes (reference surfaces
     * stages via DESCRIBE STAGE metadata; LIST is its enumeration twin). */
@@ -2961,14 +2738,10 @@ final class GraftSession(
     val optsRaw = ffRe.findFirstMatchIn(rest).map(_.group(1)).getOrElse("")
     val restNoFf = ffRe.replaceAllIn(rest, "").trim
     // source: (SELECT …) or a table name; remaining text = copy options
-    val (sourceSql, tail) =
-      if (restNoFf.startsWith("(")) {
-        val close = matchingParenStr(restNoFf, 0)
-        (restNoFf.substring(1, close), restNoFf.substring(close + 1))
-      } else {
-        val tok = restNoFf.split("\\s+").head
-        (s"SELECT * FROM $tok", restNoFf.drop(tok.length))
-      }
+    val (sourceSql, tail) = leadingGroup(restNoFf).getOrElse {
+      val tok = restNoFf.split("\\s+").head
+      (s"SELECT * FROM $tok", restNoFf.drop(tok.length))
+    }
     val top = resolveFormatName(parseOptionPairs(optsRaw)) ++
       parseOptionPairs(tail)
     val mapped = CopyOptions.map(top)
@@ -2983,22 +2756,6 @@ final class GraftSession(
       .mode(if (overwrite) "overwrite" else "errorifexists")
       .save(resolveStagePath(target))
     status(s"rows unloaded to $target")
-  }
-
-  private def matchingParenStr(s: String, open: Int): Int = {
-    var depth = 0; var inStr = false; var i = open
-    while (i < s.length) {
-      val ch = s.charAt(i)
-      if (inStr) { if (ch == '\'') inStr = false }
-      else ch match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    throw new IllegalArgumentException(s"unbalanced parens: $s")
   }
 
   /** Expand stage URLs (globs, directories — recursively, so hive

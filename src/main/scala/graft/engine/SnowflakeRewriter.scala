@@ -279,10 +279,14 @@ object SnowflakeRewriter {
     * only (ASOF JOIN falls back to the correlated-LATERAL form). */
   type SchemaResolver = (String, String) => Option[Seq[String]]
 
-  // ── entry point ────────────────────────────────────────────────────────
-  def rewrite(sql: String, resolver: SchemaResolver = null): String = {
-    var toks = lex(sql)
-    toks = rewriteConnectBy(toks)
+  // ── entry points ───────────────────────────────────────────────────────
+  def rewrite(sql: String, resolver: SchemaResolver = null): String =
+    render(rewriteTokens(lex(sql), resolver))
+
+  /** The rewrite passes over an already-lexed statement. */
+  def rewriteTokens(input: Vector[Tok],
+      resolver: SchemaResolver = null): Vector[Tok] = {
+    var toks = rewriteConnectBy(input)
     toks = rewriteAsOfJoin(toks, resolver)
     toks = unwrapTableFn(toks)
     toks = rewriteValuesColumns(toks)
@@ -296,8 +300,7 @@ object SnowflakeRewriter {
     toks = rewriteTop(toks)
     toks = sortNullsCompensation(toks)
     toks = quotedIdentsToBackticks(toks)
-    toks = quoteMetadataIdents(toks)
-    render(toks)
+    quoteMetadataIdents(toks)
   }
 
   /** Snowflake sorts NULLs as the HIGHEST values (documented default:
@@ -316,18 +319,14 @@ object SnowflakeRewriter {
   private def sortNullsCompensation(toks: Vector[Tok]): Vector[Tok] = {
     val terminators = Set("LIMIT", "OFFSET", "FETCH", "UNION", "INTERSECT",
       "EXCEPT", "MINUS", "ROWS", "RANGE", "GROUPS", "WINDOW", "QUALIFY")
-    def isKw(t: Tok, w: String) = t match {
-      case Ident(x) => x.equalsIgnoreCase(w)
-      case _ => false
-    }
     val out = Vector.newBuilder[Tok]
     var i = 0
     while (i < toks.length) {
-      if (isKw(toks(i), "ORDER")) {
-        var j = i + 1
-        while (j < toks.length &&
-            (toks(j).isInstanceOf[Ws] || toks(j).isInstanceOf[Comment])) j += 1
-        if (j < toks.length && isKw(toks(j), "BY")) {
+      val by = if (isKw(toks(i), "ORDER"))
+        nextSig(toks, i).filter(j => isKw(toks(j), "BY")) else None
+      by match {
+        case None => out += toks(i); i += 1
+        case Some(j) =>
           out ++= toks.slice(i, j + 1)
           i = j + 1
           var depth = 0
@@ -341,9 +340,7 @@ object SnowflakeRewriter {
             val hasNulls = itemSig.exists(t => isKw(t, "NULLS"))
             if (hasContent && !hasNulls) {
               val desc = itemSig.lastOption.exists(t => isKw(t, "DESC"))
-              var k = pending.length
-              while (k > 0 && (pending(k - 1).isInstanceOf[Ws] ||
-                  pending(k - 1).isInstanceOf[Comment])) k -= 1
+              val k = prevSig(pending, pending.length).fold(0)(_ + 1)
               out ++= pending.take(k)
               out ++= lex(if (desc) " NULLS FIRST" else " NULLS LAST")
               out ++= pending.drop(k)
@@ -381,8 +378,7 @@ object SnowflakeRewriter {
           }
           if (!done) flushItem()
           // the terminator token itself is left for the outer scan
-        } else { out += toks(i); i += 1 }
-      } else { out += toks(i); i += 1 }
+      }
     }
     out.result()
   }
@@ -509,19 +505,12 @@ object SnowflakeRewriter {
       val stops = Set("WHERE", "GROUP", "ORDER", "QUALIFY", "LIMIT",
         "HAVING", "UNION", "INTERSECT", "EXCEPT", "JOIN", "LEFT", "RIGHT",
         "FULL", "INNER", "CROSS", "ASOF", "WINDOW", "SEMI", "ANTI")
-      var r = sig(q) + 1
-      var depth = 0
-      var end = toks.length
-      while (r < toks.length && end == toks.length) {
-        toks(r) match {
-          case Op("(") => depth += 1
-          case Op(")") => if (depth == 0) end = r else depth -= 1
-          case Op(",") | Op(";") if depth == 0 => end = r
-          case Ident(w) if depth == 0 && stops.contains(w.toUpperCase) => end = r
-          case _ =>
-        }
-        if (end == toks.length) r += 1
+      val stop = indexTop(toks, sig(q) + 1) {
+        case Op(")") | Op(",") | Op(";") => true
+        case Ident(w) => stops.contains(w.toUpperCase)
+        case _ => false
       }
+      val end = if (stop < 0) toks.length else stop
       onToks = toks.slice(sig(q) + 1, end)
       consumedEnd = end - 1
     }
@@ -531,30 +520,21 @@ object SnowflakeRewriter {
 
     // MATCH_CONDITION must be a single top-level comparison; classify the
     // operand that references the right alias to pick the sort direction
-    val mcSig = significant(mcToks)
-    var opAt = -1
-    var depth = 0
-    mcToks.indices.foreach { x =>
-      mcToks(x) match {
-        case Op("(") => depth += 1
-        case Op(")") => depth -= 1
-        case Op(o) if depth == 0 && Set(">=", "<=", ">", "<").contains(o) =>
-          require(opAt < 0, "MATCH_CONDITION supports one comparison")
-          opAt = x
-        case _ =>
-      }
+    val sides = splitTop(mcToks, 0, mcToks.length) {
+      case Op(o) => Set(">=", "<=", ">", "<").contains(o)
+      case _ => false
     }
-    require(opAt >= 0 && mcSig.nonEmpty,
+    require(sides.length <= 2, "MATCH_CONDITION supports one comparison")
+    require(sides.length == 2 && significant(mcToks).nonEmpty,
       "MATCH_CONDITION must be a comparison like l.ts >= r.ts")
+    val opAt = sides.head._2
     val lhs = mcToks.slice(0, opAt)
     val rhs = mcToks.slice(opAt + 1, mcToks.length)
     val cmp = mcToks(opAt).text
     def refsAlias(ts: Vector[Tok]): Boolean = ts.indices.exists { x =>
       ts(x) match {
         case Ident(w) if w.equalsIgnoreCase(aName) =>
-          (x + 1) < ts.length && ts.drop(x + 1)
-            .find(t => !t.isInstanceOf[Ws] && !t.isInstanceOf[Comment])
-            .contains(Op("."))
+          nextSig(ts, x).exists(ts(_) == Op("."))
         case _ => false
       }
     }
@@ -699,17 +679,7 @@ object SnowflakeRewriter {
         else closeAt(kSig - 2)
       }
       close.flatMap { c =>
-        var d = 0
-        var j = c
-        var open = -1
-        while (j >= 0 && open < 0) {
-          toks(j) match {
-            case Op(")") => d += 1
-            case Op("(") => d -= 1; if (d == 0) open = j
-            case _ =>
-          }
-          j -= 1
-        }
+        val open = matchOpen(toks, c)
         val beforeSig = sig.lastIndexWhere(_ < open)
         val precededOk = open >= 0 && beforeSig >= 0 && {
           val t = toks(sig(beforeSig))
@@ -763,21 +733,10 @@ object SnowflakeRewriter {
     val onSig = significant(onToks)
     var keyPairs = Vector.empty[(String, String)]
     if (onSig.nonEmpty) {
-      // split on top-level AND
-      val conjuncts = Vector.newBuilder[Vector[Int]]
-      var cur = Vector.newBuilder[Int]
-      var depth = 0
-      onSig.foreach { i =>
-        onToks(i) match {
-          case Op("(") => depth += 1; cur += i
-          case Op(")") => depth -= 1; cur += i
-          case Ident(w) if depth == 0 && w.equalsIgnoreCase("AND") =>
-            conjuncts += cur.result(); cur = Vector.newBuilder[Int]
-          case _ => cur += i
-        }
-      }
-      conjuncts += cur.result()
-      val pairs = conjuncts.result().map { c =>
+      // split on top-level AND; each conjunct as its significant indices
+      val conjuncts = splitTop(onToks, 0, onToks.length)(isKw(_, "AND"))
+        .map { case (a, b) => (a until b).filter(j => isSig(onToks(j))) }
+      val pairs = conjuncts.map { c =>
         if (c.length != 7) None
         else (onToks(c(0)), onToks(c(1)), onToks(c(2)), onToks(c(3)),
             onToks(c(4)), onToks(c(5)), onToks(c(6))) match {
@@ -792,7 +751,7 @@ object SnowflakeRewriter {
         }
       }
       if (pairs.exists(_.isEmpty)) return None
-      keyPairs = pairs.flatten
+      keyPairs = pairs.flatten.toVector
     }
 
     // ── schemas (CTE-scope aware; probes are analyzed, never executed)
@@ -833,21 +792,12 @@ object SnowflakeRewriter {
       if (found >= 0) found else scopeStart
     }
     val blockEnd = {
-      var d = 0
-      var i = consumedEnd + 1
-      var found = -1
-      while (i < scopeEnd && found < 0) {
-        toks(i) match {
-          case Op("(") => d += 1
-          case Op(")") =>
-            d -= 1
-            if (d < 0) found = i
-          case Ident(w) if d == 0 && setOps(w.toUpperCase) => found = i
-          case _ =>
-        }
-        i += 1
+      val found = indexTop(toks, consumedEnd + 1) {
+        case Op(")") => true
+        case Ident(w) => setOps(w.toUpperCase)
+        case _ => false
       }
-      if (found >= 0) found else scopeEnd
+      if (found >= 0) math.min(found, scopeEnd) else scopeEnd
     }
 
     val rightRelSql = render(rel)
@@ -887,15 +837,12 @@ object SnowflakeRewriter {
         case Ident(w) if inScope(i) && (w.equalsIgnoreCase(aName) ||
             w.equalsIgnoreCase(laAlias)) =>
           val isRight = w.equalsIgnoreCase(aName)
-          var j = i + 1
-          while (j < arr.length && (arr(j).isInstanceOf[Ws] ||
-              arr(j).isInstanceOf[Comment])) j += 1
-          if (j >= arr.length || arr(j) != Op(".")) return None // re-bound?
-          if (isRight) {
-            var c = j + 1
-            while (c < arr.length && (arr(c).isInstanceOf[Ws] ||
-                arr(c).isInstanceOf[Comment])) c += 1
-            if (c < arr.length) arr(c) match {
+          val j = nextSig(arr, i).filter(arr(_) == Op("."))
+            .getOrElse(return None) // re-bound?
+          val member = nextSig(arr, j)
+          if (isRight) member match {
+            case None =>
+            case Some(c) => arr(c) match {
               case Ident(cn) if exposedOf.contains(cn.toLowerCase) =>
                 arr(i) = Ident(laAlias)
                 arr(c) = Ident(bq(exposedOf(cn.toLowerCase)))
@@ -929,12 +876,8 @@ object SnowflakeRewriter {
             // left alias as qualifier: skip the member (it may share the
             // alias's name); `la.*` would re-expand over the derived
             // table's right columns too — fall back
-            var c = j + 1
-            while (c < arr.length && (arr(c).isInstanceOf[Ws] ||
-                arr(c).isInstanceOf[Comment])) c += 1
-            if (c < arr.length && arr(c) == Op("*")) return None
-            if (c < arr.length && arr(c).isInstanceOf[Ident]) i = c
-            else i = j
+            if (member.exists(arr(_) == Op("*"))) return None
+            i = member.filter(arr(_).isInstanceOf[Ident]).getOrElse(j)
           }
         case _ =>
       }
@@ -1012,29 +955,19 @@ object SnowflakeRewriter {
     * shape: single-table FROM, `PRIOR x = y` / `y = PRIOR x` condition;
     * anything else fails loudly rather than mis-translating. */
   private def rewriteConnectBy(toks: Vector[Tok]): Vector[Tok] = {
-    // top-depth keyword index search
+    // index just past the last word of a keyword sequence starting at `at`
+    def afterKw(at: Int, nWords: Int): Int =
+      (1 until nWords).foldLeft(at)((k, _) => nextSig(toks, k).get) + 1
+    // top-depth search for a keyword sequence (comments may sit between)
     def findKw(words: Seq[String], from: Int): Int = {
-      var depth = 0; var j = from
-      while (j < toks.length) {
-        toks(j) match {
-          case Op("(") => depth += 1
-          case Op(")") => depth -= 1
-          case Ident(w) if depth == 0 && w.equalsIgnoreCase(words.head) =>
-            // match the full word sequence (skipping ws/comments)
-            var k = j; var ok = true
-            for (target <- words.tail) {
-              k += 1
-              while (k < toks.length && (toks(k).isInstanceOf[Ws] ||
-                     toks(k).isInstanceOf[Comment])) k += 1
-              ok &&= k < toks.length && (toks(k) match {
-                case Ident(x) => x.equalsIgnoreCase(target); case _ => false })
-            }
-            if (ok) return j
-          case _ =>
-        }
-        j += 1
+      def restFollows(j: Int): Boolean = {
+        var k = j
+        words.tail.forall(w =>
+          nextSig(toks, k).exists { n => k = n; isKw(toks(n), w) })
       }
-      -1
+      var j = topKeyword(toks, words.head, from)
+      while (j >= 0 && !restFollows(j)) j = topKeyword(toks, words.head, j + 1)
+      j
     }
     val cbIdx = findKw(Seq("CONNECT", "BY"), 0)
     if (cbIdx < 0) return toks
@@ -1053,18 +986,7 @@ object SnowflakeRewriter {
       if (candidates.isEmpty) toks.length else candidates.min
     }
     def span(a: Int, b: Int): String = render(toks.slice(a, b)).trim
-    // index just past a matched n-word keyword sequence starting at `at`
-    def afterKw(at: Int, nWords: Int): Int = {
-      var j = at; var words = 1
-      while (words < nWords) {
-        j += 1
-        while (j < toks.length && (toks(j).isInstanceOf[Ws] ||
-               toks(j).isInstanceOf[Comment])) j += 1
-        words += 1
-      }
-      j + 1
-    }
-    val proj = span(nextAfterKeyword(toks, 0, "SELECT"), fromIdx)
+    val proj = span(toks.indexWhere(isKw(_, "SELECT")) + 1, fromIdx)
     val table = span(fromIdx + 1, firstClause)
     require(!table.contains("(") && table.split("\\s+").length == 1,
       s"CONNECT BY supports a single-table FROM, got: $table")
@@ -1089,13 +1011,6 @@ object SnowflakeRewriter {
       SELECT t.*, __graft_cb.level + 1
       FROM $table t JOIN __graft_cb ON t.$childCol = __graft_cb.$parentCol)
     SELECT $proj FROM __graft_cb $tail""")
-  }
-
-  private def nextAfterKeyword(toks: Vector[Tok], from: Int, kw: String): Int = {
-    var j = from
-    while (j < toks.length && !(toks(j) match {
-      case Ident(w) => w.equalsIgnoreCase(kw); case _ => false })) j += 1
-    j + 1
   }
 
   // ── pass: SELECT TOP n <list> … → SELECT <list> … LIMIT n (per scope) ──
@@ -1131,12 +1046,7 @@ object SnowflakeRewriter {
   // Snowflake names an inline table's columns COLUMN1..n, Spark col1..n.
   // The projection keeps any alias column list after it positional. ──
   private def rewriteValuesColumns(toks: Vector[Tok]): Vector[Tok] = {
-    def prevSig(from: Int): Int = {
-      var k = from
-      while (k >= 0 && (toks(k).isInstanceOf[Ws] || toks(k).isInstanceOf[Comment])) k -= 1
-      k
-    }
-    def introduces(k: Int): Boolean = k >= 0 && (toks(k) match {
+    def introduces(k: Option[Int]): Boolean = k.exists(toks(_) match {
       case Ident(w) => Set("FROM", "JOIN", "USING").contains(w.toUpperCase)
       case _ => false
     })
@@ -1144,8 +1054,8 @@ object SnowflakeRewriter {
     /** (last token of the rows, column count, already parenthesized) of
       * the inline table whose VALUES keyword is at `i`. */
     def inlineTable(i: Int): Option[(Int, Int, Boolean)] = {
-      val p = prevSig(i - 1)
-      val inParens = p >= 0 && toks(p) == Op("(") && introduces(prevSig(p - 1))
+      val p = prevSig(toks, i)
+      val inParens = isOpen(p) && introduces(prevSig(toks, p.get))
       val first = nextSig(toks, i)
       if (!(inParens || introduces(p)) || !isOpen(first)) return None
       var end = matchParen(toks, first.get)
@@ -1156,7 +1066,7 @@ object SnowflakeRewriter {
         next = nextSig(toks, end)
       }
       // parenthesized form: the rows must fill the parens exactly
-      if (n > 0 && (!inParens || next.contains(matchParen(toks, p))))
+      if (n > 0 && (!inParens || next.contains(matchParen(toks, p.get))))
         Some((end, n, inParens))
       else None
     }
@@ -1193,27 +1103,22 @@ object SnowflakeRewriter {
       }
       // table context guard: previous significant token is a name, not an
       // operator/keyword — avoids clobbering a function named sample(x)
-      val prevOk = {
-        var k = out.length - 1
-        while (k >= 0 && (out(k).isInstanceOf[Ws] || out(k).isInstanceOf[Comment])) k -= 1
-        k >= 0 && (out(k) match {
-          case Ident(w) => !SqlKeywords.reserved.contains(w.toUpperCase)
-          case _: QIdent | Op(")") => true
+      def prevOk = prevSig(out, out.length).exists(k => out(k) match {
+        case Ident(w) => !SqlKeywords.reserved.contains(w.toUpperCase)
+        case _: QIdent | Op(")") => true
+        case _ => false
+      })
+      // optional method keyword, then the (…) spec
+      val open = if (!isSample || !prevOk) None else {
+        val m = nextSig(toks, i)
+        m.filter(toks(_) match {
+          case Ident(w) => Set("BERNOULLI", "ROW", "SYSTEM", "BLOCK")
+            .contains(w.toUpperCase)
           case _ => false
-        })
+        }).fold(m)(nextSig(toks, _)).filter(toks(_) == Op("("))
       }
-      if (isSample && prevOk) {
-        var j = i + 1
-        while (j < toks.length && toks(j).isInstanceOf[Ws]) j += 1
-        // optional method keyword
-        toks.lift(j) match {
-          case Some(Ident(m)) if Set("BERNOULLI", "ROW", "SYSTEM", "BLOCK")
-              .contains(m.toUpperCase) =>
-            j += 1
-            while (j < toks.length && toks(j).isInstanceOf[Ws]) j += 1
-          case _ =>
-        }
-        if (j < toks.length && toks(j) == Op("(")) {
+      open match {
+        case Some(j) =>
           val close = matchParen(toks, j)
           val args = render(toks.slice(j + 1, close)).trim
           val unit = if (args.toUpperCase.contains("ROWS")) args
@@ -1221,8 +1126,8 @@ object SnowflakeRewriter {
           out += Ws(" ")
           out ++= lex(s"TABLESAMPLE ($unit)")
           i = close + 1
-        } else { out += toks(i); i += 1 }
-      } else { out += toks(i); i += 1 }
+        case None => out += toks(i); i += 1
+      }
     }
     out.toVector
   }
@@ -1246,11 +1151,9 @@ object SnowflakeRewriter {
       }
       if (fnKind.nonEmpty) {
         // swallow an immediately preceding LATERAL and/or comma in `out`
-        def dropTrailing(pred: Tok => Boolean): Unit = {
-          var k = out.length - 1
-          while (k >= 0 && out(k).isInstanceOf[Ws]) k -= 1
-          if (k >= 0 && pred(out(k))) out.remove(k, out.length - k)
-        }
+        def dropTrailing(pred: Tok => Boolean): Unit =
+          prevSig(out, out.length).filter(k => pred(out(k)))
+            .foreach(k => out.remove(k, out.length - k))
         dropTrailing { case Ident(w) => w.equalsIgnoreCase("LATERAL"); case _ => false }
         dropTrailing { case Op(",") => true; case _ => false }
         val open = nextSig(toks, i).get
@@ -1262,22 +1165,16 @@ object SnowflakeRewriter {
               case Ident(w) => w.equalsIgnoreCase("INPUT"); case _ => false }) &&
             inner(sigI(1)) == Op("=>"))
           inner = inner.drop(sigI(1) + 1)
-        // optional alias after the close paren
-        var j = close + 1
-        while (j < toks.length && toks(j).isInstanceOf[Ws]) j += 1
-        var alias = "f"
-        var consumedAlias = false
-        if (j < toks.length) toks(j) match {
-          case Ident(a) if a.equalsIgnoreCase("AS") =>
-            var j2 = j + 1
-            while (j2 < toks.length && toks(j2).isInstanceOf[Ws]) j2 += 1
-            toks.lift(j2) match {
-              case Some(Ident(a2)) => alias = a2; j = j2; consumedAlias = true
-              case _ =>
+        // optional alias after the close paren: (last index consumed, alias)
+        val (end, alias) = nextSig(toks, close).map(j => (j, toks(j))) match {
+          case Some((j, Ident(a))) if a.equalsIgnoreCase("AS") =>
+            nextSig(toks, j).map(j2 => (j2, toks(j2))) match {
+              case Some((j2, Ident(a2))) => (j2, a2)
+              case _ => (close, "f")
             }
-          case Ident(a) if !SqlKeywords.reserved.contains(a.toUpperCase) =>
-            alias = a; consumedAlias = true
-          case _ =>
+          case Some((j, Ident(a))) if !SqlKeywords.reserved.contains(a.toUpperCase) =>
+            (j, a)
+          case _ => (close, "f")
         }
         out += Ws(" ")
         if (fnKind == "FLATTEN")
@@ -1296,7 +1193,7 @@ object SnowflakeRewriter {
             s"split((${args(0)}), concat('\\\\Q', (${args(1)}), '\\\\E')), " +
             s"(v, i) -> named_struct('seq', 1, 'index', i + 1, 'value', v))) $alias")
         }
-        i = if (consumedAlias) j + 1 else close + 1
+        i = end + 1
       } else { out += toks(i); i += 1 }
     }
     out.toVector
@@ -1328,37 +1225,16 @@ object SnowflakeRewriter {
   }
 
   private def rewriteQualifyTop(toks: Vector[Tok]): Vector[Tok] = {
-    val sig = significant(toks)
-    var depth = 0
-    var qualifyAt = -1
-    var fromAt = -1
-    sig.foreach { idx =>
-      toks(idx) match {
-        case Op("(") => depth += 1
-        case Op(")") => depth -= 1
-        case Ident(w) if depth == 0 && w.equalsIgnoreCase("FROM") && fromAt < 0 =>
-          fromAt = idx
-        case Ident(w) if depth == 0 && w.equalsIgnoreCase("QUALIFY") =>
-          qualifyAt = idx
-        case _ =>
-      }
-    }
+    val qualifyAt = topKeyword(toks, "QUALIFY")
+    val fromAt = topKeyword(toks, "FROM")
     if (qualifyAt < 0 || fromAt < 0) return toks
     // predicate: QUALIFY .. until depth-0 ORDER/LIMIT/OFFSET or end
     val stopKw = Set("ORDER", "LIMIT", "OFFSET")
-    var depth2 = 0
-    var predEnd = toks.length
-    var k = qualifyAt + 1
-    while (k < toks.length && predEnd == toks.length) {
-      toks(k) match {
-        case Op("(") => depth2 += 1
-        case Op(")") => depth2 -= 1
-        case Ident(w) if depth2 == 0 && stopKw.contains(w.toUpperCase) =>
-          predEnd = k
-        case _ =>
-      }
-      k += 1
+    val stop = indexTop(toks, qualifyAt + 1) {
+      case Ident(w) => stopKw.contains(w.toUpperCase)
+      case _ => false
     }
+    val predEnd = if (stop < 0) toks.length else stop
     val pred = toks.slice(qualifyAt + 1, predEnd)
     val head = toks.slice(0, fromAt)          // SELECT <list>
     val mid  = toks.slice(fromAt, qualifyAt)  // FROM ... (pre-QUALIFY)
@@ -1390,7 +1266,7 @@ object SnowflakeRewriter {
             strTok match {
               case Some(s) =>
                 out += Op("(")
-                out ++= lex(rewrite(s.value))
+                out ++= rewriteTokens(lex(s.value))
                 out += Op(")")
               case None => out ++= toks.slice(i, close + 1)
             }
@@ -1456,17 +1332,7 @@ object SnowflakeRewriter {
         // grab the column expression already emitted to `out`
         val exprStart = out(out.length - 1) match {
           case Op(")") => // balance back
-            var depth = 0
-            var k = out.length - 1
-            var found = -1
-            while (k >= 0 && found < 0) {
-              out(k) match {
-                case Op(")") => depth += 1
-                case Op("(") => depth -= 1; if (depth == 0) found = k
-                case _ =>
-              }
-              k -= 1
-            }
+            val found = matchOpen(out, out.length - 1)
             // include a function name directly before '('
             if (found > 0 && (out(found - 1) match {
               case _: Ident | _: QIdent => true; case _ => false })) found - 1
@@ -1500,90 +1366,38 @@ object SnowflakeRewriter {
   // ── pass: expr::type → CAST(expr AS type) ──────────────────────────────
   private def rewriteCasts(toks: Vector[Tok]): Vector[Tok] = {
     val out = ArrayBuffer.empty[Tok]
+    def isName(t: Tok) = t.isInstanceOf[Ident] || t.isInstanceOf[QIdent]
+    // a call `f(…)` or group `(…)` ending at `close`
+    def callStart(close: Int): Int = {
+      val open = matchOpen(out, close)
+      if (open > 0 && isName(out(open - 1))) open - 1 else open
+    }
+    // first index of the operand whose last token is at `last`
+    def operandStart(last: Int): Int = out(last) match {
+      case Op(")") =>
+        val start = callStart(last)
+        // ordered-set aggregate: fn(args) WITHIN GROUP (ORDER BY …)::t
+        // — the popped group is the WITHIN GROUP clause; extend the
+        // operand back through the aggregate call
+        (for {
+          g <- prevSig(out, start) if isKw(out(g), "GROUP")
+          w <- prevSig(out, g) if isKw(out(w), "WITHIN")
+          c <- prevSig(out, w) if out(c) == Op(")")
+        } yield callStart(c)).filter(_ >= 0).getOrElse(math.max(start, 0))
+      case _: Ident | _: QIdent => // identifier, possibly qualified a.b
+        var k = last
+        while (k - 2 >= 0 && out(k - 1) == Op(".") && isName(out(k - 2))) k -= 2
+        k
+      case _ => last // a literal or any other single token
+    }
     var i = 0
     while (i < toks.length) {
-      if (toks(i) == Op("::")) {
-        // type: ident [ '(' args ')' ]
-        var j = i + 1
-        while (j < toks.length && toks(j).isInstanceOf[Ws]) j += 1
-        if (j < toks.length && toks(j).isInstanceOf[Ident]) {
-          val tname = toks(j).text.toUpperCase
-          var typeEnd = j + 1
-          var args = ""
-          if (typeEnd < toks.length && toks(typeEnd) == Op("(")) {
-            val close = matchParen(toks, typeEnd)
-            args = render(toks.slice(typeEnd, close + 1))
-            typeEnd = close + 1
-          }
-          // DOUBLE PRECISION
-          if (tname == "DOUBLE" && typeEnd + 1 < toks.length &&
-              toks(typeEnd).isInstanceOf[Ws] &&
-              toks(typeEnd + 1).text.equalsIgnoreCase("PRECISION"))
-            typeEnd += 2
-          val (mapped, keepArgs) =
-            typeMap.getOrElse(tname, (tname, args.nonEmpty))
-          val typeStr = if (keepArgs && args.nonEmpty) mapped + args
-            else if (mapped == "DECIMAL" && args.isEmpty) "DECIMAL(38,0)"
-            else mapped
-          // pop the preceding atom off `out`
-          var exprStart = out.length - 1
-          while (exprStart >= 0 && out(exprStart).isInstanceOf[Ws]) exprStart -= 1
-          out(exprStart) match {
-            case Op(")") =>
-              var depth = 0
-              var k = exprStart
-              var found = -1
-              while (k >= 0 && found < 0) {
-                out(k) match {
-                  case Op(")") => depth += 1
-                  case Op("(") => depth -= 1; if (depth == 0) found = k
-                  case _ =>
-                }
-                k -= 1
-              }
-              if (found > 0 && (out(found - 1) match {
-                case _: Ident | _: QIdent => true; case _ => false }))
-                exprStart = found - 1
-              else exprStart = found
-              // ordered-set aggregate: fn(args) WITHIN GROUP (ORDER BY …)::t
-              // — the popped group is the WITHIN GROUP clause; extend the
-              // operand back through the aggregate call
-              var b = exprStart - 1
-              while (b >= 0 && out(b).isInstanceOf[Ws]) b -= 1
-              if (b >= 1 && out(b).text.equalsIgnoreCase("GROUP")) {
-                var b2 = b - 1
-                while (b2 >= 0 && out(b2).isInstanceOf[Ws]) b2 -= 1
-                if (b2 >= 0 && out(b2).text.equalsIgnoreCase("WITHIN")) {
-                  var b3 = b2 - 1
-                  while (b3 >= 0 && out(b3).isInstanceOf[Ws]) b3 -= 1
-                  if (b3 >= 0 && out(b3) == Op(")")) {
-                    var depth2 = 0; var k2 = b3; var f2 = -1
-                    while (k2 >= 0 && f2 < 0) {
-                      out(k2) match {
-                        case Op(")") => depth2 += 1
-                        case Op("(") => depth2 -= 1; if (depth2 == 0) f2 = k2
-                        case _ =>
-                      }
-                      k2 -= 1
-                    }
-                    if (f2 > 0 && (out(f2 - 1) match {
-                      case _: Ident | _: QIdent => true; case _ => false }))
-                      exprStart = f2 - 1
-                    else if (f2 >= 0) exprStart = f2
-                  }
-                }
-              }
-            case _: Ident | _: QIdent =>
-              var k = exprStart
-              while (k - 2 >= 0 && out(k - 1) == Op(".") &&
-                     (out(k - 2) match {
-                       case _: Ident | _: QIdent => true; case _ => false }))
-                k -= 2
-              exprStart = k
-            case _: Str | _: Num => // single literal
-              exprStart = exprStart
-            case _ => // fallback: single token
-          }
+      val typeName = if (toks(i) == Op("::"))
+        nextSig(toks, i).filter(toks(_).isInstanceOf[Ident]) else None
+      typeName.flatMap(j => prevSig(out, out.length).map(j -> _)) match {
+        case Some((j, last)) =>
+          val (typeStr, typeEnd) = typeAt(toks, j)
+          val exprStart = operandStart(last)
           val expr = out.slice(exprStart, out.length).toVector
           out.remove(exprStart, out.length - exprStart)
           out += Ident("CAST")
@@ -1595,10 +1409,64 @@ object SnowflakeRewriter {
           out ++= lex(typeStr)
           out += Op(")")
           i = typeEnd
-        } else { out += toks(i); i += 1 }
-      } else { out += toks(i); i += 1 }
+        case None => out += toks(i); i += 1
+      }
     }
     out.toVector
+  }
+
+  /** The Spark type for the Snowflake type name at `j` — with its `(…)`
+    * arguments and a DOUBLE PRECISION suffix — and the index just past
+    * it. Names outside the type map pass through with their arguments. */
+  private def typeAt(toks: Vector[Tok], j: Int): (String, Int) = {
+    val tname = toks(j).text.toUpperCase
+    var end = j + 1
+    var args = ""
+    if (end < toks.length && toks(end) == Op("(")) {
+      val close = matchParen(toks, end)
+      args = render(toks.slice(end, close + 1))
+      end = close + 1
+    }
+    if (tname == "DOUBLE")
+      nextSig(toks, end - 1).filter(k => isKw(toks(k), "PRECISION"))
+        .foreach(k => end = k + 1)
+    val (mapped, keepArgs) = typeMap.getOrElse(tname, (tname, args.nonEmpty))
+    val typeStr = if (keepArgs && args.nonEmpty) mapped + args
+      else if (mapped == "DECIMAL" && args.isEmpty) "DECIMAL(38,0)"
+      else mapped
+    (typeStr, end)
+  }
+
+  /** A Snowflake column type (`NUMBER(10,2)`, `VARCHAR(20) NOT NULL`, …)
+    * as Spark DDL type text; names outside the type map pass through. */
+  def sparkType(typeSql: String): String = sparkTypeOf(lex(typeSql))
+
+  private def sparkTypeOf(toks: Vector[Tok]): String = {
+    val sig = significant(toks)
+    val notNull = sig.length >= 3 && isKw(toks(sig(sig.length - 2)), "NOT") &&
+      isKw(toks(sig.last), "NULL")
+    val t = if (notNull) toks.take(sig(sig.length - 2)) else toks
+    sig.headOption.filter(j => typeMap.contains(t(j).text.toUpperCase)) match {
+      case Some(j) =>
+        val (typeStr, end) = typeAt(t, j)
+        (typeStr + render(t.drop(end))).trim
+      case None => render(t).trim
+    }
+  }
+
+  /** `(name TYPE, …)` column definitions → (name as written, Spark type)
+    * pairs; names may be quoted and hold commas or spaces. */
+  def columnDefs(defs: String): Seq[(String, String)] = {
+    val toks = lex(defs)
+    val open = nextSig(toks, -1).filter(toks(_) == Op("(")).getOrElse(
+      throw new IllegalArgumentException(s"bad column list: $defs"))
+    splitArgs(toks, open, matchParen(toks, open)).map { case (a, b) =>
+      val name = nextSig(toks, a - 1).filter(_ < b)
+      val typeFrom = name.flatMap(nextSig(toks, _)).filter(_ < b).getOrElse(
+        throw new IllegalArgumentException(
+          s"bad column def: ${render(toks.slice(a, b)).trim}"))
+      (toks(name.get).text, sparkTypeOf(toks.slice(typeFrom, b)))
+    }
   }
 
   // ── pass: CAST(x AS <snowflake type>) type-name mapping ────────────────
@@ -1630,24 +1498,12 @@ object SnowflakeRewriter {
           lastSigWasCast = false
           out += t
         case Ident(x) if inCastAs =>
-          val up = x.toUpperCase
-          typeMap.get(up) match {
-            case Some((mapped, keepArgs)) =>
-              var args = ""
-              var skipTo = i + 1
-              if (skipTo < toks.length && toks(skipTo) == Op("(")) {
-                val close = matchParen(toks, skipTo)
-                args = render(toks.slice(skipTo, close + 1))
-                skipTo = close + 1
-              }
-              val typeStr = if (keepArgs && args.nonEmpty) mapped + args
-                else if (mapped == "DECIMAL" && args.isEmpty) "DECIMAL(38,0)"
-                else mapped
-              out ++= lex(typeStr)
-              inCastAs = false
-              i = skipTo - 1
-            case None => out += t
-          }
+          if (typeMap.contains(x.toUpperCase)) {
+            val (typeStr, end) = typeAt(toks, i)
+            out ++= lex(typeStr)
+            inCastAs = false
+            i = end - 1
+          } else out += t
           lastSigWasCast = false
         case _: Ws | _: Comment => out += t
         case _ =>
@@ -2428,50 +2284,31 @@ object SnowflakeRewriter {
             // nulls-highest rule (ASC → last, DESC → first) unless
             // explicit.
             case class WgKey(sql: String, desc: Boolean, nullsLast: Boolean)
-            val keys: Seq[WgKey] = {
-              val parts = Seq.newBuilder[Vector[Tok]]
-              var depth = 0; var st = 0
-              keyToks.indices.foreach { x =>
-                keyToks(x) match {
-                  case Op("(") => depth += 1
-                  case Op(")") => depth -= 1
-                  case Op(",") if depth == 0 =>
-                    parts += keyToks.slice(st, x); st = x + 1
-                  case _ =>
-                }
+            val keyRanges = splitTop(keyToks, 0, keyToks.length)(_ == Op(","))
+            val keys: Seq[WgKey] = keyRanges.map { r =>
+              var p = keyToks.slice(r._1, r._2)
+              def lastIs(w: String): Boolean =
+                significant(p).lastOption.exists(j => isKw(p(j), w))
+              def dropLast(): Unit = { p = p.take(significant(p).last) }
+              // FIRST/LAST is only the NULLS modifier when the token
+              // before it IS the word NULLS — a sort key that is a
+              // column literally named `first` or `last` (ORDER BY
+              // last) must stay part of the key expression
+              // (ADVICE r13 #2)
+              def secondLastIs(w: String): Boolean =
+                significant(p).dropRight(1).lastOption.exists(j => isKw(p(j), w))
+              var explicitNulls: Option[Boolean] = None // Some(nullsLast)
+              if ((lastIs("FIRST") || lastIs("LAST")) &&
+                  secondLastIs("NULLS")) {
+                val isLast = lastIs("LAST")
+                dropLast(); dropLast()
+                explicitNulls = Some(isLast)
               }
-              parts += keyToks.slice(st, keyToks.length)
-              parts.result().map { p0 =>
-                var p = p0
-                def lastIs(w: String): Boolean = {
-                  val s = significant(p)
-                  s.nonEmpty && (p(s.last) match {
-                    case Ident(x) => x.equalsIgnoreCase(w); case _ => false })
-                }
-                def dropLast(): Unit = { p = p.take(significant(p).last) }
-                // FIRST/LAST is only the NULLS modifier when the token
-                // before it IS the word NULLS — a sort key that is a
-                // column literally named `first` or `last` (ORDER BY
-                // last) must stay part of the key expression
-                // (ADVICE r13 #2)
-                def secondLastIs(w: String): Boolean = {
-                  val s = significant(p)
-                  s.length >= 2 && (p(s(s.length - 2)) match {
-                    case Ident(x) => x.equalsIgnoreCase(w); case _ => false })
-                }
-                var explicitNulls: Option[Boolean] = None // Some(nullsLast)
-                if ((lastIs("FIRST") || lastIs("LAST")) &&
-                    secondLastIs("NULLS")) {
-                  val isLast = lastIs("LAST")
-                  dropLast(); dropLast()
-                  explicitNulls = Some(isLast)
-                }
-                var desc = false
-                if (lastIs("DESC")) { desc = true; dropLast() }
-                else if (lastIs("ASC")) dropLast()
-                WgKey(render(rewriteFunctions(p)).trim, desc,
-                  explicitNulls.getOrElse(!desc))
-              }
+              var desc = false
+              if (lastIs("DESC")) { desc = true; dropLast() }
+              else if (lastIs("ASC")) dropLast()
+              WgKey(render(rewriteFunctions(p)).trim, desc,
+                explicitNulls.getOrElse(!desc))
             }
             // fast struct-sort path when one whole-list direction with
             // default null policy expresses the order; comparator path
@@ -2645,18 +2482,9 @@ object SnowflakeRewriter {
               s"cos(radians($lat1)) * cos(radians($lat2)) * " +
               s"power(sin(radians(($lon2) - ($lon1)) / 2), 2))))")
             i = close + 1
-          } else if (up == "POSITION" && {
+          } else if (up == "POSITION" &&
               // top-level IN between the parens (not inside a nested call)
-              var depth = 0; var found = false
-              toks.slice(open + 1, close).foreach {
-                case Op("(") => depth += 1
-                case Op(")") => depth -= 1
-                case Ident(w) if depth == 0 && w.equalsIgnoreCase("IN") =>
-                  found = true
-                case _ =>
-              }
-              found
-            }) {
+              topKeyword(toks.slice(open + 1, close), "IN") >= 0) {
             // SQL-standard POSITION(needle IN haystack) parses natively in
             // Spark; only the comma-argument Snowflake form needs LOCATE.
             out += toks(i); i += 1
@@ -2677,66 +2505,5 @@ object SnowflakeRewriter {
       }
     }
     out.toVector
-  }
-
-  // ── helpers ────────────────────────────────────────────────────────────
-  private def nextSig(toks: Vector[Tok], from: Int): Option[Int] = {
-    var j = from + 1
-    while (j < toks.length) {
-      toks(j) match {
-        case _: Ws | _: Comment => j += 1
-        case _ => return Some(j)
-      }
-    }
-    None
-  }
-
-  private def matchParen(toks: Vector[Tok], open: Int): Int = {
-    var depth = 0
-    var j = open
-    while (j < toks.length) {
-      toks(j) match {
-        case Op("(") => depth += 1
-        case Op(")") => depth -= 1; if (depth == 0) return j
-        case _ =>
-      }
-      j += 1
-    }
-    toks.length - 1
-  }
-
-  private def matchBracket(toks: Vector[Tok], open: Int): Int = {
-    var depth = 0
-    var j = open
-    while (j < toks.length) {
-      toks(j) match {
-        case Op("[") => depth += 1
-        case Op("]") => depth -= 1; if (depth == 0) return j
-        case _ =>
-      }
-      j += 1
-    }
-    toks.length - 1
-  }
-
-  /** Token ranges of each top-level argument between open and close parens. */
-  private def splitArgs(toks: Vector[Tok], open: Int, close: Int): Seq[(Int, Int)] = {
-    val ranges = ArrayBuffer.empty[(Int, Int)]
-    var depth = 0
-    var start = open + 1
-    var j = open
-    while (j <= close) {
-      toks(j) match {
-        case Op("(") => depth += 1
-        case Op(")") =>
-          depth -= 1
-          if (depth == 0 && j == close && start < j) ranges += ((start, j))
-        case Op(",") if depth == 1 =>
-          ranges += ((start, j)); start = j + 1
-        case _ =>
-      }
-      j += 1
-    }
-    ranges.toSeq
   }
 }

@@ -44,26 +44,18 @@ object SnowflakeTypes {
       ColumnMeta(f.name, lt, p, s, f.nullable)
     }
 
-  /** Full wire payload: Snowflake's `rowsetBase64` — a base64 Arrow IPC
-    * stream of the (wire-normalized) result, plus rowtype metadata
-    * (parity with `universql/protocol/snowflake.py:223-243`). Timestamps
-    * go out as Snowflake's `{epoch, fraction}` structs and every Arrow
-    * field carries Snowflake column metadata, matching
-    * `universql/protocol/utils.py:137-249`. rowtype reflects the ORIGINAL
-    * logical schema (a struct-encoded timestamp is still TIMESTAMP_*). */
-  def toRowsetBase64(df: DataFrame): (String, Seq[ColumnMeta]) = {
-    val wire = toSnowflakeWire(df)
-    val meta = df.schema.fields.map(f => f.name -> wireFieldMetadata(f)).toMap
-    val bytes = org.apache.spark.sql.GraftArrow.toArrowIpcStream(wire, meta)
-    (java.util.Base64.getEncoder.encodeToString(bytes), rowType(df))
-  }
-
-  /** Chunked wire payload for large results (Snowflake ships these as an
-    * inline first chunk + addressable chunk downloads): the first chunk
-    * comes back base64-inline, the rest spill to temp files ONE AT A
-    * TIME as they stream off `executeToIterator` — the server never
-    * holds more than one chunk of a large result in memory. Each rest
-    * entry is `(rowCount, file)`. */
+  /** Wire payload: Snowflake's `rowsetBase64` — base64 Arrow IPC streams
+    * of the (wire-normalized) result, plus rowtype metadata (parity with
+    * `universql/protocol/snowflake.py:223-243`). Timestamps go out as
+    * Snowflake's `{epoch, fraction}` structs and every Arrow field carries
+    * Snowflake column metadata, matching `universql/protocol/utils.py:137-249`;
+    * rowtype reflects the ORIGINAL logical schema (a struct-encoded
+    * timestamp is still TIMESTAMP_*). Results ship the way Snowflake
+    * ships large ones, as an inline first chunk + addressable chunk
+    * downloads: the first chunk comes back base64-inline, the rest spill
+    * to temp files ONE AT A TIME as they stream off `executeToIterator` —
+    * the server never holds more than one chunk of a large result in
+    * memory. Each rest entry is `(rowCount, file)`. */
   def toRowsetChunked(df: DataFrame, maxRowsPerChunk: Int,
       spillDir: Option[java.nio.file.Path] = None)
       : (String, Seq[ColumnMeta], Seq[(Long, java.nio.file.Path)]) = {

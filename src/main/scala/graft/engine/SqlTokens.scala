@@ -116,12 +116,181 @@ object SqlTokens {
 
   def render(toks: Seq[Tok]): String = toks.map(_.text).mkString
 
+  // ── token helpers: the one quoting, comment and nesting rule ───────────
+  // Every pass over SQL text works on this lexer's tokens, so a quote,
+  // a comment or a nested paren means the same thing everywhere:
+  // whitespace and comments are never significant, and `(`/`)` nest.
+
+  type Toks = scala.collection.IndexedSeq[Tok]
+
+  /** Not whitespace and not a comment. */
+  def isSig(t: Tok): Boolean = t match {
+    case _: Ws | _: Comment => false
+    case _ => true
+  }
+
+  /** An unquoted identifier or keyword equal to `word`, any case. */
+  def isKw(t: Tok, word: String): Boolean = t match {
+    case Ident(w) => w.equalsIgnoreCase(word)
+    case _ => false
+  }
+
   /** Indices of non-whitespace/comment tokens. */
-  def significant(toks: Vector[Tok]): Vector[Int] =
-    toks.indices.toVector.filter(i => toks(i) match {
-      case _: Ws | _: Comment => false
-      case _ => true
-    })
+  def significant(toks: Toks): Vector[Int] =
+    toks.indices.toVector.filter(i => isSig(toks(i)))
+
+  /** Index of the first significant token after `from`. */
+  def nextSig(toks: Toks, from: Int): Option[Int] = {
+    var j = from + 1
+    while (j < toks.length && !isSig(toks(j))) j += 1
+    if (j < toks.length) Some(j) else None
+  }
+
+  /** Index of the last significant token before `before`. */
+  def prevSig(toks: Toks, before: Int): Option[Int] = {
+    var j = before - 1
+    while (j >= 0 && !isSig(toks(j))) j -= 1
+    if (j >= 0) Some(j) else None
+  }
+
+  /** Index of the `(` that opens a call or group right after token `i`. */
+  def parenAfter(toks: Toks, i: Int): Option[Int] =
+    nextSig(toks, i).filter(j => toks(j) == Op("("))
+
+  /** Index of the `)` matching the `(` at `open`; the last index when the
+    * parens never balance. */
+  def matchParen(toks: Toks, open: Int): Int = matchClose(toks, open, "(", ")")
+
+  /** Index of the `]` matching the `[` at `open`; the last index when the
+    * brackets never balance. */
+  def matchBracket(toks: Toks, open: Int): Int = matchClose(toks, open, "[", "]")
+
+  private def matchClose(toks: Toks, open: Int, o: String, c: String): Int = {
+    var depth = 0
+    var j = open
+    while (j < toks.length) {
+      toks(j) match {
+        case Op(`o`) => depth += 1
+        case Op(`c`) => depth -= 1; if (depth == 0) return j
+        case _ =>
+      }
+      j += 1
+    }
+    toks.length - 1
+  }
+
+  /** Index of the `(` matching the `)` at `close`; -1 when none. */
+  def matchOpen(toks: Toks, close: Int): Int = {
+    var depth = 0
+    var j = close
+    while (j >= 0) {
+      toks(j) match {
+        case Op(")") => depth += 1
+        case Op("(") => depth -= 1; if (depth == 0) return j
+        case _ =>
+      }
+      j -= 1
+    }
+    -1
+  }
+
+  /** Index of the first token at or after `from`, at the paren depth the
+    * search starts at, that satisfies `p`; -1 when none. A `)` closing
+    * the starting depth is offered to `p` too, and the search goes on
+    * past it at a depth `p` never sees. */
+  def indexTop(toks: Toks, from: Int = 0)(p: Tok => Boolean): Int = {
+    var depth = 0
+    var j = from
+    while (j < toks.length) {
+      val t = toks(j)
+      if (depth == 0 && p(t)) return j
+      t match {
+        case Op("(") => depth += 1
+        case Op(")") => depth -= 1
+        case _ =>
+      }
+      j += 1
+    }
+    -1
+  }
+
+  /** Index of the first top-level keyword `word` at or after `from`; -1
+    * when none. Strings, quoted identifiers, comments and nested parens
+    * never match. */
+  def topKeyword(toks: Toks, word: String, from: Int = 0): Int =
+    indexTop(toks, from)(isKw(_, word))
+
+  /** Token ranges `[start, end)` of `toks[from, until)` split at every
+    * top-level token satisfying `isSep`. Empty pieces are kept. */
+  def splitTop(toks: Toks, from: Int, until: Int)
+      (isSep: Tok => Boolean): Seq[(Int, Int)] = {
+    val out = ArrayBuffer.empty[(Int, Int)]
+    var depth = 0
+    var start = from
+    var j = from
+    while (j < until) {
+      toks(j) match {
+        case Op("(") => depth += 1
+        case Op(")") => depth -= 1
+        case t if depth == 0 && isSep(t) => out += ((start, j)); start = j + 1
+        case _ =>
+      }
+      j += 1
+    }
+    out += ((start, until))
+    out.toSeq
+  }
+
+  /** Token ranges of each top-level argument between the parens at `open`
+    * and `close`. A list with no significant token has no arguments;
+    * otherwise every comma separates two, empty ones included. */
+  def splitArgs(toks: Toks, open: Int, close: Int): Seq[(Int, Int)] =
+    if (!(open + 1 until close).exists(j => isSig(toks(j)))) Nil
+    else splitTop(toks, open + 1, close)(_ == Op(","))
+
+  /** `(inside) after` → Some((inside, after)), split at the paren matching
+    * the one `sql` opens with; None when it opens with anything else. */
+  def leadingGroup(sql: String): Option[(String, String)] = {
+    val toks = lex(sql)
+    parenAfter(toks, -1).map { open =>
+      val close = matchParen(toks, open)
+      (render(toks.slice(open + 1, close)), render(toks.drop(close + 1)))
+    }
+  }
+
+  /** Replaces every call `name(args)` whose upper-cased name is in
+    * `names` by `f(name, args)`; calls for which `f` returns None stay as
+    * they are. A qualified call (`information_schema.name(…)`) is
+    * replaced together with its qualifier. */
+  def replaceCalls(toks: Vector[Tok], names: Set[String])
+      (f: (String, Vector[Tok]) => Option[Seq[Tok]]): Vector[Tok] = {
+    val out = ArrayBuffer.empty[Tok]
+    var i = 0
+    while (i < toks.length) {
+      val call = toks(i) match {
+        case Ident(w) if names.contains(w.toUpperCase) =>
+          parenAfter(toks, i).flatMap { open =>
+            val close = matchParen(toks, open)
+            f(w.toUpperCase, toks.slice(open + 1, close)).map(_ -> close)
+          }
+        case _ => None
+      }
+      call match {
+        case Some((rep, close)) =>
+          def qualifierBefore(j: Int): Option[Int] =
+            prevSig(out, j).filter(out(_) == Op("."))
+              .flatMap(prevSig(out, _)).filter(out(_).isInstanceOf[Ident])
+          var start = out.length
+          var q = qualifierBefore(start)
+          while (q.isDefined) { start = q.get; q = qualifierBefore(start) }
+          out.remove(start, out.length - start)
+          out ++= rep
+          i = close + 1
+        case None => out += toks(i); i += 1
+      }
+    }
+    out.toVector
+  }
 
   /** Split a statement batch on top-level semicolons. */
   def splitStatements(sql: String): Seq[String] = {

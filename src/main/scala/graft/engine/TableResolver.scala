@@ -20,10 +20,20 @@ object TableResolver {
   // FROM <kw> ( … ) constructs that are not table names
   private val nonTables = Set("LATERAL", "UNNEST", "VALUES", "TABLE")
 
-  def resolveAndSubstitute(sql: String, session: GraftSession): String = {
-    val toks = lex(sql)
-    val sig = significant(toks)
-    val cteAliases = collectCteAliases(toks, sig)
+  def resolveAndSubstitute(sql: String, session: GraftSession): String =
+    render(resolveTokens(lex(sql), session))
+
+  /** Table resolution over an already-lexed statement. */
+  def resolveTokens(toks: Vector[Tok], session: GraftSession): Vector[Tok] = {
+    val cteAliases = collectCteAliases(toks)
+    // `kw ( … )` right after token `at`: (keyword, open, close)
+    def clauseAfter(at: Int, kws: String*): Option[(String, Int, Int)] =
+      for {
+        k <- nextSig(toks, at) if kws.exists(isKw(toks(k), _))
+        open <- parenAfter(toks, k)
+        close = matchParen(toks, open) if toks(close) == Op(")")
+      } yield (toks(k).text.toUpperCase, open, close)
+    def inside(open: Int, close: Int): String = render(toks.slice(open + 1, close))
     val out = ArrayBuffer.empty[Tok]
     var i = 0
     while (i < toks.length) {
@@ -35,9 +45,10 @@ object TableResolver {
           var expectTable = true
           var j = i + 1
           while (expectTable) {
-            // copy whitespace
-            while (j < toks.length && (toks(j).isInstanceOf[Ws] ||
-                   toks(j).isInstanceOf[Comment])) { out += toks(j); j += 1 }
+            // copy whitespace and comments
+            val next = nextSig(toks, j - 1).getOrElse(toks.length)
+            out ++= toks.slice(j, next)
+            j = next
             if (j >= toks.length) expectTable = false
             else toks(j) match {
               case Ident(w) if nonTables.contains(w.toUpperCase) || w.toUpperCase == "SELECT" =>
@@ -61,101 +72,28 @@ object TableResolver {
                   // directly after the table name — Snowflake's
                   // stream-semantics query over a time-travel span; the
                   // mandatory AT/BEFORE clause follows it
-                  val changes: Option[(String, Int)] = {
-                    var a = k + 1
-                    while (a < toks.length && (toks(a).isInstanceOf[Ws] ||
-                           toks(a).isInstanceOf[Comment])) a += 1
-                    toks.lift(a) match {
-                      case Some(Ident(w)) if w.equalsIgnoreCase("CHANGES") =>
-                        var p = a + 1
-                        while (p < toks.length && (toks(p).isInstanceOf[Ws] ||
-                               toks(p).isInstanceOf[Comment])) p += 1
-                        if (p < toks.length && toks(p) == Op("(")) {
-                          var depth = 0; var q = p; var close = -1
-                          while (q < toks.length && close < 0) {
-                            toks(q) match {
-                              case Op("(") => depth += 1
-                              case Op(")") =>
-                                depth -= 1; if (depth == 0) close = q
-                              case _ =>
-                            }
-                            q += 1
-                          }
-                          if (close > p)
-                            "(?is)INFORMATION\\s*=>\\s*(DEFAULT|APPEND_ONLY)".r
-                              .findFirstMatchIn(render(toks.slice(p + 1, close)))
-                              .map(m => (m.group(1).toUpperCase, close))
-                          else None
-                        } else None
-                      case _ => None
+                  val changes: Option[(String, Int)] =
+                    clauseAfter(k, "CHANGES").flatMap { case (_, open, close) =>
+                      "(?is)INFORMATION\\s*=>\\s*(DEFAULT|APPEND_ONLY)".r
+                        .findFirstMatchIn(inside(open, close))
+                        .map(m => (m.group(1).toUpperCase, close))
                     }
-                  }
                   // time-travel clause directly after the table name
                   // (or after its CHANGES clause):
                   // AT | BEFORE ( OFFSET|TIMESTAMP|STATEMENT => … )
-                  val travel: Option[(String, String, Int)] = {
-                    var a = changes.map(_._2 + 1).getOrElse(k + 1)
-                    while (a < toks.length && (toks(a).isInstanceOf[Ws] ||
-                           toks(a).isInstanceOf[Comment])) a += 1
-                    toks.lift(a) match {
-                      case Some(Ident(w))
-                          if w.equalsIgnoreCase("AT") ||
-                             w.equalsIgnoreCase("BEFORE") =>
-                        var p = a + 1
-                        while (p < toks.length && (toks(p).isInstanceOf[Ws] ||
-                               toks(p).isInstanceOf[Comment])) p += 1
-                        if (p < toks.length && toks(p) == Op("(")) {
-                          var depth = 0; var q = p; var close = -1
-                          while (q < toks.length && close < 0) {
-                            toks(q) match {
-                              case Op("(") => depth += 1
-                              case Op(")") =>
-                                depth -= 1; if (depth == 0) close = q
-                              case _ =>
-                            }
-                            q += 1
-                          }
-                          if (close > p)
-                            Some((w.toUpperCase,
-                              render(toks.slice(p + 1, close)), close))
-                          else None
-                        } else None
-                      case _ => None
+                  val travel: Option[(String, String, Int)] =
+                    clauseAfter(changes.fold(k)(_._2), "AT", "BEFORE").map {
+                      case (w, open, close) => (w, inside(open, close), close)
                     }
-                  }
                   // optional END ( TIMESTAMP|STATEMENT => … ) closing a
                   // CHANGES span at a historical version (Snowflake's
                   // full CHANGES grammar); only looked for right after
                   // the AT/BEFORE clause of a CHANGES query, so CASE…END
                   // never reaches here
                   val endClause: Option[(String, Int)] =
-                    if (changes.isEmpty || travel.isEmpty) None
-                    else {
-                      var a = travel.get._3 + 1
-                      while (a < toks.length && (toks(a).isInstanceOf[Ws] ||
-                             toks(a).isInstanceOf[Comment])) a += 1
-                      toks.lift(a) match {
-                        case Some(Ident(w)) if w.equalsIgnoreCase("END") =>
-                          var p = a + 1
-                          while (p < toks.length && (toks(p).isInstanceOf[Ws] ||
-                                 toks(p).isInstanceOf[Comment])) p += 1
-                          if (p < toks.length && toks(p) == Op("(")) {
-                            var depth = 0; var q = p; var close = -1
-                            while (q < toks.length && close < 0) {
-                              toks(q) match {
-                                case Op("(") => depth += 1
-                                case Op(")") =>
-                                  depth -= 1; if (depth == 0) close = q
-                                case _ =>
-                              }
-                              q += 1
-                            }
-                            if (close > p)
-                              Some((render(toks.slice(p + 1, close)), close))
-                            else None
-                          } else None
-                        case _ => None
-                      }
+                    if (changes.isEmpty) None
+                    else travel.flatMap(tr => clauseAfter(tr._3, "END")).map {
+                      case (_, open, close) => (inside(open, close), close)
                     }
                   var substituted = false
                   if (bare || qualified) {
@@ -184,14 +122,11 @@ object TableResolver {
                     case _ => k + 1
                   }
                   // skip optional alias: [AS] ident
-                  var j2 = j
-                  while (j2 < toks.length && toks(j2).isInstanceOf[Ws]) j2 += 1
+                  val j2 = nextSig(toks, j - 1).getOrElse(toks.length)
                   var hasAlias = false
                   if (j2 < toks.length) toks(j2) match {
                     case Ident(a) if a.equalsIgnoreCase("AS") =>
-                      var j3 = j2 + 1
-                      while (j3 < toks.length && toks(j3).isInstanceOf[Ws]) j3 += 1
-                      if (j3 < toks.length) {
+                      nextSig(toks, j2).foreach { j3 =>
                         out ++= toks.slice(j, j3 + 1); j = j3 + 1; hasAlias = true
                       }
                     case Ident(a) if !SqlKeywords.reserved.contains(a.toUpperCase) =>
@@ -202,21 +137,16 @@ object TableResolver {
                   // as an alias so `table.col` references still resolve
                   // (not when TABLESAMPLE follows — Spark's grammar puts
                   // the sample clause before the alias)
-                  val nextIsSample = j2 < toks.length && (toks(j2) match {
-                    case Ident(w) => w.equalsIgnoreCase("TABLESAMPLE")
-                    case _ => false
-                  })
+                  val nextIsSample = j2 < toks.length && isKw(toks(j2), "TABLESAMPLE")
                   if (substituted && !hasAlias && !nextIsSample) chain.last match {
                     case Ident(last) => out += Ws(" "); out += Ident(last)
                     case _ =>
                   }
                   // comma → another table in the FROM list
-                  var j4 = j
-                  while (j4 < toks.length && toks(j4).isInstanceOf[Ws]) j4 += 1
-                  if (j4 < toks.length && toks(j4) == Op(",")) {
-                    out ++= toks.slice(j, j4 + 1)
-                    j = j4 + 1
-                  } else expectTable = false
+                  nextSig(toks, j - 1).filter(toks(_) == Op(",")) match {
+                    case Some(comma) => out ++= toks.slice(j, comma + 1); j = comma + 1
+                    case None => expectTable = false
+                  }
                 } else { expectTable = false } // table function, leave alone
               case _ => expectTable = false
             }
@@ -225,49 +155,34 @@ object TableResolver {
         case _ => i += 1
       }
     }
-    render(out.toSeq)
+    out.toVector
   }
 
-  /** Aliases bound by WITH … AS ( … ) at any depth. */
-  private def collectCteAliases(toks: Vector[Tok], sig: Vector[Int]): Set[String] = {
+  /** Aliases bound by WITH … AS ( … ); a CTE body's own WITH is not
+    * scanned. */
+  private def collectCteAliases(toks: Vector[Tok]): Set[String] = {
     val aliases = scala.collection.mutable.Set.empty[String]
-    var s = 0
-    while (s < sig.length) {
-      toks(sig(s)) match {
-        case Ident(w) if w.equalsIgnoreCase("WITH") =>
-          // WITH [RECURSIVE] a AS ( … ), b AS ( … )
-          var expectAlias = true
-          var p = s + 1
-          if (p < sig.length && (toks(sig(p)) match {
-            case Ident(r) => r.equalsIgnoreCase("RECURSIVE"); case _ => false
-          })) p += 1
-          while (expectAlias && p + 1 < sig.length) {
-            (toks(sig(p)), toks(sig(p + 1))) match {
-              case (Ident(alias), Ident(as)) if as.equalsIgnoreCase("AS") =>
-                aliases += Identifiers.normalizePart(alias)
-                // skip to matching close paren of the CTE body
-                var q = p + 2
-                if (q < sig.length && toks(sig(q)) == Op("(")) {
-                  var depth = 0
-                  var done = false
-                  while (q < sig.length && !done) {
-                    toks(sig(q)) match {
-                      case Op("(") => depth += 1
-                      case Op(")") => depth -= 1; if (depth == 0) done = true
-                      case _ =>
-                    }
-                    q += 1
-                  }
-                }
-                // comma → another CTE
-                if (q < sig.length && toks(sig(q)) == Op(",")) p = q + 1
-                else { expectAlias = false; p = q }
-              case _ => expectAlias = false
-            }
-          }
-          s = p
-        case _ => s += 1
+    var w = toks.indexWhere(isKw(_, "WITH"))
+    while (w >= 0) {
+      // WITH [RECURSIVE] a AS ( … ), b AS ( … )
+      val first = nextSig(toks, w)
+      var p =
+        if (first.exists(j => isKw(toks(j), "RECURSIVE"))) first.flatMap(nextSig(toks, _))
+        else first
+      var end = w + 1
+      while (p.isDefined) {
+        val a = p.get
+        p = None
+        nextSig(toks, a).filter(as =>
+            toks(a).isInstanceOf[Ident] && isKw(toks(as), "AS")).foreach { as =>
+          aliases += Identifiers.normalizePart(toks(a).text)
+          end = parenAfter(toks, as).fold(as)(matchParen(toks, _)) + 1
+          // comma → another CTE
+          p = nextSig(toks, end - 1).filter(toks(_) == Op(","))
+            .flatMap(nextSig(toks, _))
+        }
       }
+      w = toks.indexWhere(isKw(_, "WITH"), end)
     }
     aliases.toSet
   }

@@ -341,7 +341,8 @@ object LowCardAgg extends Rule[SparkPlan] {
     * (probes/lowcard_agg.json: getRow + projection per row); this form
     * evaluates each node as one monomorphic loop over the batch —
     * the same shape that won for the residual predicate. op: 0 `+`,
-    * 1 `-`, 2 `*`, 3 `/`. Nulls propagate (either side null → null). */
+    * 1 `-`, 2 `*` (Divide is not compiled: its NULL-on-zero semantics
+    * have no loop form here). Nulls propagate (either side null → null). */
   private[graft] sealed trait VecSpec extends Serializable
   private[graft] final case class VCol(idx: Int, width: Int) extends VecSpec
   private[graft] final case class VLit(v: Double) extends VecSpec
@@ -485,10 +486,8 @@ object LowCardAgg extends Rule[SparkPlan] {
             out(i) = lo(i) + ro(i); nulls(i) = ln(i) || rn(i); i += 1 }
           case 1 => while (i < n) {
             out(i) = lo(i) - ro(i); nulls(i) = ln(i) || rn(i); i += 1 }
-          case 2 => while (i < n) {
-            out(i) = lo(i) * ro(i); nulls(i) = ln(i) || rn(i); i += 1 }
           case _ => while (i < n) {
-            out(i) = lo(i) / ro(i); nulls(i) = ln(i) || rn(i); i += 1 }
+            out(i) = lo(i) * ro(i); nulls(i) = ln(i) || rn(i); i += 1 }
         }
     }
   }

@@ -266,7 +266,7 @@ final class SnowflakeServer(spark: SparkSession, lakeDir: Option[String],
     val sc = spark.sparkContext
     sc.setJobGroup(state.queryId, s"snowflake-wire: ${state.sqlText}", true)
     try {
-      val df = session.sql(state.sqlText)
+      val df = session.sql(state.sqlText, Some(state.queryId))
       val (b64, rowtype, rest) =
         SnowflakeTypes.toRowsetChunked(df, chunkRows, Some(chunkDir))
       val wr = WireResult(b64, rowtype,

@@ -6,8 +6,8 @@ import org.apache.spark.sql.util.ArrowUtils
 
 /** Bridge to Spark's `private[sql]` Arrow machinery.
   *
-  * Sink direction: serialize a DataFrame result to a complete Arrow IPC
-  * stream (schema message + record batches + end-of-stream), the payload
+  * Sink direction: serialize a DataFrame result to complete Arrow IPC
+  * streams (schema message + record batches + end-of-stream), the payload
   * format the reference puts on the wire as `rowsetBase64`
   * (`universql/protocol/snowflake.py:223-243`).
   *
@@ -17,14 +17,7 @@ import org.apache.spark.sql.util.ArrowUtils
   */
 object GraftArrow {
 
-  def toArrowIpcStream(df: Dataset[Row],
-      fieldMetadata: Map[String, Map[String, String]] = Map.empty): Array[Byte] = {
-    val classic = df.asInstanceOf[ClassicDataFrame]
-    val rows = classic.queryExecution.executedPlan.executeCollect()
-    encodeStream(rows.iterator, classic, fieldMetadata)
-  }
-
-  /** Chunked sink: the result as a sequence of STANDALONE Arrow IPC
+  /** Sink: the result as a sequence of STANDALONE Arrow IPC
     * streams of at most `maxRowsPerChunk` rows each (Snowflake's large
     * results ship the same way — an inline first chunk plus addressable
     * chunks a client decodes independently). Rows are pulled with

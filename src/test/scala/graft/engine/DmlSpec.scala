@@ -400,4 +400,37 @@ class DmlSpec extends AnyFunSuite {
     assert(ref1.path.get == ref0.path.get && after == before)
     s.sql("DROP TABLE ice_gn")
   }
+
+  test("UPDATE: a WHERE inside a comment does not split SET from WHERE") {
+    val s = newSession()
+    s.sql("CREATE OR REPLACE TABLE t_uc AS SELECT n_nationkey AS k, 1 AS v FROM nation")
+    val n = s.sql("UPDATE t_uc SET v = 0 /* where k = 1 */").collect()(0).getLong(0)
+    assert(n == 25)
+    assert(s.sql("SELECT count(*) AS n FROM t_uc WHERE v = 0").collect()(0).getLong(0) == 25)
+    // a trailing line comment in the SET list or the WHERE clause
+    s.sql("UPDATE t_uc SET v = 2 -- bump\nWHERE k < 5 -- first five")
+    assert(s.sql("SELECT count(*) AS n FROM t_uc WHERE v = 2").collect()(0).getLong(0) == 5)
+    s.sql("DROP TABLE t_uc")
+  }
+
+  test("MERGE: a comment mentioning when / then / on does not cut the statement") {
+    val s = newSession()
+    s.sql("CREATE OR REPLACE TABLE t_mc AS SELECT n_nationkey AS k, n_name AS nm FROM nation")
+    s.sql(
+      """MERGE INTO t_mc USING (SELECT n_nationkey AS k FROM nation WHERE n_nationkey < 3) src
+        |ON t_mc.k = src.k /* when matched then on */
+        |WHEN MATCHED -- when not matched then insert
+        |THEN UPDATE SET nm = 'seen' /* then */""".stripMargin)
+    assert(s.sql("SELECT count(*) AS n FROM t_mc WHERE nm = 'seen'")
+      .collect()(0).getLong(0) == 3)
+    // CASE … END keeps its own WHEN / THEN, in a condition and an action
+    s.sql(
+      """MERGE INTO t_mc USING (SELECT n_nationkey AS k FROM nation) src ON t_mc.k = src.k
+        |WHEN MATCHED AND CASE WHEN src.k < 5 THEN TRUE ELSE FALSE END
+        |THEN UPDATE SET nm = CASE WHEN src.k < 3 THEN 'low' ELSE 'mid' END""".stripMargin)
+    val byName = s.sql("SELECT nm, count(*) AS n FROM t_mc GROUP BY nm").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(byName("low") == 3 && byName("mid") == 2 && byName.values.sum == 25)
+    s.sql("DROP TABLE t_mc")
+  }
 }

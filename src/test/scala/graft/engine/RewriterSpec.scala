@@ -779,6 +779,27 @@ class RewriterSpec extends AnyFunSuite {
       .replace(" ", "")
     assert(occurrences(wk, marker) == 1, wk)
   }
+
+  test("a comment never hides a cast's type, a SAMPLE spec or a FLATTEN alias") {
+    assert(rw("SELECT '1'::/*c*/INT") == "SELECT CAST('1' AS INT)")
+    assert(rw("SELECT a /* c */ ::double PRECISION FROM t") ==
+      "SELECT CAST(a /* c */ AS DOUBLE) FROM t")
+    assert(rw("SELECT * FROM t SAMPLE /*c*/ (10)") ==
+      "SELECT * FROM t TABLESAMPLE (10 PERCENT)")
+    assert(rw("SELECT * FROM t SAMPLE BERNOULLI -- c\n (10 ROWS)") ==
+      "SELECT * FROM t TABLESAMPLE (10 ROWS)")
+    assert(rw("SELECT g.value FROM t, TABLE(FLATTEN(input => t.arr)) /*c*/ g") ==
+      "SELECT g.value FROM t LATERAL VIEW " +
+      "posexplode(from_json((t.arr), 'array<string>')) g AS index, value")
+  }
+
+  test("column definitions and single types map through the type map") {
+    assert(SnowflakeRewriter.columnDefs(
+        "(id NUMBER(10, 2) NOT NULL, \"my col\" VARCHAR(20), \"a,b\" VARIANT)") ==
+      Seq("id" -> "DECIMAL(10, 2)", "\"my col\"" -> "STRING", "\"a,b\"" -> "STRING"))
+    assert(SnowflakeRewriter.sparkType("double precision") == "DOUBLE")
+    assert(SnowflakeRewriter.sparkType("MAP<STRING, INT>") == "MAP<STRING, INT>")
+  }
 }
 
 class IdentifiersSpec extends AnyFunSuite {

@@ -893,7 +893,8 @@ class SessionSpec extends AnyFunSuite {
     val s = newSession()
     val df = s.sql(
       "SELECT o_orderkey, o_totalprice FROM orders ORDER BY o_orderkey LIMIT 10")
-    val (b64, rowtype) = SnowflakeTypes.toRowsetBase64(df)
+    val (b64, rowtype, rest) = SnowflakeTypes.toRowsetChunked(df, 1000)
+    assert(rest.isEmpty)
     assert(rowtype.map(_.logicalType) == Seq("FIXED", "REAL"))
     val bytes = java.util.Base64.getDecoder.decode(b64)
     val alloc = new org.apache.arrow.memory.RootAllocator()
@@ -912,7 +913,10 @@ class SessionSpec extends AnyFunSuite {
     val s = newSession()
     val df = s.sql(
       "SELECT o_orderkey, o_orderpriority, o_totalprice FROM orders ORDER BY o_orderkey LIMIT 20")
-    val bytes = org.apache.spark.sql.GraftArrow.toArrowIpcStream(df)
+    val chunks = org.apache.spark.sql.GraftArrow
+      .toArrowIpcStreamChunks(df, Map.empty, 1000).toList
+    assert(chunks.map(_._1) == List(20L))
+    val bytes = chunks.head._2
     val back = org.apache.spark.sql.GraftArrow.fromArrowIpcStream(spark, bytes)
     assert(back.schema.fieldNames.toSeq ==
       Seq("o_orderkey", "o_orderpriority", "o_totalprice"))
@@ -1075,5 +1079,15 @@ class SessionSpec extends AnyFunSuite {
     assert(rt(1).logicalType == "FIXED")
     val wire = SnowflakeTypes.toWire(df).collect()(0)
     assert(wire.getString(0) == "[1,2,3]")
+  }
+
+  test("CREATE TABLE column list: quoted names may hold spaces and commas") {
+    val s = newSession()
+    s.sql("CREATE OR REPLACE TABLE t_qcols (\"my col\" INT, \"a,b\" STRING)")
+    assert(s.sql("SELECT * FROM t_qcols").schema.fieldNames.toSeq == Seq("my col", "a,b"))
+    s.sql("INSERT INTO t_qcols VALUES (7, 'x')")
+    val r = s.sql("SELECT \"my col\", \"a,b\" FROM t_qcols").collect()
+    assert(r.map(x => (x.getInt(0), x.getString(1))).toSeq == Seq((7, "x")))
+    s.sql("DROP TABLE t_qcols")
   }
 }

@@ -761,4 +761,43 @@ class SnowflakeServerSpec extends AnyFunSuite {
       assert(ms(ms.length / 2) < 20.0, ms.mkString(", "))
     } finally { sock.close(); server.stop() }
   }
+
+  test("the wire's query id is the session's: RESULT_SCAN and QUERY_HISTORY find it") {
+    val server = new SnowflakeServer(spark, None)
+    val port = server.start()
+    try {
+      val token = post(port, "/session/v1/login-request", "{}")
+        .path("data").path("token").asText()
+      def rowCount(resp: com.fasterxml.jackson.databind.JsonNode): Int = {
+        assert(resp.path("success").asBoolean(), resp.toString)
+        val bytes = java.util.Base64.getDecoder.decode(
+          resp.path("data").path("rowsetBase64").asText())
+        val alloc = new org.apache.arrow.memory.RootAllocator()
+        val reader = new org.apache.arrow.vector.ipc.ArrowStreamReader(
+          new ByteArrayInputStream(bytes), alloc)
+        try {
+          var n = 0
+          while (reader.loadNextBatch()) n += reader.getVectorSchemaRoot.getRowCount
+          n
+        } finally { reader.close(); alloc.close() }
+      }
+      val query = "SELECT column1 AS k, column2 AS v FROM (VALUES (1, 'a'), (2, 'b'), (3, 'c'))"
+      val first = post(port, "/queries/v1/query-request",
+        s"""{"sqlText":"$query"}""", token = Some(token))
+      assert(rowCount(first) == 3)
+      val qid = first.path("data").path("queryId").asText()
+      val session = server.sessionOf(token).get
+      val newest = session.sql("SELECT QUERY_ID FROM " +
+        "TABLE(INFORMATION_SCHEMA.QUERY_HISTORY(RESULT_LIMIT => 1))").collect()
+      assert(newest.map(_.getString(0)).toSeq == Seq(qid))
+      val scan = post(port, "/queries/v1/query-request",
+        s"""{"sqlText":"SELECT * FROM TABLE(RESULT_SCAN('$qid')) ORDER BY 1"}""",
+        token = Some(token))
+      assert(rowCount(scan) == 3)
+      def rows(sql: String) = session.sql(sql).collect()
+        .map(r => (r.getInt(0), r.getString(1))).toSeq
+      assert(rows(s"SELECT k, v FROM RESULT_SCAN('$qid') ORDER BY k") ==
+        rows(s"$query ORDER BY k"))
+    } finally server.stop()
+  }
 }
