@@ -33,44 +33,13 @@ object Tables {
         df.withColumn("ts", col("ts").cast(TimestampNTZType))
     }
 
-  /** path → (content signature, inferred schema). `spark.read.parquet`
-    * without a declared schema runs one footer-reading Spark job per
-    * CALL; the pack loads the same immutable testdata files hundreds of
-    * times (every gate, warm and timed pass), paying a cluster
-    * round-trip each time for a schema that cannot change. One
-    * inference per path per JVM — guarded by a size/mtime signature
-    * (parity with TableRegistry's memo) so re-generated testdata inside
-    * a live JVM re-infers instead of going stale. */
-  private val schemaMemo = scala.collection.concurrent.TrieMap
-    .empty[String, (Long, org.apache.spark.sql.types.StructType)]
-
-  /** Driver-side content signature of a parquet path (single file or a
-    * directory of part files): names, sizes, mtimes. */
-  private[graft] def pathSig(path: String): Long = {
-    var h = 1125899906842597L
-    def mix(v: Long): Unit = h = h * 31 + v
-    def walk(f: java.io.File): Unit =
-      if (f.isDirectory) {
-        val kids = f.listFiles()
-        if (kids != null) kids.sortBy(_.getName).foreach { k =>
-          mix(k.getName.hashCode.toLong); walk(k)
-        }
-      } else { mix(f.getName.hashCode.toLong); mix(f.length()); mix(f.lastModified()) }
-    walk(new java.io.File(path))
-    h
-  }
-
+  /** `spark.read.parquet` without a declared schema runs one
+    * footer-reading Spark job per call, and the pack loads the same
+    * files hundreds of times (every gate, warm and timed pass): the
+    * schema comes from the storage seam's memo, re-inferred only when
+    * the files change. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    val sig = pathSig(path)
-    val schema = schemaMemo.get(path) match {
-      case Some((s, sc)) if s == sig => sc
-      case _ =>
-        val sc = spark.read.parquet(path).schema
-        schemaMemo.put(path, (sig, sc))
-        sc
-    }
-    val df = spark.read.schema(schema).parquet(path)
+    val df = graft.engine.LakeFs.readParquet(spark, s"$dir/$name.parquet")
     if (name == "events") normalizeEventsTs(df) else df
   }
 }

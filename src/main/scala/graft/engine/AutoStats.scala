@@ -187,11 +187,8 @@ object AutoStats {
   /** The canonical store key for a filesystem path — the same qualified
     * URI rendering `HadoopFsRelation.location.rootPaths` uses, so
     * write-time recording and read-time attachment agree. */
-  private def qualifiedKey(spark: SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-      .makeQualified(p).toString
-  }
+  private def qualifiedKey(spark: SparkSession, path: String): String =
+    LakeFs.qualified(path)
 
   /** Record exact zero stats for a freshly created EMPTY table — the
     * anchor that lets the first COPY/INSERT append MERGE its observed
@@ -253,9 +250,7 @@ object AutoStats {
             }.getOrElse(o)
           }
           val size = try {
-            val p = new org.apache.hadoop.fs.Path(path)
-            BigInt(p.getFileSystem(spark.sessionState.newHadoopConf())
-              .getContentSummary(p).getLength)
+            BigInt(LakeFs.totalSize(path))
           } catch { case scala.util.control.NonFatal(_) =>
             old.sizeInBytes + add.sizeInBytes }
           store.put(key, CatalogStatistics(sizeInBytes = size,
@@ -325,9 +320,7 @@ object AutoStats {
     val record = () => stats().foreach { s =>
       val key = qualifiedKey(spark, path)
       val size = try {
-        val p = new org.apache.hadoop.fs.Path(path)
-        BigInt(p.getFileSystem(spark.sessionState.newHadoopConf())
-          .getContentSummary(p).getLength)
+        BigInt(LakeFs.totalSize(path))
       } catch { case scala.util.control.NonFatal(_) => s.sizeInBytes }
       skipped.remove(key)
       store.put(key, s.copy(sizeInBytes = size))
@@ -344,11 +337,7 @@ object AutoStats {
     val files = graft.sources.IcebergLite.dataFiles(spark, metadataPath)
     if (files.isEmpty) None
     else {
-      val fs = new org.apache.hadoop.fs.Path(files.head)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      Some(files.map(f =>
-        fs.makeQualified(new org.apache.hadoop.fs.Path(f)).toString)
-        .sorted.mkString(","))
+      Some(files.map(LakeFs.qualified).sorted.mkString(","))
     }
   } catch { case scala.util.control.NonFatal(_) => None }
 
@@ -363,7 +352,7 @@ object AutoStats {
       case (Some(key), Some(s)) =>
         val size = try {
           graft.sources.IcebergLite.dataFiles(spark, newMeta)
-            .map(f => new java.io.File(f).length()).sum
+            .map(LakeFs.size).sum
         } catch { case scala.util.control.NonFatal(_) => s.sizeInBytes.toLong }
         skipped.remove(key)
         store.put(key, s.copy(sizeInBytes = BigInt(size)))
@@ -406,7 +395,7 @@ object AutoStats {
         }
         val size = try {
           graft.sources.IcebergLite.dataFiles(spark, newMeta)
-            .map(f => new java.io.File(f).length()).sum
+            .map(LakeFs.size).sum
         } catch { case scala.util.control.NonFatal(_) =>
           (old.sizeInBytes + add.sizeInBytes).toLong }
         skipped.remove(newKey)

@@ -3,7 +3,6 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import SqlTokens._
 
@@ -25,7 +24,7 @@ import SqlTokens._
 final class GraftSession(
     parent: SparkSession,
     warehouseDir: String =
-      Files.createTempDirectory("graft_warehouse").toString,
+      java.nio.file.Files.createTempDirectory("graft_warehouse").toString,
     /** Share one catalog STATE across sessions (the single-process
       * analog of a server's shared metastore): concurrent sessions then
       * see each other's lake tables AND each other's commits — an
@@ -38,13 +37,13 @@ final class GraftSession(
       * as session-private, as Snowflake does. */
     sharedCatalog: Option[scala.collection.concurrent.TrieMap[FQN, TableRef]] =
       None,
-    /** Share STREAM offset state the same way: Snowflake streams are
-      * schema objects — a stream created through one session resolves
-      * (and its consume advances the one shared offset) from every
-      * session of the server. Sessions built without it keep private
-      * streams (the historical single-session behavior). */
-    sharedStreams: Option[scala.collection.concurrent.TrieMap[
-      FQN, StreamState]] = None) {
+    /** Share STREAMs the same way: Snowflake streams are schema objects
+      * — a stream created through one session resolves (and its consume
+      * advances the one shared offset) from every session of the server,
+      * and its change logs record every sharing session's writes.
+      * Sessions built without it keep private streams (the historical
+      * single-session behavior). */
+    sharedStreams: Option[StreamCatalog] = None) {
 
   /** Execution runs in a CLONED session state: same SharedState (external
     * catalog, cached blocks), but a private SQLConf + temp-view namespace.
@@ -98,8 +97,8 @@ final class GraftSession(
   /** CREATE STREAM registry (Snowflake table CDC, [[Streams]]): name →
     * offset state. Reads resolve through [[ensureView]]; DML/CTAS
     * statements that read a stream advance its offset on success. */
-  private val streams = sharedStreams.getOrElse(
-    scala.collection.concurrent.TrieMap.empty[FQN, StreamState])
+  private val streamCat = sharedStreams.getOrElse(new StreamCatalog)
+  private val streams = streamCat.streams
   /** Streams resolved by the statement currently executing — consulted
     * after it completes to apply the consume-advances-offset rule. */
   private val streamsReadInStmt = scala.collection.mutable.Set.empty[FQN]
@@ -189,15 +188,12 @@ final class GraftSession(
     Some((adds.result(), dels.result()))
   }
 
-  /** Data part-files under sidecar dirs (a side with no touched rows
-    * may be an empty dir — callers read with an explicit schema). */
-  private def listSidecarFiles(dirs: Seq[String]): Set[String] =
-    dirs.flatMap { d =>
-      Option(new java.io.File(d).listFiles()).toSeq.flatten
-        .filter(fl => fl.isFile && !fl.getName.startsWith("_") &&
-          !fl.getName.startsWith("."))
-        .map(_.getAbsolutePath)
-    }.toSet
+  /** Chain sidecar dirs as their data files (a side with no touched
+    * rows may be an empty dir — callers read with an explicit schema). */
+  private def sidecarFiles(dirs: (Seq[String], Seq[String]))
+      : (Set[String], Set[String]) =
+    (dirs._1.flatMap(LakeFs.dataFiles).toSet,
+      dirs._2.flatMap(LakeFs.dataFiles).toSet)
 
   /** Publish a merge-refresh's signed row delta (see [[DtDelta]]):
     * `restrict` filters a materialization to the touched groups;
@@ -223,7 +219,7 @@ final class GraftSession(
 
   private def dtHasDeltaConsumer(f: FQN): Boolean =
     dynamicTables.exists { case (g, s2) => g != f && s2.bases.contains(f) } ||
-      streams.values.exists(_.target == f)
+      streamCat.watched(f)
 
   /** Row-level publication variant: `delRows`/`addRows` ARE the signed
     * delta (a dtdelta-transform refresh has them directly — the
@@ -250,8 +246,8 @@ final class GraftSession(
       .write.mode("overwrite").partitionBy("__sign").parquet(dir)
     // a side with no rows writes no __sign dir; consumers read the
     // subdir paths with an explicit schema, so materialize empty ones
-    new java.io.File(delDir).mkdirs()
-    new java.io.File(addDir).mkdirs()
+    LakeFs.mkdirs(delDir)
+    LakeFs.mkdirs(addDir)
     val entry = DtDelta(oldPath, newPath, addDir, delDir)
     val all = dtDeltaLog.getOrElse(f, Nil) :+ entry
     val kept = all.takeRight(32)
@@ -266,17 +262,10 @@ final class GraftSession(
     * left the log (cap eviction, DROP, re-CREATE, full refresh). */
   private def dropSidecars(entries: Seq[DtDelta]): Unit =
     entries.foreach { e =>
-      def rm(p: java.io.File): Unit = {
-        if (p.isDirectory) p.listFiles().foreach(rm)
-        p.delete()
-      }
       // add/del are __sign=… subdirs of one partitioned write — remove
-      // the parent so the _SUCCESS marker dir doesn't linger
-      def root(d: String): java.io.File = {
-        val f = new java.io.File(d)
-        if (f.getName.startsWith("__sign=")) f.getParentFile else f
-      }
-      rm(root(e.addDir)); rm(root(e.delDir))
+      // the parent so the _SUCCESS marker doesn't linger
+      Seq(e.addDir, e.delDir).foreach(d =>
+        LakeFs.delete(d.replaceAll("/__sign=[^/]*$", "")))
     }
 
   /** Touched-group restriction: null-safe semi join on the output key
@@ -340,7 +329,7 @@ final class GraftSession(
         val sp = s"${path}__state_v${snapshotSeq.incrementAndGet()}"
         val part = DynamicTables.partialize(df, force = am.having.isDefined)
         part.write.mode("overwrite").parquet(sp)
-        TableRegistry.primeSchema(sp, part.schema)
+        LakeFs.primeSchema(sp, part.schema)
         (DynamicTables.finalizeState(readStateParquet(sp), am, df.schema),
           Some(sp))
       case None => (df, None)
@@ -349,7 +338,7 @@ final class GraftSession(
     AutoStats.invalidate(path)
     instrumented.write.mode("overwrite").parquet(path)
     record()
-    TableRegistry.primeSchema(path, matDf.schema)
+    LakeFs.primeSchema(path, matDf.schema)
     val ref = TableRef(f, TableKind.Lake, Some(path))
     registry.register(ref)
     resetHistory(f, ref)
@@ -413,7 +402,7 @@ final class GraftSession(
           AutoStats.observedForAppend(spark, aligned, ref.path.get)
         instrumented.write.mode("append").parquet(ref.path.get)
         record()
-        TableRegistry.primeSchema(ref.path.get, st.schema)
+        LakeFs.primeSchema(ref.path.get, st.schema)
         // in-place append invalidates older versions (same as INSERT)
         resetHistory(f, ref)
       case am: DynamicTables.AggMerge if am.needsState =>
@@ -428,7 +417,7 @@ final class GraftSession(
         val newSp = st.statePath.get.split("__state_v").head +
           s"__state_v${snapshotSeq.incrementAndGet()}"
         mergedState.write.mode("overwrite").parquet(newSp)
-        TableRegistry.primeSchema(newSp, mergedState.schema)
+        LakeFs.primeSchema(newSp, mergedState.schema)
         st.statePath = Some(newSp)
         val oldVisible = registry.load(ref)
         swapMaterialization(f, ref,
@@ -474,7 +463,7 @@ final class GraftSession(
           val part = DynamicTables.partialize(runQuery(st.query),
               force = am.having.isDefined)
           part.write.mode("overwrite").parquet(newSp)
-          TableRegistry.primeSchema(newSp, part.schema)
+          LakeFs.primeSchema(newSp, part.schema)
           st.statePath = Some(newSp)
           swapMaterialization(f, ref, DynamicTables.finalizeState(
             readStateParquet(newSp), am, st.schema))
@@ -517,7 +506,7 @@ final class GraftSession(
             s"__state_v${snapshotSeq.incrementAndGet()}"
           oldState.filter(not(pred)).unionByName(recomputed)
             .write.mode("overwrite").parquet(newSp)
-          TableRegistry.primeSchema(newSp, oldState.schema)
+          LakeFs.primeSchema(newSp, oldState.schema)
           st.statePath = Some(newSp)
           swapMaterialization(f, ref, DynamicTables.finalizeState(
             readStateParquet(newSp), am, st.schema))
@@ -559,7 +548,7 @@ final class GraftSession(
                   (of & cf).nonEmpty && (of -- cf).nonEmpty &&
                   // retraction reads the replaced files from the
                   // retained pre-rewrite snapshot
-                  (of -- cf).forall(p => new java.io.File(p).exists()) =>
+                  (of -- cf).forall(LakeFs.exists) =>
               Some((cf -- of, of -- cf))
             case _ => None
           }
@@ -592,9 +581,7 @@ final class GraftSession(
     // (Streams.readFiles reads explicit parquet file lists with the
     // base's schema, so sidecar part-files slot straight in)
     def dtChainFiles(b: FQN): Option[(Set[String], Set[String])] =
-      dtChainDirs(b).map { case (adds, dels) =>
-        (listSidecarFiles(adds), listSidecarFiles(dels))
-      }
+      dtChainDirs(b).map(sidecarFiles)
     def joinRewriteDelta: Option[Map[FQN, (Set[String], Set[String])]] =
       st.inc match {
         case Some(DynamicTables.JoinDelta(am: DynamicTables.AggMerge))
@@ -607,10 +594,10 @@ final class GraftSession(
                     if curs(b).format == oref.format &&
                       ods.exists(_.isEmpty) && cds.exists(_.isEmpty) &&
                       ((of -- cf).isEmpty || (of & cf).nonEmpty) &&
-                      of.forall(p => new java.io.File(p).exists()) =>
+                      of.forall(LakeFs.exists) =>
                   Some(b -> ((cf -- of, of -- cf)))
                 case (Some(of), Some(_))
-                    if of.forall(p => new java.io.File(p).exists()) =>
+                    if of.forall(LakeFs.exists) =>
                   // a merge-refreshing DT base inside the join tree:
                   // its published sidecar chain IS the signed row delta
                   // (unchanged rows of touched groups appear on both
@@ -875,76 +862,62 @@ final class GraftSession(
     AutoStats.invalidate(newPath)
     instrumented.write.mode("overwrite").parquet(newPath)
     record()
-    TableRegistry.primeSchema(newPath, df.schema)
+    LakeFs.primeSchema(newPath, df.schema)
     val newRef = ref.copy(path = Some(newPath))
     registry.register(newRef)
     recordVersion(f, newRef)
   }
 
   /** Engine-internal parquet read with the schema memo
-    * ([[TableRegistry.readParquetCachedSchema]]) — every write site
-    * primes the memo, so the write→read-back pattern the DT refresh
-    * machinery lives on costs zero schema-inference jobs. */
+    * ([[LakeFs.readParquet]]) — every write site primes the memo, so the
+    * write→read-back pattern the DT refresh machinery lives on costs
+    * zero schema-inference jobs. */
   private def readStateParquet(path: String): DataFrame =
-    TableRegistry.readParquetCachedSchema(spark, path)
+    LakeFs.readParquet(spark, path)
 
-  /** Per-table insert history: the file set each INSERT/COPY appended,
-    * with the statement seq — O(metadata) per statement (the files are
-    * already listed for the version snapshot). APPEND_ONLY streams
-    * replay it to show the FULL insert set through later deletes
-    * ([[Streams.delta]]). A statement the log cannot describe (INSERT
-    * OVERWRITE, CREATE OR REPLACE, UNDROP) clears the table's log, which
-    * degrades those streams to the net-diff fallback — absent beats
-    * wrong. */
-  private val insertLog = scala.collection.concurrent.TrieMap
-    .empty[FQN, Vector[(Long, Set[String])]]
+  /** The data files of `f`'s storage before an append-style load, for
+    * [[logInsert]]; None (no listing) when no stream watches `f`. Call
+    * under `f`'s writer lock, like the load and the log entry. */
+  private def filesBeforeInsert(f: FQN, ref: TableRef): Option[Set[String]] =
+    if (streamCat.watched(f)) Streams.filesOf(spark, ref)._1 else None
 
-  /** Record the files `f` gained across an append-style load; `before`
-    * is the data-file set captured before the write. Non-append outcomes
-    * (overwrite; non-file-addressable storage) clear the log. */
+  /** Record the files `f` gained across an append-style load ([[StreamCatalog]]);
+    * `before` is [[filesBeforeInsert]]. Non-append outcomes (overwrite;
+    * non-file-addressable storage) and unwatched tables clear the log. */
   private def logInsert(f: FQN, before: Option[Set[String]]): Unit = {
-    val after = registry.resolve(f).flatMap(r => Streams.filesOf(spark, r)._1)
+    val after = before.flatMap(_ =>
+      registry.resolve(f).flatMap(r => Streams.filesOf(spark, r)._1))
     (before, after) match {
       case (Some(b), Some(a)) if b.subsetOf(a) =>
-        insertLog.updateWith(f)(v =>
-          Some(v.getOrElse(Vector.empty) :+ ((currentSeq, a -- b))))
-      case _ => insertLog.remove(f)
+        streamCat.insertLog.updateWith(f)(v =>
+          Some(v.getOrElse(Vector.empty) :+ ((streamCat.nextSeq(), a -- b))))
+      case _ => streamCat.insertLog.remove(f)
     }
   }
 
-  /** Insert-log entries for `f` recorded after statement `sinceSeq`;
+  /** Insert-log entries for `f` recorded after change seq `sinceSeq`;
     * None when the log was cleared (history incomplete). */
   private def insertHistorySince(f: FQN, sinceSeq: Long): Option[Seq[Set[String]]] =
-    insertLog.get(f).map(_.collect { case (seq, fs) if seq > sinceSeq => fs })
+    streamCat.insertLog.get(f).map(_.collect { case (seq, fs) if seq > sinceSeq => fs })
 
   /** MERGE may insert rows mixed into its rewritten files — a shape the
     * append log cannot describe. Clearing degrades APPEND_ONLY streams
     * on the target to the net-diff fallback (which DOES see the merge's
     * inserts) instead of silently omitting them. Called by [[Dml]]. */
-  private[engine] def clearInsertLog(f: FQN): Unit = insertLog.remove(f)
+  private[engine] def clearInsertLog(f: FQN): Unit = streamCat.insertLog.remove(f)
 
-  /** Per-table UPDATE transition log: the (before, after) data-file
-    * sets of each UPDATE statement's COW commit — O(metadata) per
-    * statement. A stream whose offset → current transition is exactly
-    * a chain of these knows every net row is an update pair and emits
-    * Snowflake's `METADATA$ISUPDATE = true` DELETE/INSERT pairs
-    * ([[Streams.delta]]). Any interleaved non-UPDATE statement breaks
-    * the chain (its file sets don't link), falling back to plain
-    * net-change rows — conservative by construction. */
-  private val updateLog = scala.collection.concurrent.TrieMap
-    .empty[FQN, Vector[(Set[String], Set[String])]]
-
-  /** Record an UPDATE's file-set transition; `before` captured before
-    * the commit. Non-file-addressable outcomes clear the log. */
+  /** Record an UPDATE's file-set transition ([[StreamCatalog]]); `before`
+    * captured before the commit. Non-file-addressable outcomes clear the
+    * log. */
   private[engine] def logUpdateTransition(f: FQN,
       before: Option[Set[String]]): Unit = {
     val after = registry.resolve(f).flatMap(r => Streams.filesOf(spark, r)._1)
     (before, after) match {
       case (Some(b), Some(a)) if b != a =>
-        updateLog.updateWith(f)(v =>
+        streamCat.updateLog.updateWith(f)(v =>
           Some((v.getOrElse(Vector.empty) :+ ((b, a))).takeRight(64)))
       case (Some(_), Some(_)) => // no files changed: nothing to record
-      case _ => updateLog.remove(f)
+      case _ => streamCat.updateLog.remove(f)
     }
   }
 
@@ -952,7 +925,7 @@ final class GraftSession(
     * UPDATE commits. */
   private def isUpdateChain(f: FQN, of: Set[String], cf: Set[String]): Boolean = {
     if (of == cf) return false
-    val entries = updateLog.getOrElse(f, Vector.empty)
+    val entries = streamCat.updateLog.getOrElse(f, Vector.empty)
     var at = of; var steps = 0
     while (at != cf) {
       if (steps >= entries.length) return false
@@ -973,29 +946,34 @@ final class GraftSession(
       throw new IllegalArgumentException(s"stream ${f.flat} already exists")
     }
     val tf = fqn(target)
-    val ref = registry.resolve(tf).orElse(resolveExternal(tf)).getOrElse(
-      throw new IllegalArgumentException(
-        s"CREATE STREAM: table ${tf.flat} does not exist"))
     val appendOnly = "(?i)APPEND_ONLY\\s*=\\s*TRUE".r
       .findFirstIn(rest).isDefined
     val showInitial = "(?i)SHOW_INITIAL_ROWS\\s*=\\s*TRUE".r
       .findFirstIn(rest).isDefined
-    val (files, deletes) = Streams.filesOf(spark, ref)
-    val st =
-      if (showInitial) {
-        // offset at the EMPTY file set: the existing rows surface as the
-        // first delta (file-addressable storage only — elsewhere there is
-        // no before-creation snapshot to diff against)
-        require(files.isDefined, "SHOW_INITIAL_ROWS requires " +
-          s"file-addressable storage (table ${tf.flat} is ${ref.format})")
-        // -1 = sentinel: initial rows predate any logged insert, so the
-        // insert-history replay cannot reconstruct this stream's contents
-        new StreamState(tf, appendOnly, ref,
-          Some(Set.empty), Some(Set.empty), offsetSeq = -1L)
-      } else
-        new StreamState(tf, appendOnly, ref, files, deletes,
-          offsetSeq = currentSeq)
-    streams.put(f, st)
+    // the offset's file set and change seq are taken, and the stream
+    // registered, under the target's writer lock: one consistent point in
+    // the target's commit order
+    TableLocks.withLocks(Seq(tf.flat)) {
+      val ref = registry.resolve(tf).orElse(resolveExternal(tf)).getOrElse(
+        throw new IllegalArgumentException(
+          s"CREATE STREAM: table ${tf.flat} does not exist"))
+      val (files, deletes) = Streams.filesOf(spark, ref)
+      val st =
+        if (showInitial) {
+          // offset at the EMPTY file set: the existing rows surface as the
+          // first delta (file-addressable storage only — elsewhere there is
+          // no before-creation snapshot to diff against)
+          require(files.isDefined, "SHOW_INITIAL_ROWS requires " +
+            s"file-addressable storage (table ${tf.flat} is ${ref.format})")
+          // -1 = sentinel: initial rows predate any logged insert, so the
+          // insert-history replay cannot reconstruct this stream's contents
+          new StreamState(tf, appendOnly, ref,
+            Some(Set.empty), Some(Set.empty), offsetSeq = -1L)
+        } else
+          new StreamState(tf, appendOnly, ref, files, deletes,
+            offsetSeq = streamCat.nextSeq())
+      streams.put(f, st)
+    }
     status(s"Stream ${f.table} successfully created.")
   }
 
@@ -1018,7 +996,7 @@ final class GraftSession(
             st.offsetRef = cur
             st.offsetFiles = files
             st.offsetDeleteFiles = deletes
-            st.offsetSeq = currentSeq
+            st.offsetSeq = streamCat.nextSeq()
           }
       }
     }
@@ -1157,8 +1135,8 @@ final class GraftSession(
   private def swapSnapshotCore(f: FQN, ref: TableRef, next: DataFrame,
       observedCount: (=> Long) => Long): Long = {
     if (ref.format == "iceberg") {
-      val dir = java.nio.file.Paths.get(ref.path.get)
-        .getParent.getParent.toString + s"__v${snapshotSeq.incrementAndGet()}"
+      val dir = graft.sources.IcebergLite.tableDir(ref.path.get) +
+        s"__v${snapshotSeq.incrementAndGet()}"
       // the rewritten snapshot keeps the table's partition spec; the
       // rewrite IS the table, so its observed stats ride the commit
       val (instrumented, stats) =
@@ -1199,7 +1177,7 @@ final class GraftSession(
           "(re-create with CREATE TABLE … CLUSTER BY … AS SELECT to restore)")
       val base =
         if (ref.format == "bucketed")
-          new java.io.File(warehouseDir, f.flat.toLowerCase).toString
+          s"$warehouseDir/${f.flat.toLowerCase}"
         else ref.path.get.replaceAll("__v\\d+$", "")
       val newRef = ref.copy(path = None, format = "parquet")
       val newPath = s"${base}__v${snapshotSeq.incrementAndGet()}"
@@ -1207,7 +1185,7 @@ final class GraftSession(
         AutoStats.observedForWrite(spark, next, newPath)
       instrumented.write.mode("overwrite").parquet(newPath)
       record()
-      TableRegistry.primeSchema(newPath, next.schema)
+      LakeFs.primeSchema(newPath, next.schema)
       registry.register(newRef.copy(path = Some(newPath)))
       recordVersion(f, newRef.copy(path = Some(newPath)))
       observedCount(spark.read.parquet(newPath).count())
@@ -1440,7 +1418,7 @@ final class GraftSession(
         fromPath <- oref.path
         toPath <- cur.path
         dirs <- dtLogChainDirs(f, fromPath, toPath)
-      } yield (listSidecarFiles(dirs._1), listSidecarFiles(dirs._2))
+      } yield sidecarFiles(dirs)
       val vn = viewName(f) + "_chg" + java.lang.Integer.toHexString(
         (info + kind + spec + endSpec.getOrElse("")).hashCode)
       Streams.delta(spark, registry, st, None,
@@ -1946,14 +1924,14 @@ final class GraftSession(
             fromPath <- st.offsetRef.path
             toPath <- cur.path
             dirs <- dtLogChainDirs(st.target, fromPath, toPath)
-          } yield (listSidecarFiles(dirs._1), listSidecarFiles(dirs._2))
+          } yield sidecarFiles(dirs)
         Streams.delta(spark, registry, st, history,
             (of, cf) => isUpdateChain(st.target, of, cf), dtChain,
             dtGroupKeys(st.target))
           .createOrReplaceTempView(vn)
         registry.resolve(st.target).foreach { cur =>
           val (files, deletes) = Streams.filesOf(spark, cur)
-          streamReadVersion.put(f, (cur, files, deletes, currentSeq))
+          streamReadVersion.put(f, (cur, files, deletes, streamCat.nextSeq()))
         }
       }
       Some(vn)
@@ -2028,8 +2006,8 @@ final class GraftSession(
         return status(s"${f.table} already exists, statement succeeded.")
       throw new IllegalArgumentException(s"object $f already exists")
     }
-    insertLog.remove(f) // new table identity — no inherited insert history
-    updateLog.remove(f)
+    streamCat.insertLog.remove(f) // new table identity — no inherited insert history
+    streamCat.updateLog.remove(f)
     val asIdx = "(?is)^(?:\\([^)]*\\)\\s*)?AS\\s+(.*)$".r
     val cloneRe = "(?is)^CLONE\\s+([\\w$\".]+)\\s*$".r
     // CREATE ICEBERG TABLE t PARTITION BY (col | day(col)[, …]) AS … —
@@ -2091,15 +2069,17 @@ final class GraftSession(
             TableRef(f, TableKind.Lake, srcRef.path, "iceberg")
           else {
             val dest = s"${tablePath(f, temp)}__clone${snapshotSeq.incrementAndGet()}"
-            linkTree(srcRef.path.get, dest)
+            LakeFs.linkTree(srcRef.path.get, dest)
             TableRef(f, TableKind.Lake, Some(dest), srcRef.format)
           }
         registry.register(cloneRef)
         resetHistory(f, cloneRef)
         status(s"Table ${f.table} successfully created.")
       case asIdx(select) if isView =>
-        val rewritten = TableResolver.resolveAndSubstitute(
-          SnowflakeRewriter.rewrite(select), this)
+        // CURRENT_DATABASE/SCHEMA take this session's values; NEXTVAL,
+        // RESULT_SCAN and the other side-effecting substitutions stay
+        // out of the stored view text
+        val rewritten = rewriteAndSubstitute(select, sessionSubstitutions = false)
         spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW ${viewName(f)} AS $rewritten")
         registry.register(TableRef(f, TableKind.Local, None))
         status(s"View ${f.table} successfully created.")
@@ -2139,7 +2119,7 @@ final class GraftSession(
             AutoStats.invalidate(path)
             instrumented.write.mode("overwrite").parquet(path)
             record()
-            TableRegistry.primeSchema(path, df.schema)
+            LakeFs.primeSchema(path, df.schema)
             TableRef(f, TableKind.Lake, Some(path))
           }
         registry.register(newRef)
@@ -2155,7 +2135,7 @@ final class GraftSession(
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[Row], schema)
           .write.mode("overwrite").parquet(path)
-        TableRegistry.primeSchema(path, schema)
+        LakeFs.primeSchema(path, schema)
         // exact zero stats anchor the merge path: the first COPY/INSERT
         // append then records live stats with no extra scan
         AutoStats.invalidate(path)
@@ -2165,28 +2145,6 @@ final class GraftSession(
         status(s"Table ${f.table} successfully created.")
       case other =>
         throw new IllegalArgumentException(s"cannot CREATE: $other")
-    }
-  }
-
-  /** Hard-link `src` (a parquet snapshot file or directory) into `dest`,
-    * preserving layout; falls back to a byte copy per file only when the
-    * filesystem refuses links (cross-device). A single-file source becomes
-    * a one-link directory so both shapes read back as `parquet(dest)`. */
-  private def linkTree(src: String, dest: String): Unit = {
-    val s = Paths.get(src); val d = Paths.get(dest)
-    def linkOrCopy(from: java.nio.file.Path, to: java.nio.file.Path): Unit =
-      try { val _ = Files.createLink(to, from) }
-      catch { case _: Exception => val _ = Files.copy(from, to) }
-    if (Files.isRegularFile(s)) {
-      Files.createDirectories(d)
-      linkOrCopy(s, d.resolve(s.getFileName))
-    } else {
-      val walk = Files.walk(s)
-      try walk.forEach { p =>
-        val t = d.resolve(s.relativize(p).toString)
-        if (Files.isDirectory(p)) { val _ = Files.createDirectories(t) }
-        else linkOrCopy(p, t)
-      } finally walk.close()
     }
   }
 
@@ -2305,17 +2263,14 @@ final class GraftSession(
         //    table dirs, referenced only by this session's history —
         //    delete every historical dir that is not the current one
         //    (each is a session-created iceberg dir; sanity-checked)
-        val curDir = java.nio.file.Paths.get(newMeta).getParent.getParent
-          .toAbsolutePath.normalize
+        def dirOf(mp: String) =
+          LakeFs.qualified(graft.sources.IcebergLite.tableDir(mp))
+        val curDir = dirOf(newMeta)
         tableHistory.getOrElse(f, Vector.empty).foreach { case (_, _, h) =>
           if (h.format == "iceberg") h.path.foreach { p =>
-            val d = java.nio.file.Paths.get(p).getParent.getParent
-              .toAbsolutePath.normalize
-            if (d != curDir &&
-                java.nio.file.Files.isDirectory(d.resolve("metadata"))) {
-              java.nio.file.Files.walk(d).iterator().asScala.toSeq.reverse
-                .foreach(java.nio.file.Files.deleteIfExists(_))
-            }
+            val d = dirOf(p)
+            if (d != curDir && LakeFs.isDirectory(s"$d/metadata"))
+              LakeFs.delete(d)
           }
         }
         registry.register(newRef)
@@ -2407,7 +2362,7 @@ final class GraftSession(
     * stages via DESCRIBE STAGE metadata; LIST is its enumeration twin). */
   private def doList(src: String): DataFrame = {
     val base = resolveStagePath(src)
-    val rows = expandFiles(Seq(base)).sortBy(_._1).map { case (p, len) =>
+    val rows = LakeFs.expand(base).sortBy(_._1).map { case (p, len) =>
       Row(p, java.lang.Long.valueOf(len))
     }
     spark.createDataFrame(rows.asJava, StructType(Seq(
@@ -2432,11 +2387,11 @@ final class GraftSession(
     // a re-created table under the same FQN starts with fresh load history
     loadHistory.remove(f)
     tableHistory.remove(f)
-    insertLog.remove(f)
+    streamCat.insertLog.remove(f)
     invalidateResultReuse(f)
     dynamicTables.remove(f) // DROP TABLE on a dynamic table ends its refresh
     dtDeltaLog.remove(f).foreach(dropSidecars)
-    updateLog.remove(f)
+    streamCat.updateLog.remove(f)
     status(s"${f.table} successfully dropped.")
   }
 
@@ -2455,8 +2410,8 @@ final class GraftSession(
     registry.register(ref)
     droppedTables.remove(f)
     resetHistory(f, ref)
-    insertLog.remove(f) // pre-drop insert history does not survive UNDROP
-    updateLog.remove(f)
+    streamCat.insertLog.remove(f) // pre-drop insert history does not survive UNDROP
+    streamCat.updateLog.remove(f)
     status(s"Table ${f.table} successfully restored.")
   }
 
@@ -2473,7 +2428,7 @@ final class GraftSession(
       "by ALTER DYNAMIC TABLE … REFRESH")
     require(ref.kind == TableKind.Lake && ref.path.isDefined,
       s"cannot INSERT into $f")
-    val beforeFiles = Streams.filesOf(spark, ref)._1
+    val beforeFiles = filesBeforeInsert(f, ref)
     val existing = registry.load(ref)
     // optional explicit column list: INSERT INTO t (a, b) SELECT/VALUES …
     val colListRe = "(?s)^\\s*\\(([^)]*)\\)\\s*(.*)$".r
@@ -2513,7 +2468,7 @@ final class GraftSession(
       val newMeta =
         if (overwrite)
           graft.sources.IcebergLite.write(spark, instrumented,
-            java.nio.file.Paths.get(ref.path.get).getParent.getParent.toString + "_ow" +
+            graft.sources.IcebergLite.tableDir(ref.path.get) + "_ow" +
               System.nanoTime())
         else graft.sources.IcebergLite.append(spark, instrumented, ref.path.get)
       if (overwrite) AutoStats.recordIcebergWrite(spark, newMeta, stats())
@@ -2556,7 +2511,7 @@ final class GraftSession(
       AutoStats.invalidate(ref.path.get)
       instrumented.write.mode("overwrite").parquet(ref.path.get)
       record()
-      TableRegistry.primeSchema(ref.path.get, aligned.schema)
+      LakeFs.primeSchema(ref.path.get, aligned.schema)
       resetHistory(f, ref)
     } else {
       // stats ride the append job and merge with the recorded table stats
@@ -2565,7 +2520,7 @@ final class GraftSession(
         AutoStats.observedForAppend(spark, aligned, ref.path.get)
       instrumented.write.mode("append").parquet(ref.path.get)
       record()
-      TableRegistry.primeSchema(ref.path.get, aligned.schema)
+      LakeFs.primeSchema(ref.path.get, aligned.schema)
       resetHistory(f, ref)
     }
     logInsert(f, beforeFiles)
@@ -2618,7 +2573,7 @@ final class GraftSession(
     // expand stage paths (globs, directories incl. hive-partition layouts)
     // to concrete files so SIZE_LIMIT / load history / PURGE operate at
     // Snowflake's file granularity
-    val allFiles = expandFiles(urls)
+    val allFiles = urls.flatMap(LakeFs.expand)
     var cum = 0L
     val afterLimit = mapped.sizeLimit match {
       case Some(lim) =>
@@ -2642,11 +2597,8 @@ final class GraftSession(
     // we pass leaf files (reference injects hive_partitioning=true,
     // `universql/plugins/snow.py:77-87`); only valid when the stage path
     // is a directory
-    val basePathOk = {
-      val p = new org.apache.hadoop.fs.Path(base)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      try fs.getFileStatus(p).isDirectory catch { case _: Exception => false }
-    }
+    val basePathOk =
+      try LakeFs.isDirectory(base) catch { case _: Exception => false }
     val reader =
       if (basePathOk) reader0.option("basePath", base) else reader0
     val df0 =
@@ -2700,20 +2652,14 @@ final class GraftSession(
     // contents were never profiled) — no ANALYZE, no second scan
     val (instrumented, record) =
       AutoStats.observedForAppend(spark, aligned, ref.path.get)
-    val beforeFiles = Streams.filesOf(spark, ref)._1
+    val beforeFiles = filesBeforeInsert(f, ref)
     instrumented.write.mode("append").parquet(ref.path.get)
     record()
-    TableRegistry.primeSchema(ref.path.get, aligned.schema)
+    LakeFs.primeSchema(ref.path.get, aligned.schema)
     resetHistory(f, ref)
     logInsert(f, beforeFiles)
     loadHistory.update(f, already ++ paths)
-    if (mapped.purge) {
-      val conf = spark.sparkContext.hadoopConfiguration
-      paths.foreach { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(conf).delete(hp, false)
-      }
-    }
+    if (mapped.purge) paths.foreach(LakeFs.delete)
     status(s"Copy executed with ${paths.length} files processed.")
     } // TableLocks
   }
@@ -2756,32 +2702,6 @@ final class GraftSession(
       .mode(if (overwrite) "overwrite" else "errorifexists")
       .save(resolveStagePath(target))
     status(s"rows unloaded to $target")
-  }
-
-  /** Expand stage URLs (globs, directories — recursively, so hive
-    * partition layouts resolve) into concrete (file, size) pairs,
-    * skipping hidden/metadata files. */
-  private def expandFiles(urls: Seq[String]): Seq[(String, Long)] = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    urls.flatMap { u =>
-      val p = new Path(u)
-      val fs = p.getFileSystem(conf)
-      val matched = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Nil)
-      val statuses = if (matched.nonEmpty) matched else Seq(fs.getFileStatus(p))
-      statuses.flatMap { st =>
-        if (st.isDirectory) {
-          val it = fs.listFiles(st.getPath, true)
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[org.apache.hadoop.fs.FileStatus]
-          while (it.hasNext) out += it.next()
-          out.toSeq
-        } else Seq(st)
-      }
-    }.filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }.map(st => (st.getPath.toString, st.getLen))
   }
 
   /** `@stage/path` → stage URL + path; quoted literals pass through

@@ -21,27 +21,59 @@ object SnowflakeTypes {
       logicalType: String,
       precision: Option[Int],
       scale: Option[Int],
-      nullable: Boolean)
+      nullable: Boolean,
+      /** rowtype `length`/`byteLength`; None renders JSON null */
+      length: Option[Int] = None)
 
-  def logicalType(dt: DataType): (String, Option[Int], Option[Int]) = dt match {
-    case ByteType | ShortType | IntegerType | LongType => ("FIXED", Some(38), Some(0))
-    case d: DecimalType       => ("FIXED", Some(d.precision), Some(d.scale))
-    case FloatType | DoubleType => ("REAL", None, None)
-    case StringType            => ("TEXT", None, None)
-    case BinaryType            => ("BINARY", None, None)
-    case BooleanType           => ("BOOLEAN", None, None)
-    case DateType              => ("DATE", None, None)
-    case TimestampNTZType      => ("TIMESTAMP_NTZ", None, None)
-    case TimestampType         => ("TIMESTAMP_LTZ", None, None)
-    case _: ArrayType          => ("ARRAY", None, None)
-    case _: StructType | _: MapType => ("OBJECT", None, None)
-    case other                 => ("TEXT", None, None)
+  /** Snowflake's description of one Spark type: the rowtype fields, and
+    * the Arrow field metadata after `logicalType` in wire order. */
+  final case class SfType(logicalType: String,
+      precision: Option[Int] = None, scale: Option[Int] = None,
+      length: Option[Int] = None, arrow: Seq[(String, String)] = Nil) {
+    /** Arrow field metadata, mirroring the reference's maps in
+      * `universql/protocol/utils.py:138-249` (logicalType / precision /
+      * scale / physicalType / charLength / byteLength / final_type). */
+    def arrowMetadata: Map[String, String] =
+      Map((("logicalType" -> logicalType) +: arrow): _*)
+  }
+
+  private val MaxText = 16777216
+  private val MaxBinary = 8388608
+  private def fixed(p: Int, s: Int, physical: String) =
+    SfType("FIXED", Some(p), Some(s), arrow = Seq("precision" -> p.toString,
+      "scale" -> s.toString, "physicalType" -> physical, "final_type" -> "T"))
+  private val timestampArrow =
+    Seq("precision" -> "0", "scale" -> "9", "physicalType" -> "SB16")
+  private def semiStructured(lt: String) = SfType(lt, length = Some(MaxText),
+    arrow = Seq("charLength" -> MaxText.toString, "byteLength" -> MaxText.toString,
+      "scale" -> "0", "precision" -> "38", "finalType" -> "T"))
+
+  /** The one Spark type → Snowflake column mapping; the JSON `rowtype`,
+    * DESCRIBE, information_schema and the Arrow field metadata all
+    * render from it. */
+  def sfType(dt: DataType): SfType = dt match {
+    case ByteType | ShortType | IntegerType | LongType => fixed(38, 0, "SB8")
+    case d: DecimalType => fixed(d.precision, d.scale, "SB16")
+    case FloatType | DoubleType => SfType("REAL")
+    case StringType => SfType("TEXT", length = Some(MaxText), arrow = Seq(
+      "charLength" -> MaxText.toString, "byteLength" -> MaxText.toString))
+    case BinaryType => SfType("BINARY", length = Some(MaxBinary),
+      arrow = Seq("byteLength" -> MaxBinary.toString))
+    case BooleanType => SfType("BOOLEAN")
+    case DateType => SfType("DATE")
+    case TimestampNTZType => SfType("TIMESTAMP_NTZ", arrow = timestampArrow)
+    case TimestampType => SfType("TIMESTAMP_LTZ",
+      arrow = timestampArrow :+ ("final_type" -> "T"))
+    case _: ArrayType => semiStructured("ARRAY")
+    case _: StructType | _: MapType => semiStructured("OBJECT")
+    case _ => SfType("TEXT", length = Some(MaxText))
   }
 
   def rowType(df: DataFrame): Seq[ColumnMeta] =
     df.schema.fields.toIndexedSeq.map { f =>
-      val (lt, p, s) = logicalType(f.dataType)
-      ColumnMeta(f.name, lt, p, s, f.nullable)
+      val t = sfType(f.dataType)
+      ColumnMeta(f.name, t.logicalType, t.precision, t.scale, f.nullable,
+        t.length)
     }
 
   /** Wire payload: Snowflake's `rowsetBase64` — base64 Arrow IPC streams
@@ -60,7 +92,8 @@ object SnowflakeTypes {
       spillDir: Option[java.nio.file.Path] = None)
       : (String, Seq[ColumnMeta], Seq[(Long, java.nio.file.Path)]) = {
     val wire = toSnowflakeWire(df)
-    val meta = df.schema.fields.map(f => f.name -> wireFieldMetadata(f)).toMap
+    val meta = df.schema.fields.map(f =>
+      f.name -> sfType(f.dataType).arrowMetadata).toMap
     val it = org.apache.spark.sql.GraftArrow.toArrowIpcStreamChunks(
       wire, meta, maxRowsPerChunk)
     // if the drain dies mid-way (query aborted, executor failure) the
@@ -128,40 +161,5 @@ object SnowflakeTypes {
       }
     }
     df.select(cols.toIndexedSeq: _*)
-  }
-
-  /** Per-column Arrow field metadata, mirroring the reference's maps in
-    * `universql/protocol/utils.py:138-249` (logicalType / precision /
-    * scale / physicalType / charLength / byteLength / final_type). */
-  def wireFieldMetadata(f: StructField): Map[String, String] = f.dataType match {
-    case ByteType | ShortType | IntegerType | LongType =>
-      Map("logicalType" -> "FIXED", "precision" -> "38", "scale" -> "0",
-        "physicalType" -> "SB8", "final_type" -> "T")
-    case d: DecimalType =>
-      Map("logicalType" -> "FIXED", "precision" -> d.precision.toString,
-        "scale" -> d.scale.toString, "physicalType" -> "SB16",
-        "final_type" -> "T")
-    case FloatType | DoubleType => Map("logicalType" -> "REAL")
-    case StringType =>
-      Map("logicalType" -> "TEXT",
-        "charLength" -> "16777216", "byteLength" -> "16777216")
-    case BinaryType => Map("logicalType" -> "BINARY", "byteLength" -> "8388608")
-    case BooleanType => Map("logicalType" -> "BOOLEAN")
-    case DateType => Map("logicalType" -> "DATE")
-    case TimestampNTZType =>
-      Map("logicalType" -> "TIMESTAMP_NTZ", "precision" -> "0",
-        "scale" -> "9", "physicalType" -> "SB16")
-    case TimestampType =>
-      Map("logicalType" -> "TIMESTAMP_LTZ", "precision" -> "0",
-        "scale" -> "9", "physicalType" -> "SB16", "final_type" -> "T")
-    case _: ArrayType =>
-      Map("logicalType" -> "ARRAY", "charLength" -> "16777216",
-        "byteLength" -> "16777216", "scale" -> "0", "precision" -> "38",
-        "finalType" -> "T")
-    case _: StructType | _: MapType =>
-      Map("logicalType" -> "OBJECT", "charLength" -> "16777216",
-        "byteLength" -> "16777216", "scale" -> "0", "precision" -> "38",
-        "finalType" -> "T")
-    case _ => Map("logicalType" -> "TEXT")
   }
 }

@@ -29,8 +29,8 @@ import org.apache.spark.sql.types.StructType
   * without per-statement change logs).
   *
   * APPEND_ONLY streams additionally keep TRUE insert history through
-  * later deletes: the session records each INSERT/COPY statement's added
-  * file set (O(metadata) per statement — the files are already listed
+  * later deletes: the [[StreamCatalog]] records each INSERT/COPY
+  * statement's added file set (O(metadata) per statement — the files are already listed
   * for the snapshot), and because COW rewrites leave prior snapshot
   * files on disk, an APPEND_ONLY read after a DELETE reconstructs the
   * full insert set by reading exactly those logged files — Snowflake's
@@ -42,7 +42,7 @@ import org.apache.spark.sql.types.StructType
   *
   * UPDATE statements surface Snowflake-style: when the offset → current
   * file-set transition is exactly a chain of logged UPDATE commits (the
-  * session records each UPDATE's before/after file sets — see
+  * [[StreamCatalog]] records each UPDATE's before/after file sets — see
   * `isUpdateTransition` below), every net-diff row is an update pair and
   * both its DELETE (old values) and INSERT (new values) rows carry
   * `METADATA$ISUPDATE = true`; APPEND_ONLY streams suppress such
@@ -72,9 +72,39 @@ final class StreamState(
     @volatile var offsetRef: TableRef,
     @volatile var offsetFiles: Option[Set[String]],
     @volatile var offsetDeleteFiles: Option[Set[String]],
-    /** Session statement seq at the offset — insert-history entries with
-      * a larger seq are "since this stream's offset". */
+    /** [[StreamCatalog]] change seq at the offset — insert-log entries
+      * with a larger seq are "since this stream's offset". */
     @volatile var offsetSeq: Long = 0L)
+
+/** The streams of a catalog and the change logs their reads consult.
+  * Every session that shares the streams shares this object, so a
+  * stream sees every sharing session's writes, ordered by one counter
+  * all of them draw from (under the target's writer lock, so the order
+  * of entries and offsets on one table is its commit order).
+  *
+  *  - `insertLog`: per table, the file set each INSERT/COPY appended,
+  *    with its seq. APPEND_ONLY streams replay it to show the FULL
+  *    insert set through later deletes ([[Streams.delta]]). A statement
+  *    the log cannot describe (INSERT OVERWRITE, MERGE, CREATE OR
+  *    REPLACE, UNDROP) clears the table's log, which degrades those
+  *    streams to the net-diff fallback — absent beats wrong. Kept only
+  *    for tables some stream watches: a stream created later takes its
+  *    offset at creation and never reads earlier entries.
+  *  - `updateLog`: per table, the (before, after) data-file sets of each
+  *    UPDATE's commit. A transition that is exactly a chain of these is
+  *    reported as update pairs (`METADATA$ISUPDATE`). Kept for every
+  *    table: a CHANGES clause reads any table's history without a
+  *    stream. */
+final class StreamCatalog {
+  val streams = scala.collection.concurrent.TrieMap.empty[FQN, StreamState]
+  private val seq = new java.util.concurrent.atomic.AtomicLong(0)
+  def nextSeq(): Long = seq.incrementAndGet()
+  val insertLog = scala.collection.concurrent.TrieMap
+    .empty[FQN, Vector[(Long, Set[String])]]
+  val updateLog = scala.collection.concurrent.TrieMap
+    .empty[FQN, Vector[(Set[String], Set[String])]]
+  def watched(f: FQN): Boolean = streams.values.exists(_.target == f)
+}
 
 object Streams {
   val Action   = "METADATA$ACTION"
@@ -86,21 +116,6 @@ object Streams {
     * "cow-diff-pruned" | "cow-diff". */
   @volatile private[graft] var lastMode: String = ""
 
-  private def listDataFiles(dir: String): Set[String] = {
-    val root = new java.io.File(dir)
-    if (!root.exists()) Set.empty
-    else if (root.isFile) Set(root.getAbsolutePath)
-    else {
-      val buf = Set.newBuilder[String]
-      def walk(f: java.io.File): Unit =
-        if (f.isDirectory) f.listFiles().foreach(walk)
-        else if (!f.getName.startsWith("_") && !f.getName.startsWith("."))
-          buf += f.getAbsolutePath
-      walk(root)
-      buf.result()
-    }
-  }
-
   /** (data files, delete files) of a ref, when the storage is
     * file-addressable; (None, None) otherwise (csv dirs, views, …). */
   def filesOf(spark: SparkSession,
@@ -110,13 +125,13 @@ object Streams {
         (Some(graft.sources.IcebergLite.dataFiles(spark, ref.path.get).toSet),
          Some(graft.sources.IcebergLite.deleteFiles(spark, ref.path.get).toSet))
       case "parquet" if ref.path.isDefined =>
-        (Some(listDataFiles(ref.path.get)), Some(Set.empty))
+        (Some(LakeFs.dataFiles(ref.path.get).toSet), Some(Set.empty))
       case "bucketed" =>
         // path is the Spark catalog table name; list its storage location
         scala.util.Try {
           val loc = spark.sessionState.catalog.getTableMetadata(
             org.apache.spark.sql.catalyst.TableIdentifier(ref.path.get)).location
-          listDataFiles(new java.io.File(loc).getAbsolutePath)
+          LakeFs.dataFiles(loc.toString).toSet
         }.toOption match {
           case Some(fs) => (Some(fs), Some(Set.empty))
           case None => (None, None)
@@ -167,7 +182,7 @@ object Streams {
     else spark.read.schema(schema).parquet(files.toSeq.sorted: _*)
 
   /** The stream's current contents: net changes offset → current.
-    * `insertHistory` is the session's per-statement insert log for the
+    * `insertHistory` is the catalog's per-statement insert log for the
     * target — the file sets INSERT/COPY statements since the offset
     * added — consulted by APPEND_ONLY streams when the pure-append probe
     * fails (a later delete/update rewrote the file set): the logged
@@ -209,7 +224,7 @@ object Streams {
         val files = entries.flatten.toSet
         if (files.isEmpty) return { lastMode = "empty"
           withMeta(curDf.filter(lit(false)), "INSERT") }
-        if (files.forall(p => new java.io.File(p).exists())) {
+        if (files.forall(LakeFs.exists)) {
           lastMode = "insert-history"
           return withMeta(
             align(spark.read.schema(schema).parquet(files.toSeq.sorted: _*),
@@ -300,7 +315,7 @@ object Streams {
               st.offsetDeleteFiles.exists(_.isEmpty) &&
               curDeletes.exists(_.isEmpty) &&
               (of & cf).nonEmpty && (of -- cf).nonEmpty &&
-              (of -- cf).forall(p => new java.io.File(p).exists()) =>
+              (of -- cf).forall(LakeFs.exists) =>
           val removed = of -- cf
           val added = cf -- of
           lastMode = "cow-diff-pruned"
@@ -334,7 +349,7 @@ object Streams {
         val of = st.offsetFiles.get
         if (of.isEmpty) curDf.filter(lit(false))
         else {
-          val missing = of.filterNot(p => new java.io.File(p).exists())
+          val missing = of.filterNot(LakeFs.exists)
           if (missing.nonEmpty) stale(
             s"${missing.size} offset snapshot file(s) no longer exist")
           align(spark.read.schema(schema).parquet(of.toSeq.sorted: _*), schema)

@@ -32,11 +32,11 @@ final case class TableRef(
   * statements and is rebound only when the base's
   * [[TableRegistry.VersionKey]] changes. The key is the immutable
   * [[TableRef]] (Iceberg metadata path, COW snapshot path, REST-resolved
-  * location) plus a storage signature: for path-addressed parquet the
-  * listing signature the schema memo already walks (catches in-place
-  * INSERT/COPY appends and out-of-band file changes), for Iceberg the
-  * metadata file's own (catches a DROP + re-CREATE that reuses the
-  * path). Formats without a key (bucketed, csv/json, Local) rebind on
+  * location) plus a storage signature ([[LakeFs.signature]]): for
+  * path-addressed parquet the data-file listing's, which the schema memo
+  * reuses (catches in-place INSERT/COPY appends and out-of-band file
+  * changes), for Iceberg the metadata file's own (catches a DROP +
+  * re-CREATE that reuses the path). Formats without a key (bucketed, csv/json, Local) rebind on
   * every reference, as before the memo.
   *
   * Contract: a base view is (re)bound ONLY through [[bind]] (the current
@@ -99,8 +99,8 @@ final class TableRegistry(spark: SparkSession,
   def load(ref: TableRef): DataFrame = load(ref, None)
 
   /** `sig`: the parquet listing signature when the caller already
-    * walked it (the version key), so the schema memo does not walk
-    * again. */
+    * walked it (the version key), so the schema memo
+    * ([[LakeFs.readParquet]]) does not walk again. */
   private def load(ref: TableRef, sig: Option[Long]): DataFrame = ref.kind match {
     case TableKind.Local => spark.table(viewNamer(ref.fqn))
     case TableKind.Lake  =>
@@ -111,10 +111,8 @@ final class TableRegistry(spark: SparkSession,
           // path = Spark catalog name; reading via the catalog keeps the
           // bucket spec, so joins on the keys plan exchange-free
           spark.table(ref.path.get)
-        else if (ref.format == "parquet") sig match {
-          case Some(s) => TableRegistry.readParquetAt(spark, ref.path.get, s)
-          case None => TableRegistry.readParquetCachedSchema(spark, ref.path.get)
-        }
+        else if (ref.format == "parquet")
+          LakeFs.readParquet(spark, ref.path.get, sig)
         else spark.read.format(ref.format).load(ref.path.get)
       // events' ts has shipped as both INT64-nanos and timestamp[us]
       // across testdata rounds; normalize like Tables.load
@@ -156,104 +154,14 @@ final class TableRegistry(spark: SparkSession,
 }
 
 object TableRegistry {
-  /** path → (content signature, inferred schema). `spark.read.parquet`
-    * with no declared schema runs a footer-reading Spark JOB per call
-    * (measured: 1 job each, ~60-100 ms of scheduler latency) — and the
-    * engine re-loads a managed path on every rebind of a session view
-    * and on every write-path read. The schema of a path is a pure
-    * function of its file set, so it is cached under a driver-side
-    * listing signature (name/size/mtime of every parquet file plus
-    * partition dirs): any append, overwrite or re-CREATE changes the
-    * signature and re-infers, with no reliance on catching every write
-    * site. The same signature is the parquet half of a bound view's
-    * [[VersionKey]], so a statement walks the listing once. */
-  private val schemaCache =
-    TrieMap.empty[String, (Long, org.apache.spark.sql.types.StructType)]
-
-  private def pathSig(root: java.io.File): Long = {
-    var h = 1125899906842597L // prime
-    def mix(v: Long): Unit = { h = h * 31 + v }
-    def mixStr(s: String): Unit = mix(s.hashCode.toLong)
-    def walk(f: java.io.File): Unit =
-      if (f.isDirectory) {
-        val kids = f.listFiles()
-        if (kids != null) kids.sortBy(_.getName).foreach { k =>
-          if (k.isDirectory) { mixStr(k.getName); walk(k) }
-          else if (!k.getName.startsWith("_") && !k.getName.startsWith(".")) {
-            mixStr(k.getName); mix(k.length()); mix(k.lastModified())
-          }
-        }
-      } else { mixStr(f.getName); mix(f.length()); mix(f.lastModified()) }
-    walk(root)
-    h
-  }
-
-  /** Record `schema` for a path the ENGINE just wrote, so the
-    * write→read-back pattern (DT state merges, COW swaps, CTAS) never
-    * pays an inference job: the writer knows the schema it wrote.
-    * Parquet round-trips the logical types exactly (nullability is
-    * normalized by Spark's file-relation layer on both the inferred and
-    * the supplied side), and the signature still guards against any
-    * out-of-band change to the files. */
-  private[engine] def primeSchema(path: String,
-      schema: org.apache.spark.sql.types.StructType): Unit = {
-    val f = localFile(path)
-    // nullable-widened: declaring a column non-nullable over files that
-    // hold nulls breaks codegen null checks; the widened form is always
-    // safe (same types, same results — nullability only narrows
-    // optimization). StructType.asNullable is private[sql]; recurse.
-    if (f.exists()) schemaCache.put(path, (pathSig(f), widenNullable(schema)))
-    ()
-  }
-
-  private def widenNullable(s: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    def w(dt: DataType): DataType = dt match {
-      case st: StructType => widenNullable(st)
-      case ArrayType(et, _) => ArrayType(w(et), containsNull = true)
-      case MapType(k, v, _) => MapType(w(k), w(v), valueContainsNull = true)
-      case other => other
-    }
-    StructType(s.fields.map(f => f.copy(dataType = w(f.dataType),
-      nullable = true)))
-  }
-
-  private def localFile(path: String): java.io.File =
-    new java.io.File(
-      if (path.startsWith("file:")) new java.net.URI(path).getPath else path)
-
   /** What a bound base view was bound to: the ref plus its storage
     * signature (see the class doc of [[TableRegistry]]). */
   final case class VersionKey(ref: TableRef, sig: Long)
 
   /** None for formats whose storage has no cheap version signature
-    * (bucketed, csv/json, Local) and for paths off the local disk. */
+    * (bucketed, csv/json, Local) and for paths where nothing exists. */
   private[engine] def versionKey(ref: TableRef): Option[VersionKey] =
     if (ref.kind != TableKind.Lake || ref.path.isEmpty ||
         (ref.format != "parquet" && ref.format != "iceberg")) None
-    else {
-      val f = localFile(ref.path.get)
-      if (f.exists()) Some(VersionKey(ref, pathSig(f))) else None
-    }
-
-  private[engine] def readParquetCachedSchema(spark: SparkSession,
-      path: String): DataFrame = {
-    val f = localFile(path)
-    if (!f.exists()) spark.read.parquet(path)
-    else readParquetAt(spark, path, pathSig(f))
-  }
-
-  /** [[readParquetCachedSchema]] with the path's signature `sig` already
-    * walked. */
-  private def readParquetAt(spark: SparkSession, path: String,
-      sig: Long): DataFrame =
-    schemaCache.get(path) match {
-      case Some((s, schema)) if s == sig =>
-        spark.read.schema(schema).parquet(path)
-      case _ =>
-        val df = spark.read.parquet(path)
-        schemaCache.put(path, (sig, df.schema))
-        df
-    }
+    else LakeFs.signature(ref.path.get).map(VersionKey(ref, _))
 }

@@ -28,15 +28,8 @@ object Bucketing {
       buckets: Int, location: Option[String] = None): Unit = {
     val spark = df.sparkSession
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    val dir = location.getOrElse(new java.io.File(new java.net.URI(
-      spark.conf.get("spark.sql.warehouse.dir")).getPath,
-      table.toLowerCase).toString)
-    val leftover = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(leftover)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(leftover).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    graft.engine.LakeFs.delete(location.getOrElse(
+      s"${spark.conf.get("spark.sql.warehouse.dir")}/${table.toLowerCase}"))
     // one writer task per bucket → ONE file per bucket: Spark only
     // trusts bucket files as pre-sorted (skipping the join's sort) when
     // a bucket is a single file. repartition uses the same Murmur3 hash
@@ -76,9 +69,8 @@ object Bucketing {
         val cat = spark.sessionState.catalog
         val id = org.apache.spark.sql.catalyst.TableIdentifier(table)
         val size = try {
-          val p = new org.apache.hadoop.fs.Path(cat.getTableMetadata(id).location)
-          BigInt(p.getFileSystem(spark.sessionState.newHadoopConf())
-            .getContentSummary(p).getLength)
+          BigInt(graft.engine.LakeFs.totalSize(
+            cat.getTableMetadata(id).location.toString))
         } catch { case scala.util.control.NonFatal(_) => s.sizeInBytes }
         cat.alterTableStats(id, Some(s.copy(sizeInBytes = size)))
       } catch { case scala.util.control.NonFatal(_) => }

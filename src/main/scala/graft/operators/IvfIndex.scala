@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.engine.LakeFs
 import graft.functions.VectorOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -117,11 +118,10 @@ object IvfIndex {
     val spark = corpus.sparkSession
     val key = Seq(corpusKey(corpus), nlist, iters, idCol, vecCol).mkString("|")
     indexCache.getOrElseUpdate(key, {
-      val dir = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        f"graft_ivf/${key.hashCode}%08x").toString
+      val dir = System.getProperty("java.io.tmpdir") +
+        f"/graft_ivf/${key.hashCode}%08x"
       val model =
-        if (new java.io.File(s"$dir/centroids/_SUCCESS").exists()) {
+        if (LakeFs.exists(s"$dir/centroids/_SUCCESS")) {
           val rows = spark.read.parquet(s"$dir/centroids")
             .orderBy("list_id").collect()
           Model(rows.map(r => (r.getInt(0), r.getSeq[Double](1).toArray)))
@@ -134,7 +134,7 @@ object IvfIndex {
             .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
           m
         }
-      if (!new java.io.File(s"$dir/assigned/_SUCCESS").exists())
+      if (!LakeFs.exists(s"$dir/assigned/_SUCCESS"))
         assign(corpus, model, idCol, vecCol)
           .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
             VectorOps.normSq(col(vecCol)).as("cn"), col("list_id"))

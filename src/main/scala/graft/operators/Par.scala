@@ -40,13 +40,11 @@ private[operators] object Par {
       catch { case _: Throwable => return df }
     if (files.isEmpty) return df
     val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
-    val hconf = spark.sessionState.newHadoopConf()
     var est = 0L
     val it = files.iterator
     while (it.hasNext && est * 2 < target) {
-      val p = new org.apache.hadoop.fs.Path(it.next())
       val len =
-        try p.getFileSystem(hconf).getFileStatus(p).getLen
+        try graft.engine.LakeFs.status(it.next()).get.getLen
         catch { case _: Throwable => return df }
       est += math.max(1L, (len + maxSplit - 1) / maxSplit)
     }

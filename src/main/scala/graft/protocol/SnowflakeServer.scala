@@ -58,8 +58,7 @@ final class SnowflakeServer(spark: SparkSession, lakeDir: Option[String],
     * (round-13 directive #7 scenario caught it). */
   private val sharedCatalog = scala.collection.concurrent.TrieMap
     .empty[graft.engine.FQN, graft.engine.TableRef]
-  private val sharedStreams = scala.collection.concurrent.TrieMap
-    .empty[graft.engine.FQN, graft.engine.StreamState]
+  private val sharedStreams = new graft.engine.StreamCatalog
   private val sharedWarehouse =
     java.nio.file.Files.createTempDirectory("graft_wire_wh").toString
   /** All spilled result chunks live under one per-server directory so
@@ -378,12 +377,9 @@ final class SnowflakeServer(spark: SparkSession, lakeDir: Option[String],
       c.put("table", "")
       // charLength/byteLength analogs (reference surfaces these in Arrow
       // field metadata, `universql/protocol/utils.py:26-30`)
-      m.logicalType match {
-        case "TEXT" | "ARRAY" | "OBJECT" =>
-          c.put("length", 16777216); c.put("byteLength", 16777216)
-        case "BINARY" =>
-          c.put("length", 8388608); c.put("byteLength", 8388608)
-        case _ => c.putNull("length"); c.putNull("byteLength")
+      m.length match {
+        case Some(n) => c.put("length", n); c.put("byteLength", n)
+        case None => c.putNull("length"); c.putNull("byteLength")
       }
     }
     ok(data)

@@ -20,23 +20,10 @@ object Streaming extends QueryPack {
   /** The file source needs an explicit schema; read it from the actual
     * footer so both ts encodings the driver has shipped (INT64 nanos,
     * timestamp[us]) stream correctly — [[graft.Tables.normalizeEventsTs]]
-    * then maps either to TIMESTAMP_NTZ. */
-  private val schemaMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, StructType)]
-  private def eventsSchema(s: SparkSession, dir: String): StructType = {
-    // one inference job per source dir per JVM, not one per gate call —
-    // guarded by a size/mtime signature (parity with Tables.load) so a
-    // re-generated testdata file inside a live JVM re-infers
-    val path = s"$dir/events.parquet"
-    val sig = graft.Tables.pathSig(path)
-    schemaMemo.get(dir) match {
-      case Some((sg, sc)) if sg == sig => sc
-      case _ =>
-        val sc = s.read.parquet(path).schema
-        schemaMemo.put(dir, (sig, sc))
-        sc
-    }
-  }
+    * then maps either to TIMESTAMP_NTZ. The storage seam's schema memo
+    * makes it one inference per file version per JVM. */
+  private def eventsSchema(s: SparkSession, dir: String): StructType =
+    graft.engine.LakeFs.readParquet(s, s"$dir/events.parquet").schema
 
   private val counter = new AtomicInteger(0)
 

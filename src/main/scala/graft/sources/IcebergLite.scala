@@ -4,7 +4,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DecimalType, StructType}
 
-import java.nio.file.{Files, Paths}
+import graft.engine.LakeFs
+import org.apache.hadoop.fs.Path
 import scala.jdk.CollectionConverters._
 
 /** Metadata-file-addressed Iceberg table scan (SURVEY §2.A A6 / §2.B
@@ -78,8 +79,7 @@ object IcebergLite {
   /** Partition-spec entries of a table in spec order (`"col"`,
     * `"day(col)"`, …); empty when unpartitioned. */
   def partitionColumns(metadataPath: String): Seq[String] = {
-    val meta = mapper.readTree(
-      Files.readAllBytes(Paths.get(stripScheme(metadataPath))))
+    val meta = readMeta(metadataPath)
     val specs = meta.path("partition-specs")
     if (specs.isMissingNode || !specs.elements().hasNext) Nil
     else specs.elements().asScala.toSeq.headOption.toSeq
@@ -112,8 +112,7 @@ object IcebergLite {
     * one; tables written before schema recording return None and scan by
     * file-schema inference as before. */
   def declaredSchema(metadataPath: String): Option[StructType] = {
-    val meta = mapper.readTree(
-      Files.readAllBytes(Paths.get(stripScheme(metadataPath))))
+    val meta = readMeta(metadataPath)
     val ddl = meta.path("properties").path(SchemaDdlProp).asText("")
     if (ddl.isEmpty) None else Some(StructType.fromDDL(ddl))
   }
@@ -147,8 +146,7 @@ object IcebergLite {
     * old values can never resurrect — the name-based equivalent of
     * Iceberg's monotonically increasing field ids. */
   def tombstones(metadataPath: String): Set[String] = {
-    val meta = mapper.readTree(
-      Files.readAllBytes(Paths.get(stripScheme(metadataPath))))
+    val meta = readMeta(metadataPath)
     meta.path("properties").path(TombstoneProp).asText("")
       .split(',').map(_.trim).filter(_.nonEmpty).toSet
   }
@@ -160,8 +158,7 @@ object IcebergLite {
     * mechanism dormant — until a rename or a tombstone collision
     * happens. */
   def physicalNames(metadataPath: String): Map[String, String] = {
-    val meta = mapper.readTree(
-      Files.readAllBytes(Paths.get(stripScheme(metadataPath))))
+    val meta = readMeta(metadataPath)
     val node = meta.path("properties").path(PhysicalProp)
     if (!node.isObject) Map.empty
     else node.properties().asScala
@@ -254,162 +251,19 @@ object IcebergLite {
     commitEvolution(mp, evolved, newMap, tombstones(mp))
   }
 
-  // ── cross-process commit protocol (round-13 directive #5) ────────────
-  //
-  // Within one JVM, TableLocks serializes writers; across PROCESSES the
-  // version file itself is the lock. Publishing vN.metadata.json goes
-  // tmp-file → Files.createLink(target, tmp): the hard link is an atomic
-  // O_EXCL claim WITH content — either this process wins version N or the
-  // link fails because another process already committed it, and the
-  // loser aborts loudly with nothing published (the single-box analog of
-  // Iceberg's optimistic catalog commit). Data-writing commits
-  // additionally claim vN.claim BEFORE touching data/sN, so a losing
-  // process can never clobber the winner's already-published snapshot
-  // directory. A claim left by a crashed process blocks later writers
-  // loudly (the error names the file); it never silently unblocks.
-
-  /** Atomically publish `bytes` as `path`; loud conflict when another
-    * process committed the same version first. */
-  private def publishMetadata(path: java.nio.file.Path,
-      bytes: Array[Byte]): Unit = {
-    Files.createDirectories(path.getParent)
-    val tmp = Files.createTempFile(path.getParent, ".commit-", ".tmp")
-    try {
-      Files.write(tmp, bytes)
-      try Files.createLink(path, tmp)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          throw new java.util.ConcurrentModificationException(
-            s"concurrent commit: $path was published by another writer " +
-              "(another engine process committed this version first) — " +
-              "re-run the statement against the table's current state")
-      }
-    } finally Files.deleteIfExists(tmp)
-  }
-
-  /** Claim a data-writing commit's version before any data lands; `f`
-    * runs holding the claim. Loud when the version is already claimed by
-    * a LIVE writer in another process or already committed. A claim
-    * whose recorded holder pid no longer exists is a crashed writer's
-    * leftover: it is reclaimed LOUDLY (stderr names the stale claim and
-    * the dead holder) and the acquire retried — the one manual recovery
-    * step the r13 protocol still had (VERDICT r13 #2/next #2).
-    *
-    * Reclaim safety: deleting someone else's claim is only ever done
-    * while holding `<claim>.reclaimlock` (O_EXCL), and only after
-    * RE-READING the claim under that lock and re-verifying its recorded
-    * holder is still a dead pid. The earlier rename-based reclaim had a
-    * stolen-claim race (caught by the 4-way SIGKILL scenario): a
-    * reclaimer that read the dead claim could ATOMIC_MOVE a FRESH claim
-    * created in between — content is not part of a rename's atomicity —
-    * letting two writers into one snapshot directory. Under the lock,
-    * a wrong delete is impossible: new claims can only appear after the
-    * old file is gone, only the lock holder deletes foreign claims, and
-    * it deletes only what it re-verified as dead.
-    *
-    * Claims are ATOMIC-WITH-CONTENT (round-14 directive #2): the pid is
-    * written to a tmp file first and the claim appears via
-    * `Files.createLink` — the same publish trick [[publishMetadata]]
-    * uses — so a claim either exists with its holder pid or not at all.
-    * The old `createFile` + `writeString` two-step had a SIGKILL window
-    * that left an EMPTY claim, which (by policy: unparseable pid is
-    * never auto-reclaimed) blocked every later writer forever. That
-    * pid-less branch still blocks loudly, but it is dead code for
-    * claims this engine wrote — only a foreign tool's file trips it. */
-  private def withVersionClaim[T](metadataPath: java.nio.file.Path)(f: => T): T = {
-    val claim = metadataPath.resolveSibling(metadataPath.getFileName.toString + ".claim")
-    Files.createDirectories(claim.getParent)
-    val self = ProcessHandle.current().pid()
-    val pidRe = "pid=(\\d+)".r
-    def pidOf(s: String): Option[Long] =
-      pidRe.findFirstMatchIn(s).flatMap(m => m.group(1).toLongOption)
-    def deadForeign(p: Long): Boolean = p != self && ProcessHandle.of(p).isEmpty
-    /** O_EXCL-create `target` already containing `pid=self`: hard-link
-      * from a written tmp file, so there is no observable empty state. */
-    def claimWithPid(target: java.nio.file.Path): Boolean = {
-      val tmp = Files.createTempFile(target.getParent, ".claim-", ".tmp")
-      try {
-        Files.writeString(tmp, s"pid=$self\n")
-        try { Files.createLink(target, tmp); true }
-        catch { case _: java.nio.file.FileAlreadyExistsException => false }
-      } finally Files.deleteIfExists(tmp)
-    }
-    var attempts = 0
-    var acquired = false
-    while (!acquired) {
-      if (claimWithPid(claim)) acquired = true
-      else {
-          attempts += 1
-          val holder =
-            try Files.readString(claim).trim catch { case _: Throwable => "?" }
-          val holderDead = pidOf(holder).exists(deadForeign)
-          if (holderDead && attempts <= 10) {
-            val rlock = claim.resolveSibling(
-              claim.getFileName.toString + ".reclaimlock")
-            // atomic-with-pid like the claim itself: a reclaimer
-            // SIGKILLed at lock-create can never leave an empty rlock
-            val gotLock = claimWithPid(rlock) || {
-              // a reclaimer that crashed HOLDING the lock is itself a
-              // dead holder — clear it and retry on the next loop
-              val rh = try Files.readString(rlock).trim
-                       catch { case _: Throwable => "" }
-              if (pidOf(rh).exists(deadForeign))
-                Files.deleteIfExists(rlock)
-              false
-            }
-            if (gotLock) {
-              try {
-                // re-verify UNDER the lock before deleting: the claim we
-                // read may have been replaced by a live writer's
-                val cur = try Files.readString(claim).trim
-                          catch { case _: Throwable => "" }
-                if (pidOf(cur).exists(deadForeign)) {
-                  Files.deleteIfExists(claim)
-                  System.err.println("[graft] reclaimed stale version " +
-                    s"claim $claim ($cur — holder process is dead); " +
-                    "retrying the commit acquire")
-                }
-              } finally Files.deleteIfExists(rlock)
-            } else Thread.sleep(25)
-            // loop: retry the O_EXCL create
-          } else {
-            val ageSec =
-              try (System.currentTimeMillis() -
-                Files.getLastModifiedTime(claim).toMillis) / 1000
-              catch { case _: Throwable => -1L }
-            throw new java.util.ConcurrentModificationException(
-              s"concurrent commit: version claim $claim is held ($holder, " +
-                s"${ageSec}s old) — another engine process is committing " +
-                "this version (if its holder crashed before recording a " +
-                "pid, delete the claim file manually). Re-run the " +
-                "statement.")
-          }
-      }
-    }
-    try {
-      if (Files.exists(metadataPath))
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent commit: $metadataPath already exists — another " +
-            "process committed this version; re-run the statement " +
-            "against the table's current state")
-      f
-    } finally Files.deleteIfExists(claim)
-  }
-
   /** Write a new metadata version identical to `mp` except for the
     * declared schema, physical-name map, and tombstones. */
   private def commitEvolution(mp: String, schema: StructType,
       physMap: Map[String, String], tombs: Set[String]): String = {
     val version = "v(\\d+)\\.metadata\\.json$".r.findFirstMatchIn(mp)
       .map(_.group(1).toInt).getOrElse(1)
-    val tree = mapper.readTree(Files.readAllBytes(Paths.get(mp)))
+    val tree = readMeta(mp)
       .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
     writeSchemaInto(tree, schema, physMap, tombs)
-    val newPath = Paths.get(mp).getParent.resolve(
-      s"v${version + 1}.metadata.json")
-    publishMetadata(newPath, mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsBytes(tree))
-    newPath.toString
+    val newPath = sibling(mp, s"v${version + 1}.metadata.json")
+    IcebergCommit.publishMetadata(newPath,
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(tree))
+    newPath
   }
 
   /** Expire all snapshots but the current one: a new metadata version
@@ -426,9 +280,9 @@ object IcebergLite {
     // expired snapshots' manifests are deleted below — drop every cached
     // plan of this table so a scan of an expired metadata version fails
     // loudly instead of serving the memoized plan ([[planCache]])
-    val tableMetaDir = Paths.get(mp).getParent.toString
+    val tableMetaDir = new Path(mp).getParent.toString
     planCache.keySet.removeIf(_._1.startsWith(tableMetaDir))
-    val tree = mapper.readTree(Files.readAllBytes(Paths.get(mp)))
+    val tree = readMeta(mp)
       .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
     val snapId = tree.path("current-snapshot-id").asLong(-1)
     require(snapId >= 0, s"no current-snapshot-id in $mp")
@@ -437,31 +291,24 @@ object IcebergLite {
       _.path("snapshot-id").asLong() == snapId)
     require(keep.nonEmpty, s"snapshot $snapId not found in $mp")
     expire.foreach { s =>
-      val listDir = Paths.get(stripScheme(s.path("manifest-list").asText()))
-      if (Files.isDirectory(listDir)) {
+      val listDir = stripScheme(s.path("manifest-list").asText())
+      if (LakeFs.isDirectory(listDir)) {
         // manifests referenced by this expired list (may be shared with
         // the kept snapshot only via carry-forward REWRITES, which this
         // writer never does — each snapshot writes its own manifest dir)
-        val mans = readAvroRecords(listDir.toString)
-          .map(r => stripScheme(avroStr(r, "manifest_path").get))
-        def rmTree(p: java.nio.file.Path): Unit =
-          if (Files.exists(p)) {
-            Files.walk(p).iterator().asScala.toSeq.reverse
-              .foreach(Files.deleteIfExists(_))
-          }
-        mans.foreach(m => rmTree(Paths.get(m)))
-        rmTree(listDir)
+        readAvroRecords(listDir)
+          .foreach(r => LakeFs.delete(stripScheme(avroStr(r, "manifest_path").get)))
+        LakeFs.delete(listDir)
       }
     }
     val newSnaps = tree.putArray("snapshots")
     keep.foreach(newSnaps.add)
     val version = "v(\\d+)\\.metadata\\.json$".r.findFirstMatchIn(mp)
       .map(_.group(1).toInt).getOrElse(1)
-    val newPath = Paths.get(mp).getParent.resolve(
-      s"v${version + 1}.metadata.json")
-    publishMetadata(newPath, mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsBytes(tree))
-    newPath.toString
+    val newPath = sibling(mp, s"v${version + 1}.metadata.json")
+    IcebergCommit.publishMetadata(newPath,
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(tree))
+    newPath
   }
 
   /** Record `schema` in a metadata tree: the exact Spark DDL property +
@@ -681,29 +528,27 @@ object IcebergLite {
     * metadata overhead at local; on a real cluster the same round
     * trips). Bounded: cleared wholesale past 256 snapshots. */
   private val planCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long, Long), (Seq[DataEntry], Seq[DeleteEntry])]()
+    (String, Long, Long), (Seq[DataEntry], Seq[DeleteEntry])]()
+
+  /** Identity of a metadata file: (path, mtime, size). A DROP +
+    * re-CREATE lands the same path only after a data-writing job, so
+    * its mtime differs at the storage's millisecond resolution. */
+  private def metaKey(metadataPath: String): (String, Long, Long) = {
+    val mp = stripScheme(metadataPath)
+    val st = LakeFs.status(mp).getOrElse(throw new java.io.FileNotFoundException(mp))
+    (mp, st.getModificationTime, st.getLen)
+  }
+
   private def planFiles(spark: SparkSession, metadataPath: String)
       : (Seq[DataEntry], Seq[DeleteEntry]) = {
-    val p = Paths.get(stripScheme(metadataPath))
-    val attrs = Files.readAttributes(p,
-      classOf[java.nio.file.attribute.BasicFileAttributes])
-    // nanosecond mtime + creation time + size: a DROP + re-CREATE that
-    // lands the same path with the same byte size can no longer collide
-    // within a millisecond bucket (the old millis key theoretically
-    // could) — recreating a file with identical size in the same
-    // nanosecond with the same crtime is not a physical scenario
-    val key = (p.toString,
-      attrs.lastModifiedTime.to(java.util.concurrent.TimeUnit.NANOSECONDS),
-      attrs.creationTime.to(java.util.concurrent.TimeUnit.NANOSECONDS),
-      attrs.size)
+    val key = metaKey(metadataPath)
     if (planCache.size > 256) planCache.clear()
     planCache.computeIfAbsent(key, _ => planFilesUncached(spark, metadataPath))
   }
 
   private def planFilesUncached(spark: SparkSession, metadataPath: String)
       : (Seq[DataEntry], Seq[DeleteEntry]) = {
-    val meta = mapper.readTree(
-      Files.readAllBytes(Paths.get(stripScheme(metadataPath))))
+    val meta = readMeta(metadataPath)
     val snapId = meta.path("current-snapshot-id").asLong(-1)
     require(snapId >= 0, s"no current-snapshot-id in $metadataPath")
     val snapshot = meta.path("snapshots").elements().asScala
@@ -749,6 +594,18 @@ object IcebergLite {
   private def stripScheme(p: String): String =
     if (p.startsWith("file://")) p.stripPrefix("file://") else p
 
+  private def readMeta(metadataPath: String) =
+    mapper.readTree(LakeFs.readBytes(stripScheme(metadataPath)))
+
+  /** `name` in the directory of metadata file `mp`. */
+  private def sibling(mp: String, name: String): String =
+    new Path(new Path(mp).getParent, name).toString
+
+  /** The table directory of a metadata file
+    * (`<table>/metadata/vN.metadata.json`). */
+  def tableDir(metadataPath: String): String =
+    new Path(stripScheme(metadataPath)).getParent.getParent.toString
+
   // ── driver-side Avro manifest writing (metadata, not data) ─────────────
 
   private val manifestSchema = new org.apache.avro.Schema.Parser().parse(
@@ -776,15 +633,15 @@ object IcebergLite {
     * API in-process; do the same. */
   private def readAvroRecords(path: String)
       : Seq[org.apache.avro.generic.GenericRecord] = {
-    import org.apache.avro.file.DataFileReader
+    import org.apache.avro.file.DataFileStream
     import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
-    val p = new java.io.File(stripScheme(path))
-    val files: Seq[java.io.File] =
-      if (p.isDirectory)
-        p.listFiles().filter(_.getName.endsWith(".avro")).sortBy(_.getName).toSeq
+    val p = stripScheme(path)
+    val files =
+      if (LakeFs.isDirectory(p)) LakeFs.dataFiles(p).filter(_.endsWith(".avro"))
       else Seq(p)
     files.flatMap { f =>
-      val r = DataFileReader.openReader(f, new GenericDatumReader[GenericRecord]())
+      val r = new DataFileStream(LakeFs.open(f),
+        new GenericDatumReader[GenericRecord]())
       try {
         val buf = scala.collection.mutable.ArrayBuffer.empty[GenericRecord]
         while (r.hasNext) buf += r.next()
@@ -809,11 +666,10 @@ object IcebergLite {
 
   private def avroOut(dir: String, schema: org.apache.avro.Schema)
       : org.apache.avro.file.DataFileWriter[org.apache.avro.generic.GenericRecord] = {
-    Files.createDirectories(Paths.get(dir))
     val w = new org.apache.avro.file.DataFileWriter(
       new org.apache.avro.generic.GenericDatumWriter[
         org.apache.avro.generic.GenericRecord](schema))
-    w.create(schema, new java.io.File(dir, "part-00000.avro"))
+    w.create(schema, LakeFs.create(s"$dir/part-00000.avro"))
   }
 
   /** One manifest row per (status, file_path, partition, bounds,
@@ -968,20 +824,14 @@ object IcebergLite {
   } catch { case _: Throwable => (None, None) }
 
   private val boundsCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long, Long), Map[String, Map[String, (String, String, String)]]]()
+    (String, Long, Long), Map[String, Map[String, (String, String, String)]]]()
 
   /** Per-file column bounds of the table's current snapshot:
     * path → column → (domain, lo, hi). Parsed once per metadata
     * identity; files without recorded bounds are absent (never prune). */
   def fileBounds(spark: SparkSession, metadataPath: String)
       : Map[String, Map[String, (String, String, String)]] = {
-    val p = Paths.get(stripScheme(metadataPath))
-    val attrs = Files.readAttributes(p,
-      classOf[java.nio.file.attribute.BasicFileAttributes])
-    val key = (p.toString,
-      attrs.lastModifiedTime.to(java.util.concurrent.TimeUnit.NANOSECONDS),
-      attrs.creationTime.to(java.util.concurrent.TimeUnit.NANOSECONDS),
-      attrs.size)
+    val key = metaKey(metadataPath)
     if (boundsCache.size > 256) boundsCache.clear()
     boundsCache.computeIfAbsent(key, _ =>
       planFiles(spark, metadataPath)._1.flatMap { e =>
@@ -1042,7 +892,7 @@ object IcebergLite {
     * `universql/warehouse/duckdb.py:368`). The table's partition spec is
     * read from the current metadata and applied to the appended files. */
   def append(spark: SparkSession, df: DataFrame, metadataPath: String): String = {
-    val dir = Paths.get(stripScheme(metadataPath)).getParent.getParent.toString
+    val dir = tableDir(metadataPath)
     val version = "v(\\d+)\\.metadata\\.json$".r.findFirstMatchIn(metadataPath)
       .map(_.group(1).toInt).getOrElse(1)
     commit(spark, df, dir, version + 1,
@@ -1129,7 +979,7 @@ object IcebergLite {
       "affected paths must be current data files of the table")
     val keep = entries.filterNot(e => affected.contains(e.path))
       .map(e => (e.path, e.partition, e.bounds, e.records)).distinct
-    val dir = Paths.get(stripScheme(metadataPath)).getParent.getParent.toString
+    val dir = tableDir(metadataPath)
     val version = "v(\\d+)\\.metadata\\.json$".r.findFirstMatchIn(metadataPath)
       .map(_.group(1).toInt).getOrElse(1)
     commit(spark, next, dir, version + 1, carryForward = keep,
@@ -1143,7 +993,7 @@ object IcebergLite {
     require(deletes.isEmpty,
       "compact with pending row-level deletes is unsupported; " +
       "run a copy-on-write rewrite (UPDATE/DELETE already lands one)")
-    def sizeOf(p: String): Long = new java.io.File(p).length()
+    def sizeOf(p: String): Long = LakeFs.size(p)
     val byPartition = entries.groupBy(_.partition)
     val toCompact = byPartition.iterator.flatMap { case (_, es) =>
       val small = es.filter(e => sizeOf(e.path) < smallBytes)
@@ -1170,7 +1020,7 @@ object IcebergLite {
         merged0.repartition(
           partFields.map(pf => shadowValueExpr(merged0, pf)).toIndexedSeq: _*)
       } else merged0.repartition(outParts)
-    val dir = Paths.get(stripScheme(metadataPath)).getParent.getParent.toString
+    val dir = tableDir(metadataPath)
     val version = "v(\\d+)\\.metadata\\.json$".r.findFirstMatchIn(metadataPath)
       .map(_.group(1).toInt).getOrElse(1)
     commit(spark, merged, dir, version + 1, carryForward = keep,
@@ -1185,8 +1035,8 @@ object IcebergLite {
     // the claim is taken BEFORE any data lands in data/s<N>: a process
     // losing the version race must abort without having overwritten the
     // winner's already-published snapshot directory
-    withVersionClaim(Paths.get(
-        s"$tableDir/metadata/v$newVersion.metadata.json")) {
+    IcebergCommit.withVersionClaim(
+        s"$tableDir/metadata/v$newVersion.metadata.json") {
       commitClaimed(spark, df0, tableDir, newVersion, carryForward,
         partitionBy, baseMeta)
     }
@@ -1269,8 +1119,7 @@ object IcebergLite {
         .write.mode("overwrite")
         .partitionBy(partFields.map(shadowNameOf): _*).parquet(dataDir)
     } else df.write.mode("overwrite").parquet(dataDir)
-    val newFiles = Files.walk(Paths.get(dataDir)).iterator().asScala
-      .map(_.toString).filter(_.endsWith(".parquet")).toSeq.sorted
+    val newFiles = LakeFs.dataFiles(dataDir).filter(_.endsWith(".parquet"))
     // Spark escapes partition-dir values as %XX sequences; decode only
     // those (URLDecoder would also turn '+' into a space). Multi-column
     // values join with "/" in spec order.
@@ -1321,14 +1170,13 @@ object IcebergLite {
          | "location": "$tableDir",
          | "current-snapshot-id": $snapId,
          | "snapshots": $snapshotsJson$specJson}""".stripMargin
-    Files.createDirectories(Paths.get(metadataPath).getParent)
     // record the declared LOGICAL schema (evolved base + new columns) and
     // the evolution state, so later scans project every file — old or
     // new — under one schema
     val tree = mapper.readTree(json.getBytes)
       .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
     writeSchemaInto(tree, recorded0, physMap, baseTombs)
-    publishMetadata(Paths.get(metadataPath),
+    IcebergCommit.publishMetadata(metadataPath,
       mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(tree))
     metadataPath
   }

@@ -315,6 +315,18 @@ class SessionSpec extends AnyFunSuite {
     assert(s.sql("SELECT count(*) AS n FROM cust_nation").collect()(0).getLong(0) == 150)
   }
 
+  test("CREATE VIEW: CURRENT_DATABASE() and CURRENT_SCHEMA() take the session's values") {
+    val s = newSession()
+    s.sql("""CREATE OR REPLACE VIEW ctx_v AS
+             SELECT CURRENT_DATABASE() AS d, CURRENT_SCHEMA() AS sc""")
+    val direct = s.sql("SELECT CURRENT_DATABASE() AS d, CURRENT_SCHEMA() AS sc")
+      .collect()(0)
+    val viaView = s.sql("SELECT d, sc FROM ctx_v").collect()(0)
+    assert(direct.getString(0) == "GRAFT" && direct.getString(1) == "PUBLIC")
+    assert(viaView.getString(0) == direct.getString(0) &&
+      viaView.getString(1) == direct.getString(1), viaView.toString)
+  }
+
   test("CREATE TABLE with column defs + INSERT INTO ... SELECT") {
     val s = newSession()
     s.sql("""CREATE OR REPLACE TABLE summary (

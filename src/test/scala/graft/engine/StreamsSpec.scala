@@ -461,4 +461,35 @@ class StreamsSpec extends AnyFunSuite {
     assert(Streams.lastMode == "cow-diff-pruned", Streams.lastMode)
     assert(d == Map(("INSERT", true) -> 4L, ("DELETE", true) -> 4L), d.toString)
   }
+
+  test("APPEND_ONLY stream shared across sessions keeps every session's inserts") {
+    val catalog = scala.collection.concurrent.TrieMap.empty[FQN, TableRef]
+    val streams = new StreamCatalog
+    val a = new GraftSession(spark, sharedCatalog = Some(catalog),
+      sharedStreams = Some(streams))
+    val b = new GraftSession(spark, sharedCatalog = Some(catalog),
+      sharedStreams = Some(streams))
+    a.sql("CREATE OR REPLACE TABLE sh_t AS SELECT 0 AS k")
+    a.sql("CREATE STREAM sh_s ON TABLE sh_t APPEND_ONLY = TRUE")
+    a.sql("INSERT INTO sh_t SELECT 1")
+    b.sql("INSERT INTO sh_t SELECT 2")
+    a.sql("DELETE FROM sh_t WHERE k = 1")
+    def ks(s: GraftSession) = s.sql("SELECT k FROM sh_s ORDER BY k").collect()
+      .map(_.getAs[Number](0).longValue()).toSeq
+    assert(ks(a) == Seq(1L, 2L), s"session A: ${Streams.lastMode}")
+    assert(Streams.lastMode == "insert-history", Streams.lastMode)
+    assert(ks(b) == Seq(1L, 2L), s"session B: ${Streams.lastMode}")
+    a.sql("DROP STREAM sh_s"); a.sql("DROP TABLE sh_t")
+  }
+
+  test("the insert log records only tables a stream watches") {
+    val streams = new StreamCatalog
+    val s = new GraftSession(spark, sharedStreams = Some(streams))
+    s.sql("CREATE OR REPLACE TABLE il_t AS SELECT 0 AS k")
+    s.sql("INSERT INTO il_t SELECT 1")
+    assert(!streams.insertLog.contains(s.qualify("il_t")))
+    s.sql("CREATE STREAM il_s ON TABLE il_t APPEND_ONLY = TRUE")
+    s.sql("INSERT INTO il_t SELECT 2")
+    assert(streams.insertLog(s.qualify("il_t")).length == 1)
+  }
 }
