@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
 object Bench {
 
   private case class HeavyOut(full: String, compact: String,
-      dir: String, secs: Map[String, Double], autoFailed: Boolean = false,
+      dir: String, secs: Map[String, Double], gateFailed: Boolean = false,
       contaminated: Boolean = false)
 
   /** Execute the query's FULL physical plan and count its rows without
@@ -68,17 +68,9 @@ object Bench {
       // no longer leaks into this session — round 5's h09b numbers
       // silently depended on that leak)
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      // columnar low-cardinality partial aggregation (LowCardAgg): AUTO —
-      // the same NDV-stats-gated mode real sessions run (round-10
-      // directive #4: the bench eats its own dogfood; heavyPhase collects
-      // AutoStats on the heavy tables so the gate can evaluate). Env
-      // override force/off stays the A/B lever for probes.
-      .config("spark.graft.lowCardAgg",
-        sys.env.getOrElse("SPARK_GRAFT_LOWCARD", "auto"))
-      // integral COUNT(DISTINCT) as a mergeable bitmap aggregate —
-      // probed 4-5× on h04's honest (full-eval) shape; AUTO as above
-      .config("spark.graft.bitmapDistinct",
-        sys.env.getOrElse("SPARK_GRAFT_BITMAP", "auto"))
+      // the engine's plan rules, each stats-gated exactly as in a real
+      // session (heavyPhase collects AutoStats on the heavy tables so the
+      // LowCardAgg and DistinctToBitmap gates can evaluate)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -185,9 +177,9 @@ object Bench {
     // not be able to land between the metric line and end-of-output
     spark.stop()
     println(out)
-    if (heavyOut.exists(_.autoFailed)) {
-      System.err.println("FATAL: stats-gated auto did NOT fire on the " +
-        "eligible heavy shapes (see heavy_gate_mode) — artifact written, " +
+    if (heavyOut.exists(_.gateFailed)) {
+      System.err.println("FATAL: a stats-gated rule did NOT fire on the " +
+        "eligible heavy shapes (see heavy_gate) — artifact written, " +
         "exiting non-zero (round-11 directive #7)")
       sys.exit(2)
     }
@@ -264,18 +256,14 @@ object Bench {
     val li = spark.read.parquet(s"$dir/lineitem")
     val ev = spark.read.parquet(s"$dir/events")
     val ord = spark.read.parquet(s"$dir/orders")
-    // auto-gate plumbing (round-10 directive #4): the heavy queries run
-    // under the SAME stats-gated `auto` a real session gets. Stats flow
-    // only with CBO on; the heavy tables exceed the lazy-collect size cap
-    // (a deployment folds stats into the write job instead — AutoStats
-    // class doc), so raise it and collect once here, outside the timed
-    // region. Under force/off the collection is skipped.
-    if (spark.conf.get("spark.graft.lowCardAgg") == "auto" ||
-        spark.conf.get("spark.graft.bitmapDistinct") == "auto") {
-      spark.conf.set("spark.sql.cbo.enabled", "true")
-      spark.conf.set("spark.graft.autoStats.maxBytes", (64L << 30).toString)
-      Seq(li, ev, ord).foreach(graft.engine.AutoStats.maybeCollect(spark, _))
-    }
+    // gate plumbing (round-10 directive #4): the heavy queries run under
+    // the SAME stats gates a real session gets. Stats flow only with CBO
+    // on; the heavy tables exceed the lazy-collect size cap (a deployment
+    // folds stats into the write job instead — AutoStats class doc), so
+    // collect them uncapped, once, outside the timed region.
+    spark.conf.set("spark.sql.cbo.enabled", "true")
+    Seq(li, ev, ord).foreach(
+      graft.engine.AutoStats.maybeCollect(spark, _, maxBytes = Long.MaxValue))
     val liRows = li.count()
     val evRows = ev.count()
     val ordRows = ord.count()
@@ -576,14 +564,11 @@ object Bench {
     val floorsJson = if (floors.isEmpty) "" else
       s""","heavy_floors":${floors.toSeq.sorted.map { case (k, v) =>
         s"\"" + k + "\":" + v }.mkString("{", ",", "}")}"""
-    // audit: which gate mode produced these numbers, and whether the
-    // low-card/bitmap plans actually FIRED under it (auto regressing to
-    // stock silently would otherwise masquerade as a perf loss). Under
-    // `auto`, a non-fire FAILS THE BENCH (round-11 directive #7): the
+    // audit: whether the low-card/bitmap plans actually FIRED (a gate
+    // regressing to stock silently would otherwise masquerade as a perf
+    // loss). A non-fire FAILS THE BENCH (round-11 directive #7): the
     // artifact is still written, but the process exits non-zero so a
     // silent gate regression can't publish as a perf number.
-    val lcMode = spark.conf.get("spark.graft.lowCardAgg")
-    val bmMode = spark.conf.get("spark.graft.bitmapDistinct")
     val (lcFired, bmFired) = {
       def fired(df: org.apache.spark.sql.DataFrame, mark: String): Boolean =
         try {
@@ -595,13 +580,10 @@ object Bench {
        fired(li.groupBy("l_returnflag")
         .agg(countDistinct(col("l_orderkey"))), "bitmap_distinct_count"))
     }
-    val autoFailed =
-      sys.env.getOrElse("SPARK_GRAFT_AUTO_CHECK", "1") != "0" &&
-        ((lcMode == "auto" && !lcFired) || (bmMode == "auto" && !bmFired))
-    val modeJson =
-      s""","heavy_gate_mode":{"lowCardAgg":"$lcMode","bitmapDistinct":"$bmMode",""" +
-        s""""lowCardAggFired":$lcFired,"bitmapFired":$bmFired}""" +
-        (if (autoFailed) s""","auto_gate_failed":true""" else "")
+    val gateFailed = !lcFired || !bmFired
+    val firedJson =
+      s""","heavy_gate":{"lowCardAggFired":$lcFired,"bitmapFired":$bmFired}""" +
+        (if (gateFailed) s""","gate_failed":true""" else "")
     // per-sample mechanism evidence (directive #2): GC ms, spill bytes,
     // shuffle fetch-wait ms per timed sample, and the join operator AQE
     // picked per h09 sample — bimodality must name its cause
@@ -620,7 +602,7 @@ object Bench {
         s""","heavy_metrics_undrained":[${undrained.map("\"" + _ + "\"").mkString(",")}]"""
        else "")
     val full =
-      s""","heavy":$hq,"heavy_total":$hTotal,"heavy_sweeps":$sweeps$modeJson,""" +
+      s""","heavy":$hq,"heavy_total":$hTotal,"heavy_sweeps":$sweeps$firedJson,""" +
       s""""heavy_spread":$spreads,"heavy_samples":$raw$mechJson,""" +
       s""""heavy_sweep_loadavg":${sweepLoads.mkString("[", ",", "]")},""" +
       s""""heavy_sweep_ext_cores":${sweepExt.map(v => f"$v%.2f").mkString("[", ",", "]")},""" +
@@ -637,7 +619,7 @@ object Bench {
       s""","heavy":$hqShort,"heavy_total":${f"$hTotal%.2f"},""" +
       s""""heavy_sweeps":$sweeps$failedJson$contendedJson"""
     HeavyOut(full, compact, dir,
-      timed.collect { case (k, v, _, true) => k -> v }.toMap, autoFailed,
+      timed.collect { case (k, v, _, true) => k -> v }.toMap, gateFailed,
       contaminated = contended || overChase.nonEmpty)
   }
 

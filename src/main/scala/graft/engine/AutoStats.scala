@@ -27,13 +27,12 @@ import org.apache.spark.sql.types._
   * string columns also get avgLen/maxLen collected (ADVICE r5) — without
   * them a string falls back to defaultSize (20 B) and a string-heavy
   * table could be under-estimated into an unintended broadcast.
-  * Stats flow to plans only when CBO is on
-  * (`spark.sql.cbo.enabled`, set by [[GraftSession]] when auto-stats is
-  * enabled).
+  * Stats flow to plans only when CBO is on (`spark.sql.cbo.enabled`,
+  * set by [[GraftSession]]).
   *
   * Scale notes (100 TB): the collection pass is one scan with a 2-agg
-  * column budget (ndv sketch + null count), capped by
-  * `spark.graft.autoStats.maxBytes` (default 1 GiB) — at warehouse scale
+  * column budget (ndv sketch + null count), capped at [[LazyCollectBytes]]
+  * (1 GiB) of input unless the caller raises the cap — at warehouse scale
   * you fold the same aggregates into the WRITE job (`Dataset.observe`
   * rides the write for free) rather than re-scanning at attach; the
   * store/attach mechanics here are identical either way. Writes through
@@ -51,23 +50,17 @@ object AutoStats {
     * kept OUTSIDE the catalog stats on purpose: a CatalogColumnStat on a
     * TimestampNTZ column crashes Spark 4.1's FilterEstimation (see
     * [[eligible]]), and CBO has no use for the range anyway. The ONE
-    * consumer is [[graft.plans.LowCardAgg]]'s auto gate, which bounds
+    * consumer is [[graft.plans.LowCardAgg]]'s stats gate, which bounds
     * the NDV of a floored-timestamp grouping key (`date_trunc('hour',
     * ts)` → [[graft.functions.FloorTimestamp]]) by range/unit — the
     * time-bucketed GROUP BY is the canonical observability shape, and
-    * without this bound auto could never fire on it (a computed column
+    * without this bound the gate could never fire on it (a computed column
     * has no stats of its own). */
   private val tsRangeStore =
     scala.collection.concurrent.TrieMap.empty[(String, String), (Long, Long)]
 
-  def enabled(spark: SparkSession): Boolean =
-    try spark.conf.get("spark.graft.autoStats", "true").trim.toBoolean
-    catch { case _: IllegalArgumentException => false }
-
-  private def maxBytes(spark: SparkSession): Long =
-    try spark.conf.get("spark.graft.autoStats.maxBytes",
-      (1L << 30).toString).trim.toLong
-    catch { case _: NumberFormatException => 1L << 30 }
+  /** Input size above which the lazy collection skips a table. */
+  private val LazyCollectBytes: Long = 1L << 30
 
   /** Root-path key of the plan's single LogicalRelation leaf (None when
     * the plan has zero or several scans — Iceberg delete-merge plans and
@@ -94,17 +87,17 @@ object AutoStats {
   }
 
   /** Collect rowCount + per-column (approx ndv, null count) for `df`'s
-    * scan, once per path per JVM. No-op when disabled, already
-    * collected, keyless, or over the size cap. */
-  def maybeCollect(spark: SparkSession, df: DataFrame): Unit = {
-    if (!enabled(spark)) return
+    * scan, once per path per JVM. No-op when already collected, keyless,
+    * or over `maxBytes` of input. */
+  def maybeCollect(spark: SparkSession, df: DataFrame,
+      maxBytes: Long = LazyCollectBytes): Unit = {
     val (key, lr) = keyOf(df.queryExecution.analyzed) match {
       case Some(kl) => kl
       case None => return
     }
     if (lr.catalogTable.isDefined) return // catalog tables bring their own
     if (store.contains(key) || skipped.contains(key)) return
-    if (lr.relation.sizeInBytes > maxBytes(spark)) {
+    if (lr.relation.sizeInBytes > maxBytes) {
       skipped.put(key, ()); return
     }
     try {
@@ -197,7 +190,6 @@ object AutoStats {
     * with zero extra scans). */
   def recordEmpty(spark: SparkSession, path: String,
       schema: StructType): Unit = {
-    if (!enabled(spark)) return
     val colStats = schema.fields.filter(eligible)
       .filter(f => !f.name.contains("`")).take(32).map { f =>
         f.name -> CatalogColumnStat(
@@ -220,7 +212,6 @@ object AutoStats {
     * would mis-describe the table. */
   def observedForAppend(spark: SparkSession, df: DataFrame,
       path: String): (DataFrame, () => Unit) = {
-    if (!enabled(spark)) return (df, () => ())
     val (instrumented, stats) = observed(spark, df)
     val record = () => {
       val key = qualifiedKey(spark, path)
@@ -315,7 +306,6 @@ object AutoStats {
     * }}} */
   def observedForWrite(spark: SparkSession, df: DataFrame,
       path: String): (DataFrame, () => Unit) = {
-    if (!enabled(spark)) return (df, () => ())
     val (instrumented, stats) = observed(spark, df)
     val record = () => stats().foreach { s =>
       val key = qualifiedKey(spark, path)

@@ -1076,24 +1076,13 @@ final class GraftSession(
   // CBO on and rowCount set, Spark's toPlanStats recomputes sizeInBytes
   // as rowCount × estimated row width, so AutoStats collects avg string
   // lengths too (ADVICE r5) to keep broadcast decisions realistic.
-  if (AutoStats.enabled(spark))
-    spark.conf.set("spark.sql.cbo.enabled", "true")
+  spark.conf.set("spark.sql.cbo.enabled", "true")
   // trust bucket pre-sorts: with one file per bucket (CLUSTER BY CTAS and
   // OPTIMIZE both write exactly one) the scan reports its sort order and
   // co-located joins skip their Sorts entirely. Off by default in Spark
   // because it lists files at planning time; bounded here — bucket counts
   // are small and the file index is already materialized for the scan.
   spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-  // columnar low-cardinality partial aggregation, NDV-stats-gated: fires
-  // only when AutoStats bound the grouping-key cardinality small — the
-  // probed 12-17% win on grouped scans ([[graft.plans.LowCardAgg]],
-  // probes/lowcard_agg.json); missing stats keep the stock plan
-  spark.conf.set("spark.graft.lowCardAgg", "auto")
-  // integral COUNT(DISTINCT) → mergeable bitmap aggregate when stats
-  // bound the key NDV (exact at any gating; the gate is a memory
-  // trade) — probed 4-5× on the h04 shape ([[graft.plans.DistinctToBitmap]],
-  // probes/bitmap_distinct.json)
-  spark.conf.set("spark.graft.bitmapDistinct", "auto")
 
   def attachLake(dir: String, database: String = "GRAFT",
       schema: String = "PUBLIC",
@@ -1139,9 +1128,7 @@ final class GraftSession(
         s"__v${snapshotSeq.incrementAndGet()}"
       // the rewritten snapshot keeps the table's partition spec; the
       // rewrite IS the table, so its observed stats ride the commit
-      val (instrumented, stats) =
-        if (AutoStats.enabled(spark)) AutoStats.observed(spark, next)
-        else (next, () => None)
+      val (instrumented, stats) = AutoStats.observed(spark, next)
       val newMeta = graft.sources.IcebergLite.write(spark, instrumented, dir,
         graft.sources.IcebergLite.partitionColumns(ref.path.get))
       AutoStats.recordIcebergWrite(spark, newMeta, stats())
@@ -2091,9 +2078,7 @@ final class GraftSession(
             // CREATE ICEBERG TABLE AS (A9): real spec-layout Iceberg
             // commit; the batch IS the table, so its observed stats are
             // the table's — recorded at write, no lazy re-scan
-            val (instrumented, stats) =
-              if (AutoStats.enabled(spark)) AutoStats.observed(spark, df)
-              else (df, () => None)
+            val (instrumented, stats) = AutoStats.observed(spark, df)
             val metadataPath = graft.sources.IcebergLite.write(spark,
               instrumented, path, partitionBy = createPartitionBy)
             AutoStats.recordIcebergWrite(spark, metadataPath, stats())
@@ -2462,9 +2447,7 @@ final class GraftSession(
       // under the new snapshot's scan key — without this every
       // post-commit read re-collected stats with a full scan job
       // (AutoStats class doc: at scale stats must ride the write job)
-      val (instrumented, stats) =
-        if (AutoStats.enabled(spark)) AutoStats.observed(spark, aligned)
-        else (aligned, () => None)
+      val (instrumented, stats) = AutoStats.observed(spark, aligned)
       val newMeta =
         if (overwrite)
           graft.sources.IcebergLite.write(spark, instrumented,

@@ -79,6 +79,16 @@ object LakeFs {
     fsOf(p).open(p)
   }
 
+  /** A reader over one parquet file (its footer is read on open), on the
+    * context's own configuration. Both the input file and the read
+    * options take it explicitly: parquet's option-less `open` builds a
+    * fresh `Configuration` per call, which loads the default resources
+    * again — ~9 ms per file, 20× the open itself. */
+  def parquetReader(path: String): org.apache.parquet.hadoop.ParquetFileReader =
+    org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(path), conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
+
   /** A new file at `path` (replacing one already there). */
   def create(path: String): java.io.OutputStream = {
     val p = new Path(path)

@@ -52,10 +52,7 @@ object Bucketing {
     // CatalogTable never applies — observe the write job's stats and file
     // them through the catalog's own channel (what ANALYZE would write);
     // the stats visitor then sees rowCount/ndv with zero extra scans
-    val (instrumented, stats) =
-      if (graft.engine.AutoStats.enabled(spark))
-        graft.engine.AutoStats.observed(spark, df)
-      else (df, () => None)
+    val (instrumented, stats) = graft.engine.AutoStats.observed(spark, df)
     try {
       val w = instrumented.repartition(buckets, keys.map(col): _*)
         .write.mode("overwrite")

@@ -36,8 +36,7 @@ import org.apache.spark.sql.types._
   * user-specified schema, so the shadow partition columns keep their
   * original STRING typing regardless of the session's
   * partition-inference conf, and [[PartitionFilterMirror]]'s directory
-  * pruning composes with the file-level skip. Disable with
-  * `spark.graft.boundsPrune=false` (the A/B lever the specs use).
+  * pruning composes with the file-level skip.
   */
 object BoundsFilePrune extends Rule[LogicalPlan] {
 
@@ -110,8 +109,7 @@ object BoundsFilePrune extends Rule[LogicalPlan] {
     if (p.startsWith("file:")) p.replaceFirst("^file:/+", "/") else p
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!conf.getConfString("spark.graft.boundsPrune", "true").toBoolean) plan
-    else plan.transform {
+    plan.transform {
       case f @ Filter(cond, l: LogicalRelation)
           if l.relation.isInstanceOf[HadoopFsRelation] &&
             l.relation.asInstanceOf[HadoopFsRelation]

@@ -22,15 +22,13 @@ import org.apache.spark.sql.types._
   * distinct value per (task, group) — the roaring-lite containers never
   * allocate by key RANGE, so scattered 64-bit keys stay array-paged.
   *
-  * `spark.graft.bitmapDistinct`: off (default) | force | auto. `auto`
-  * fires when column stats (CBO / AutoStats) bound the key's NDV under
-  * `spark.graft.bitmapDistinct.maxNdv` (default 64 M ≈ 160 MB worst-case
-  * state per group) — beyond that the row-dedup plan's spillability is
+  * The rule fires when column stats (CBO / AutoStats) bound the key's
+  * NDV by [[MaxNdv]] (64 M ≈ 160 MB worst-case state per group) —
+  * beyond that, or without stats, the row-dedup plan's spillability is
   * the safer trade. Filters/multi-arg/non-integral distincts bail. */
 object DistinctToBitmap extends Rule[LogicalPlan] {
 
-  private val ModeConf = "spark.graft.bitmapDistinct"
-  private val MaxNdvConf = "spark.graft.bitmapDistinct.maxNdv"
+  private val MaxNdv = BigInt(64L << 20)
 
   private def integral(t: DataType): Boolean = t match {
     case LongType | IntegerType | ShortType | ByteType | DateType |
@@ -38,32 +36,26 @@ object DistinctToBitmap extends Rule[LogicalPlan] {
     case _ => false
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val mode = conf.getConfString(ModeConf, "off").toLowerCase
-    if (mode == "off") return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {
       case a: Aggregate =>
         a.transformExpressionsUp {
           case ae @ AggregateExpression(Count(Seq(child)), _, true, None, _)
-              if integral(child.dataType) &&
-                (mode == "force" || (mode == "auto" && lowNdv(a, child))) =>
+              if integral(child.dataType) && lowNdv(a, child) =>
             ae.copy(aggregateFunction = BitmapDistinctCount(child),
               isDistinct = false)
         }
     }
-  }
 
-  /** auto gate: the distinct column's NDV is known and bounded. */
+  /** The gate: the distinct column's NDV is known and bounded. */
   private def lowNdv(a: Aggregate,
-      child: org.apache.spark.sql.catalyst.expressions.Expression): Boolean = {
-    val maxNdv = conf.getConfString(MaxNdvConf, (64L << 20).toString).toLong
+      child: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
     child match {
       case attr: Attribute =>
         a.child.stats.attributeStats
           .find(_._1.exprId == attr.exprId)
           .flatMap(_._2.distinctCount)
-          .exists(_ <= BigInt(maxNdv))
+          .exists(_ <= MaxNdv)
       case _ => false
     }
-  }
 }

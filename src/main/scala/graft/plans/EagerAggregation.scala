@@ -28,9 +28,9 @@ import org.apache.spark.sql.types.LongType
   * SLOWER on the h09 bench shape under the old count() drain, and
   * re-confirmed +35% slower under the honest full-plan drain —
   * probes/eager_agg_honest.json). So the rule fires only when column
-  * statistics prove an estimated reduction of at least
-  * `spark.graft.eagerAggregation.minReduction` (default 16) rows per
-  * distinct key combination: reduction = rowCount / ndv(join keys), with
+  * statistics prove an estimated reduction of at least [[MinReduction]]
+  * (16) rows per distinct key combination: reduction = rowCount /
+  * ndv(join keys), with
   * ndv of a multi-key combination upper-bounded by the product of
   * per-key ndvs (an ndv over-estimate under-estimates reduction, so the
   * gate errs toward NOT firing). Without rowCount + per-key ndv stats
@@ -51,31 +51,20 @@ import org.apache.spark.sql.types.LongType
   *   - NEITHER side fits the broadcast threshold (a broadcast join has no
   *     fact-side exchange for the pre-aggregate to ride — rewriting would
   *     add one, so stats-small joins are left alone);
-  *   - the stats gate above estimates reduction ≥ minReduction.
+  *   - the stats gate above estimates reduction ≥ MinReduction.
   */
 object EagerAggregation extends Rule[LogicalPlan] with PredicateHelper {
 
-  private val FlagKey = "spark.graft.eagerAggregation"
-  private val MinReductionKey = "spark.graft.eagerAggregation.minReduction"
+  private val MinReduction = 16.0
 
-  private def enabled: Boolean =
-    try conf.getConfString(FlagKey, "true").trim.toBoolean
-    catch { case _: IllegalArgumentException => false }
-
-  private def minReduction: Double =
-    try conf.getConfString(MinReductionKey, "16").trim.toDouble
-    catch { case _: NumberFormatException => 16.0 }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) plan
-    else plan.transformUp {
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    plan.transformUp {
       case agg @ Aggregate(_, _, child, _) if agg.resolved =>
         stripPruningProject(child) match {
           case Some(join) => tryRewrite(agg, join).getOrElse(agg)
           case None => agg
         }
     }
-  }
 
   /** Column-pruning Projects between Aggregate and Join are transparent for
     * this rewrite (pruning re-runs after us); anything computing new values
@@ -172,7 +161,7 @@ object EagerAggregation extends Rule[LogicalPlan] with PredicateHelper {
       return None
     }
     // stats-based profitability gate (see scaladoc): no stats ⇒ no rewrite
-    if (!estimatedReduction(aggSide, keys).exists(_ >= minReduction)) return None
+    if (!estimatedReduction(aggSide, keys).exists(_ >= MinReduction)) return None
 
     // partial layer: one alias per distinct aggregate call
     val partials = collection.mutable.LinkedHashMap.empty[Expression, Alias]

@@ -5,9 +5,11 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression, GenericInternalRow, NamedExpression, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Partial, Sum}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec, ProjectExec, SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec, ObjectHashAggregateExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
@@ -28,12 +30,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * are the standard partial layout (group keys ++ inputAggBuffer
   * values), so the exchange and final aggregate run unchanged.
   *
-  * Sound at ANY cardinality: when the map exceeds
-  * `spark.graft.lowCardAgg.flushGroups` (default 1M) the operator emits
-  * the current groups as partial rows and resets — partial outputs are
-  * mergeable downstream by definition, so a flood of distinct keys
-  * degrades to roughly the skip-partial-aggregation behavior instead of
-  * unbounded memory.
+  * Sound at ANY cardinality: when the map exceeds [[FlushGroups]] (1M)
+  * groups the operator emits the current groups as partial rows and
+  * resets — partial outputs are mergeable downstream by definition, so a
+  * flood of distinct keys degrades to roughly the skip-partial-
+  * aggregation behavior instead of unbounded memory.
   *
   * Scope (bails to stock otherwise): grouping keys and aggregate inputs
   * are scan columns or [[FloorTimestamp]] of one (what
@@ -45,18 +46,26 @@ import org.apache.spark.unsafe.types.UTF8String
   * Predicate into a selection mask (stock FilterExec cost), so the
   * commonest filtered-group-by shape rides the columnar path too.
   *
-  * `spark.graft.lowCardAgg`: off (default) | force | auto — auto fires
-  * when CBO/AutoStats column stats bound the key NDV under
-  * `spark.graft.lowCardAgg.maxNdv` (default 262144); missing stats stay
-  * off, keeping the proven baseline.
+  * The rule fires on a grouped aggregate only when CBO/AutoStats column
+  * stats bound the product of the key NDVs by [[MaxNdv]]; missing stats
+  * keep the stock plan. A global aggregate (no keys) always qualifies.
+  * The same pass shrinks the exchange above the rewritten partial (see
+  * [[SmallExchangePartitions]]).
   */
 object LowCardAgg extends Rule[SparkPlan] {
 
-  private val ModeConf = "spark.graft.lowCardAgg"
-  private val FlushConf = "spark.graft.lowCardAgg.flushGroups"
-  private val MaxNdvConf = "spark.graft.lowCardAgg.maxNdv"
-  private val MaxStrConf = "spark.graft.lowCardAgg.maxStringKeys"
-  private[plans] val ShufConf = "spark.graft.lowCardAgg.shufflePartitions"
+  /** Upper bound on the product of the grouping keys' NDVs. */
+  private val MaxNdv = BigInt(262144)
+  /** String keys the rewrite accepts: the dictionary-id fast path made
+    * two string keys a measured win on dictionary-encoded parquet
+    * (honest h02 0.50 → 0.33, probes/lowcard_agg.json addendum) and the
+    * no-dictionary fallback sits at parity; beyond two the per-row
+    * extraction fallback is unproven, so the plan stays stock. */
+  private val MaxStringKeys = 2
+  /** Groups held before the operator flushes its partial rows. */
+  private val FlushGroups = 1 << 20
+  /** Partitions of the exchange above a rewritten partial. */
+  private val SmallExchangePartitions = 2
 
   // ── serializable per-row accessor specs ────────────────────────────────
   /** Read one value from a batch column: `width` 8=getLong 4=getInt
@@ -606,9 +615,36 @@ object LowCardAgg extends Rule[SparkPlan] {
     else None
   }
 
-  override def apply(plan: SparkPlan): SparkPlan = {
-    val mode = conf.getConfString(ModeConf, "off").toLowerCase
-    if (mode == "off") return plan
+  override def apply(plan: SparkPlan): SparkPlan = rewrite(plan, FlushGroups)
+
+  /** The rule with a smaller flush cap, so a test reaches the flush path
+    * on small data. */
+  private[plans] final class WithFlushCap(flushGroups: Int)
+      extends Rule[SparkPlan] {
+    override def apply(plan: SparkPlan): SparkPlan = rewrite(plan, flushGroups)
+  }
+
+  /** One bottom-up pass: the partial is rewritten before its parent
+    * exchange is visited, so the exchange case sees the new operator.
+    *
+    * The exchange ABOVE a [[LowCardAggExec]] shrinks to
+    * [[SmallExchangePartitions]]: its partial output is
+    * group-count-sized, yet EnsureRequirements sized the exchange at the
+    * session's shuffle-partition count — so every map task opens that
+    * many reducer files for a few thousand rows, and AQE coalesces the
+    * reads back to one anyway. Probed (probes/small_exchange.json): the
+    * write fan-out is 70-100 ms of the small-aggregate stage floor at
+    * local[32]; the round-10 honest re-probe found 2 partitions ~6%
+    * better than 4 across h02/h06/h07/h08, with 1 inside noise of 2 but
+    * worse on the smallest query. Hash distribution over the same keys
+    * at any partition count stays valid for the final aggregate.
+    *
+    * OBJECT-STATE partials are exempt: a bitmap COUNT(DISTINCT) partial
+    * carries serialized PageSets whose final-stage OR-merge is the cost
+    * — shrinking its exchange serializes that merge (h04 p2 +25%, p1
+    * +42% vs p4≈p8≈p32, probes/small_exchange.json h04 section). Those
+    * exchanges keep the session partitioning. */
+  private def rewrite(plan: SparkPlan, flushGroups: Int): SparkPlan =
     plan.transformUp {
       // ObjectHashAggregate appears when DistinctToBitmap planted a
       // TypedImperativeAggregate — same partial-over-scan shape
@@ -618,13 +654,17 @@ object LowCardAgg extends Rule[SparkPlan] {
             agg.aggregateExpressions.nonEmpty &&
             agg.aggregateExpressions.forall(ae =>
               ae.mode == Partial && !ae.isDistinct && ae.filter.isEmpty) &&
-            (mode == "force" || (mode == "auto" &&
-              (agg.groupingExpressions.isEmpty || lowNdv(agg)))) =>
-        tryRewrite(agg).getOrElse(agg)
+            (agg.groupingExpressions.isEmpty || lowNdv(agg)) =>
+        tryRewrite(agg, flushGroups).getOrElse(agg)
+      case sh @ ShuffleExchangeExec(hp: HashPartitioning,
+          lc: LowCardAggExec, _, _)
+          if hp.numPartitions > SmallExchangePartitions &&
+            !lc.aggSpecs.exists(_.isInstanceOf[BitmapSpec]) =>
+        sh.copy(outputPartitioning =
+          hp.copy(numPartitions = SmallExchangePartitions))
     }
-  }
 
-  /** auto gate: every grouping key has a known distinct count and the
+  /** The gate: every grouping key has a known distinct count and the
     * product stays under the map-friendly bound.
     *
     * A FLOORED-TIMESTAMP key (`date_trunc('hour', ts)` →
@@ -635,9 +675,8 @@ object LowCardAgg extends Rule[SparkPlan] {
     * [[graft.engine.AutoStats]]'s side store (kept out of the catalog —
     * NTZ column stats crash FilterEstimation). Without this bound the
     * canonical time-bucketed GROUP BY could never ride the columnar
-    * path in a real (auto-gated) session. */
+    * path in a real session. */
   private def lowNdv(agg: BaseAggregateExec): Boolean = {
-    val maxNdv = conf.getConfString(MaxNdvConf, "262144").toLong
     agg.logicalLink match {
       case Some(la: org.apache.spark.sql.catalyst.plans.logical.Aggregate) =>
         val stats = la.child.stats
@@ -686,7 +725,7 @@ object LowCardAgg extends Rule[SparkPlan] {
           case other => flooredBound(other)
         }
         ndv.forall(_.isDefined) &&
-          ndv.flatten.product <= BigInt(maxNdv)
+          ndv.flatten.product <= MaxNdv
       case _ => false
     }
   }
@@ -714,7 +753,8 @@ object LowCardAgg extends Rule[SparkPlan] {
     }
   }
 
-  private def tryRewrite(agg: BaseAggregateExec): Option[SparkPlan] = {
+  private def tryRewrite(agg: BaseAggregateExec,
+      flushGroups: Int): Option[SparkPlan] = {
     val (projList, filterCond, scan) = unwrap(agg.child).getOrElse(return None)
     if (!scan.supportsColumnar) return None
     // the filter must be evaluable over the scan's output alone
@@ -884,54 +924,9 @@ object LowCardAgg extends Rule[SparkPlan] {
     }
     if (outCols.exists(_.isEmpty)) return None
 
-    // string-key budget: the dictionary-id fast path made two string
-    // keys a measured win on dictionary-encoded parquet (honest h02
-    // 0.50 → 0.33, probes/lowcard_agg.json addendum) and the
-    // no-dictionary fallback sits at parity — default budget 2; beyond
-    // that the per-row extraction fallback is unproven, keep stock
-    val maxStr = conf.getConfString(MaxStrConf, "2").toInt
-    if (keySpecs.flatten.count(_._1.width == -2) > maxStr) return None
-    val flush = conf.getConfString(FlushConf, (1 << 20).toString).toInt
+    if (keySpecs.flatten.count(_._1.width == -2) > MaxStringKeys) return None
     Some(LowCardAggExec(agg.output, keySpecs.flatten, aggSpecs.flatten,
-      outCols.flatten, flush, filterCond, scan, computedVec.toSeq))
-  }
-}
-
-/** Shrink the exchange ABOVE a [[LowCardAggExec]]: its partial output is
-  * group-count-sized (the operator only fires on claimed-low-cardinality
-  * shapes), yet EnsureRequirements sized the exchange at the session's
-  * shuffle-partition count — so every map task opens that many reducer
-  * files for a few thousand rows, and AQE coalesces the reads back to
-  * one anyway. Probed (probes/small_exchange.json): the write fan-out is
-  * 70-100 ms of the small-aggregate stage floor at local[32]; cutting to
-  * 4 partitions recovers it, and the round-10 HONEST re-probe (full-plan
-  * drain, shipped-lever A/B — probes/small_exchange.json honest section)
-  * found 2 a further ~6% better across h02/h06/h07/h08, with 1 inside
-  * noise of 2 but worse on the smallest query. Hash distribution over
-  * the same keys at any partition count stays valid for the final
-  * aggregate. `spark.graft.lowCardAgg.shufflePartitions`
-  * (default 2; 0 = off).
-  *
-  * OBJECT-STATE partials are exempt: a bitmap COUNT(DISTINCT) partial
-  * carries serialized PageSets whose final-stage OR-merge is the cost —
-  * shrinking its exchange serializes that merge (h04 p2 +25%, p1 +42%
-  * vs p4≈p8≈p32, probes/small_exchange.json h04 section), and the
-  * write-fan-out saving the shrink exists for is noise next to the
-  * payload. Those exchanges keep the session partitioning. */
-object SmallAggExchange extends Rule[SparkPlan] {
-  import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-  import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-
-  override def apply(plan: SparkPlan): SparkPlan = {
-    val parts = conf.getConfString(LowCardAgg.ShufConf, "2").toInt
-    if (parts <= 0) return plan
-    plan.transformUp {
-      case sh @ ShuffleExchangeExec(hp: HashPartitioning,
-          lc: LowCardAggExec, _, _)
-          if hp.numPartitions > parts &&
-            !lc.aggSpecs.exists(_.isInstanceOf[LowCardAgg.BitmapSpec]) =>
-        sh.copy(outputPartitioning = hp.copy(numPartitions = parts))
-    }
+      outCols.flatten, flushGroups, filterCond, scan, computedVec.toSeq))
   }
 }
 

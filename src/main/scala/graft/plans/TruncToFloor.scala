@@ -1,7 +1,6 @@
 package graft.plans
 
 import graft.functions.FloorTimestamp
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, TruncTimestamp}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -53,26 +52,4 @@ object TruncToFloor extends Rule[LogicalPlan] {
             t.deterministic =>
         FloorTimestamp(child, unitMicros(fmt.toString.toLowerCase))
     }
-}
-
-/** `spark.sql.extensions` entry point registering the engine's Catalyst
-  * rules (`--conf spark.sql.extensions=graft.plans.GraftExtensions`). */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    // AttachStats first: it feeds the stats the EagerAggregation gate
-    // reads within the same operator-optimization batch
-    ext.injectOptimizerRule(_ => graft.engine.AutoStats.AttachStats)
-    ext.injectOptimizerRule(_ => TruncToFloor)
-    ext.injectOptimizerRule(_ => PartitionFilterMirror)
-    ext.injectOptimizerRule(_ => BoundsFilePrune)
-    ext.injectOptimizerRule(_ => EagerAggregation)
-    // integral COUNT(DISTINCT) → mergeable bitmap aggregate (off by
-    // default; NDV-stats-gated in auto mode — see DistinctToBitmap)
-    ext.injectOptimizerRule(_ => DistinctToBitmap)
-    // physical: columnar low-cardinality partial aggregation (see
-    // LowCardAgg — off by default, NDV-stats-gated in auto mode), then
-    // the exchange shrink for its group-count-sized partial output
-    ext.injectQueryStagePrepRule(_ => LowCardAgg)
-    ext.injectQueryStagePrepRule(_ => SmallAggExchange)
-  }
 }

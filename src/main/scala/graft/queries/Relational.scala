@@ -628,8 +628,9 @@ object Relational extends QueryPack {
     // ── LowCardAgg vector-wave gates (round-11 directive #6) ─────────────
     // The vector-filter / dictionary-combo / computed-input paths are on
     // whenever the operator fires but rode only the (untimed-compare)
-    // h-queries; these gates FORCE the operator in a cloned session so
-    // the DuckDB oracle catches a vector regression. Aggregate inputs are
+    // h-queries; these gates run on a cloned session whose table stats
+    // pass the operator's NDV gate, so the DuckDB oracle catches a vector
+    // regression. Aggregate inputs are
     // integral-valued doubles (l_quantity ≤ 50, l_linenumber ≤ 7), so
     // sums are exactly representable and the hash compare is
     // order-insensitive. Fire-assertions for the same shapes live in
@@ -644,8 +645,7 @@ object Relational extends QueryPack {
       WHERE l_quantity > 25 AND l_extendedprice <= 40000
         AND l_returnflag LIKE '%A%' AND l_discount IS NOT NULL
         AND l_shipdate >= TIMESTAMP '1995-01-01'""")) { (s, dir) =>
-      val f = forcedVector(s)
-      Tables.load(f, dir, "lineitem")
+      gatedLoad(s, dir, "lineitem")
         .filter(col("l_quantity") > 25 && col("l_extendedprice") <= 40000 &&
           col("l_returnflag").contains("A") && col("l_discount").isNotNull &&
           col("l_shipdate") >= ntz("1995-01-01"))
@@ -665,8 +665,7 @@ object Relational extends QueryPack {
       // OR condition: non-decomposable → the generated-Predicate fallback
       // inside the operator; two dict-encoded string keys → the
       // dictionary-code combo path
-      val f = forcedVector(s)
-      Tables.load(f, dir, "lineitem")
+      gatedLoad(s, dir, "lineitem")
         .filter(col("l_quantity") > 45 || col("l_discount") < 0.02)
         .groupBy("l_returnflag", "l_linestatus")
         .agg(count(lit(1)).as("n"), sum(col("l_quantity")).as("sq"),
@@ -682,8 +681,7 @@ object Relational extends QueryPack {
       FROM lineitem GROUP BY 1 ORDER BY 1""")) { (s, dir) =>
       // computed VecSpec inputs: double arithmetic + a widening int→double
       // cast (the ADVICE r10 compileVec tightening keeps exactly these)
-      val f = forcedVector(s)
-      Tables.load(f, dir, "lineitem")
+      gatedLoad(s, dir, "lineitem")
         .groupBy("l_returnflag")
         .agg(sum(col("l_quantity") * lit(2.0) - lit(1.0)).as("s1"),
           avg(col("l_quantity") + col("l_linenumber").cast(DoubleType)).as("a1"),
@@ -701,15 +699,14 @@ object Relational extends QueryPack {
       GROUP BY 1 ORDER BY 1""")) { (s, dir) =>
       // RLIKE (find semantics, = DuckDB regexp_matches) + a NOT LIKE
       // whose inner wildcards LikeSimplification cannot rewrite — all
-      // lower to RegexAtom inside the forced LowCardAgg. lang/source
+      // lower to RegexAtom inside the gated LowCardAgg. lang/source
       // are low-NDV (parquet dictionary-backs them → once-per-code
       // verdicts, the expensive-atom shape the cache was built for;
       // probes/dict_regex.json); text is high-NDV so NOT RLIKE there
       // pins the per-row Matcher path in the same plan. Fire-assertions
       // live in LowCardAggSpec; that this gate fires is recorded in
       // probes/dict_regex.json.
-      val f = forcedVector(s)
-      Tables.load(f, dir, "documents")
+      gatedLoad(s, dir, "documents")
         .filter(col("lang").rlike("^(en|de|f)") &&
           !col("source").like("%r%1%") &&
           !col("text").rlike("[0-9]{4,}"))
@@ -720,13 +717,18 @@ object Relational extends QueryPack {
     }
   )
 
-  /** Cloned session with LowCardAgg FORCED (the operator's vector paths
-    * are always on once it fires) — the gate session defaults it to
-    * auto; extensions re-inject on newSession (same
-    * `spark.sql.extensions` static conf). */
-  private def forcedVector(s: SparkSession): SparkSession = {
+  /** `name` read on a cloned session with CBO on and the table's
+    * AutoStats collected — the stats a real session plans with, under
+    * which LowCardAgg's NDV gate admits these gates' low-cardinality
+    * keys (the operator's vector paths are always on once it fires).
+    * Extensions re-inject on newSession (same `spark.sql.extensions`
+    * static conf). */
+  private def gatedLoad(s: SparkSession, dir: String,
+      name: String): DataFrame = {
     val f = s.newSession()
-    f.conf.set("spark.graft.lowCardAgg", "force")
-    f
+    f.conf.set("spark.sql.cbo.enabled", "true")
+    val df = Tables.load(f, dir, name)
+    graft.engine.AutoStats.maybeCollect(f, df)
+    df
   }
 }

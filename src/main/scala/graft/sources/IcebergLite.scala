@@ -739,15 +739,11 @@ object IcebergLite {
     * from the block metadata (sum of per-row-group counts) — the spec's
     * `record_count` data-file field; with it recorded per file, snapshot
     * COUNT(*) and DML return counts are pure metadata (no scan). */
-  private def footerStats(spark: SparkSession,
+  private def footerStats(
       path: String): (Option[String], Option[Long]) = try {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     import org.apache.parquet.schema.LogicalTypeAnnotation
-    val in = HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(path), spark.sessionState.newHadoopConf())
-    val reader = ParquetFileReader.open(in)
+    val reader = graft.engine.LakeFs.parquetReader(path)
     try {
       var rowCount = 0L
       var acc = Map.empty[String, Option[(String, String, String)]]
@@ -1145,7 +1141,7 @@ object IcebergLite {
       carryForward.map { case (f, p, b, rc) =>
         (0, f, p.orNull, b.orNull, rc) } ++
         newFiles.map { f =>                     // 0=EXISTING 1=ADDED
-          val (bounds, records) = footerStats(spark, f)
+          val (bounds, records) = footerStats(f)
           (1, f, partOf(f).orNull, bounds.orNull, records)
         })
 

@@ -1,24 +1,20 @@
 package graft.engine
 
-import graft.plans.{DistinctToBitmap, LowCardAgg, SmallAggExchange, TruncToFloor}
+import graft.plans.{DistinctToBitmap, PlanRules, TruncToFloor}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-10 directive #4: prove the AUTO gates fire in a real session —
-  * no `force` anywhere. Bench ran with `spark.graft.lowCardAgg=force` /
-  * `bitmapDistinct=force` while GraftSession defaults to stats-gated
-  * `auto`; without these plan-shape asserts the shipped wins could be
-  * bench-only. Each test drives Snowflake-dialect SQL through a plain
-  * GraftSession over the attached lake (AutoStats collects rowCount/NDV
-  * lazily on first materialization, plus timestamp ranges for the
-  * floored-key bound) and asserts the EXECUTED plan picked up the
-  * operator under `auto`.
+/** Round-10 directive #4: prove the stats gates fire in a real session
+  * with no setting touched. Each test drives Snowflake-dialect SQL
+  * through a plain GraftSession over the attached lake (AutoStats
+  * collects rowCount/NDV lazily on first materialization, plus
+  * timestamp ranges for the floored-key bound) and asserts on the
+  * EXECUTED plan.
   *
   * The shared test JVM's SparkSession predates this suite, so the rules
   * GraftExtensions would register at builder time are spliced into the
-  * session CLONE the GraftSession plans on (extraOptimizations +
-  * reflective AdaptiveRulesHolder patch — same seam as LowCardAggSpec);
-  * a production session gets them from
+  * session CLONE the GraftSession plans on ([[PlanRules]]); a production
+  * session gets them from
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions`, which
   * cloneSession carries through. */
 class AutoGateSpec extends AnyFunSuite {
@@ -32,37 +28,17 @@ class AutoGateSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  /** What GraftExtensions registers in a real deploy. */
   private def splice(s: SparkSession): Unit = {
-    // guard each rule individually: other suites splice SUBSETS of these
-    // into the shared JVM's session (LowCardAggSpec adds TruncToFloor),
-    // so one shared sentinel would skip the rest
-    Seq(AutoStats.AttachStats, TruncToFloor, DistinctToBitmap).foreach { r =>
-      if (!s.experimental.extraOptimizations.contains(r))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ r
-    }
-    import org.apache.spark.sql.execution.adaptive.AdaptiveRulesHolder
-    val ss = s.sessionState
-    val holder = ss.adaptiveRulesHolder
-    if (!holder.queryStagePrepRules.contains(LowCardAgg)) {
-      val patched = new AdaptiveRulesHolder(
-        holder.queryStagePrepRules :+ LowCardAgg :+ SmallAggExchange,
-        holder.runtimeOptimizerRules,
-        holder.queryStageOptimizerRules,
-        holder.queryPostPlannerStrategyRules)
-      val f = ss.getClass.getDeclaredFields
-        .find(_.getName.contains("adaptiveRulesHolder"))
-        .getOrElse(throw new IllegalStateException(
-          "no adaptiveRulesHolder field on SessionState"))
-      f.setAccessible(true)
-      f.set(ss, patched)
-    }
+    PlanRules.addOptimizerRules(s, AutoStats.AttachStats, TruncToFloor,
+      DistinctToBitmap)
+    PlanRules.addLowCardAgg(s)
   }
 
   private def newSession(): GraftSession = {
     val gs = new GraftSession(spark)
     gs.attachLake("/root/testdata/sf0.001")
-    splice(gs.spark) // what GraftExtensions registers in a real deploy
+    splice(gs.spark)
     gs
   }
 
@@ -73,21 +49,19 @@ class AutoGateSpec extends AnyFunSuite {
 
   test("auto: low-cardinality string key rides LowCardAggExec") {
     val gs = newSession()
-    assert(gs.spark.conf.get("spark.graft.lowCardAgg") == "auto")
     val plan = executedPlan(gs.sql("""
       SELECT l_returnflag, count(*) AS n, sum(l_quantity::double) AS q
       FROM lineitem GROUP BY 1"""))
-    assert(plan.contains("LowCardAgg"), s"auto did not fire:\n$plan")
+    assert(plan.contains("LowCardAgg"), s"the gate did not fire:\n$plan")
   }
 
   test("auto: COUNT(DISTINCT int) plans the bitmap aggregate") {
     val gs = newSession()
-    assert(gs.spark.conf.get("spark.graft.bitmapDistinct") == "auto")
     val plan = executedPlan(gs.sql("""
       SELECT o_orderpriority, count(DISTINCT o_orderkey) AS nd
       FROM orders GROUP BY 1"""))
     assert(plan.contains("bitmap_distinct_count"),
-      s"bitmap auto did not fire:\n$plan")
+      s"the bitmap gate did not fire:\n$plan")
     // and the bitmap partial itself rides the columnar operator
     assert(plan.contains("LowCardAgg"), s"partial not columnar:\n$plan")
   }
@@ -98,21 +72,25 @@ class AutoGateSpec extends AnyFunSuite {
       SELECT date_trunc('hour', ts) AS h, event_type, count(*) AS n
       FROM events GROUP BY 1, 2"""))
     assert(plan.contains("LowCardAgg"),
-      s"auto did not fire on the floored key:\n$plan")
+      s"the gate did not fire on the floored key:\n$plan")
     // the hour floor is carried in the operator's key spec (3600000000
     // micros), proving TruncToFloor rewrote AND the range bound gated
     assert(plan.contains("3600000000"),
       s"floored key spec missing from the operator:\n$plan")
   }
 
-  test("auto: the gate actually reads stats — tiny maxNdv keeps stock") {
+  test("auto: a key-NDV product over the bound keeps stock") {
     val gs = newSession()
-    gs.spark.conf.set("spark.graft.lowCardAgg.maxNdv", "2")
-    try {
-      val plan = executedPlan(gs.sql("""
-        SELECT l_returnflag, count(*) AS n FROM lineitem GROUP BY 1"""))
-      assert(!plan.contains("LowCardAgg"),
-        s"fired despite ndv over the bound:\n$plan")
-    } finally gs.spark.conf.unset("spark.graft.lowCardAgg.maxNdv")
+    // ~600 distinct values per key: one key is far under the 262144
+    // bound, the two-key product (~360000) is over it
+    gs.sql("""CREATE OR REPLACE TABLE ndv_pair AS
+      SELECT l_orderkey % 600 AS a, (l_orderkey * 7 + l_linenumber) % 599 AS b
+      FROM lineitem""")
+    val one = executedPlan(gs.sql("SELECT a, count(*) AS n FROM ndv_pair GROUP BY 1"))
+    assert(one.contains("LowCardAgg"), s"one key did not fire:\n$one")
+    val two = executedPlan(gs.sql(
+      "SELECT a, b, count(*) AS n FROM ndv_pair GROUP BY 1, 2"))
+    assert(!two.contains("LowCardAgg"),
+      s"fired despite an NDV product over the bound:\n$two")
   }
 }

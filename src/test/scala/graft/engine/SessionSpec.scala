@@ -139,9 +139,10 @@ class SessionSpec extends AnyFunSuite {
       }
       assert(fired.nonEmpty,
         s"eager aggregation did not fire:\n${df.queryExecution.optimizedPlan}")
-      // and the result matches the unrewritten plan
+      // and the result matches Spark's plan with the rule excluded
       val got = df.collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
-      s.spark.conf.set("spark.graft.eagerAggregation", "false")
+      s.spark.conf.set("spark.sql.optimizer.excludedRules",
+        graft.plans.EagerAggregation.ruleName)
       val base = s.sql("""
         SELECT c.c_name, sum(e.value::double) AS total
         FROM events e JOIN customer c ON e.user_id = c.c_custkey
@@ -152,7 +153,6 @@ class SessionSpec extends AnyFunSuite {
         assert(math.abs(a - b) < 1e-6 * math.max(1.0, math.abs(b))) }
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
-      spark.conf.unset("spark.graft.eagerAggregation")
       spark.conf.unset("spark.sql.cbo.enabled")
     }
   }

@@ -1,10 +1,15 @@
 package graft.plans
 
+import graft.engine.AutoStats
 import graft.functions.BitmapDistinct
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+/** The bitmap COUNT(DISTINCT) against Spark's stock plan. The rule's
+  * NDV gate reads each fixture's AutoStats under CBO, exactly as in a
+  * session; the stock side excludes the rule and reads parquet row-based
+  * (no columnar LowCardAgg partial). */
 class BitmapDistinctSpec extends AnyFunSuite {
 
   private lazy val spark = {
@@ -15,44 +20,30 @@ class BitmapDistinctSpec extends AnyFunSuite {
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    // the shared test JVM's session may predate this suite: extensions
-    // are builder-time only, so splice the optimizer rule through the
-    // runtime-pluggable seam and the prep rule reflectively (test-only,
-    // same approach as LowCardAggSpec)
-    if (!s.experimental.extraOptimizations.contains(DistinctToBitmap))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ DistinctToBitmap
-    injectPrepRule(s)
+    // the shared test JVM's session may predate this suite
+    PlanRules.addOptimizerRules(s, AutoStats.AttachStats, DistinctToBitmap)
+    PlanRules.addLowCardAgg(s)
     s
-  }
-
-  private def injectPrepRule(s: SparkSession): Unit = {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveRulesHolder
-    val ss = s.sessionState
-    val holder = ss.adaptiveRulesHolder
-    if (!holder.queryStagePrepRules.contains(LowCardAgg)) {
-      val patched = new AdaptiveRulesHolder(
-        holder.queryStagePrepRules :+ LowCardAgg :+ SmallAggExchange,
-        holder.runtimeOptimizerRules,
-        holder.queryStageOptimizerRules,
-        holder.queryPostPlannerStrategyRules)
-      val f = ss.getClass.getDeclaredFields
-        .find(_.getName.contains("adaptiveRulesHolder"))
-        .getOrElse(throw new IllegalStateException(
-          "no adaptiveRulesHolder field on SessionState"))
-      f.setAccessible(true)
-      f.set(ss, patched)
-    }
   }
   import spark.implicits._
 
-  private def withBitmap[T](f: => T): T = {
-    spark.conf.set("spark.graft.bitmapDistinct", "force")
-    try f finally spark.conf.set("spark.graft.bitmapDistinct", "off")
+  private def withBitmap[T](f: => T): T =
+    PlanRules.withConf(spark, PlanRules.Cbo)(f)
+
+  private def stock[T](f: => T): T = PlanRules.withConf(spark,
+    PlanRules.excluded(DistinctToBitmap), PlanRules.RowReader)(f)
+
+  /** Write `df` as a parquet fixture and collect its AutoStats. */
+  private def fixture(df: DataFrame, name: String): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory(name).toString
+    df.write.mode("overwrite").parquet(dir)
+    val back = spark.read.parquet(dir)
+    AutoStats.maybeCollect(spark, back)
+    back
   }
 
   private def assertSame(q: => DataFrame, expectFire: Boolean = true): Unit = {
-    val base = q.collect().map(_.toString).sorted
+    val base = stock(q.collect().map(_.toString).sorted)
     withBitmap {
       val df = q
       val got = df.collect().map(_.toString).sorted
@@ -96,9 +87,8 @@ class BitmapDistinctSpec extends AnyFunSuite {
     }
   }
 
-  private lazy val t: DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bmd").toString
-    spark.range(0, 60000).select(
+  private lazy val t: DataFrame =
+    fixture(spark.range(0, 60000).select(
       (col("id") % 3).cast("int").as("g"),
       when(col("id") % 91 === 0, lit(null)).otherwise(col("id") % 5000)
         .as("k"),
@@ -107,9 +97,7 @@ class BitmapDistinctSpec extends AnyFunSuite {
       date_add(lit("2024-01-01").cast("date"), (col("id") % 400).cast("int"))
         .as("d"),
       (col("id") % 400).cast("double").as("v"))
-      .repartition(5).write.mode("overwrite").parquet(dir)
-    spark.read.parquet(dir)
-  }
+      .repartition(5), "graft_bmd")
 
   test("grouped count distinct with NULLs matches stock") {
     assertSame(t.groupBy("g").agg(countDistinct(col("k")).as("n")))
@@ -151,34 +139,21 @@ class BitmapDistinctSpec extends AnyFunSuite {
   test("bitmap partial rides the LowCardAgg columnar path") {
     val q = () => t.groupBy("g").agg(countDistinct(col("k")).as("n"),
       sum(col("v")).as("s"))
-    val base = q().collect().map(_.toString).sorted
-    spark.conf.set("spark.graft.bitmapDistinct", "force")
-    spark.conf.set("spark.graft.lowCardAgg", "force")
-    try {
-      val df = q()
-      val got = df.collect().map(_.toString).sorted
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("LowCardAgg"), s"columnar path did not fire:\n$plan")
-      assert(got.sameElements(base))
-      // and with NULL-heavy input (whole groups can be all-NULL)
-      val nulls = t.withColumn("k2",
-        when(col("g") === 1, lit(null)).otherwise(col("k")))
-      val b2 = {
-        spark.conf.set("spark.graft.bitmapDistinct", "off")
-        spark.conf.set("spark.graft.lowCardAgg", "off")
-        try nulls.groupBy("g").agg(countDistinct(col("k2")).as("n"))
-          .collect().map(_.toString).sorted
-        finally {
-          spark.conf.set("spark.graft.bitmapDistinct", "force")
-          spark.conf.set("spark.graft.lowCardAgg", "force")
-        }
+    val base = stock(q().collect().map(_.toString).sorted)
+    // and with NULL-heavy input (whole groups can be all-NULL)
+    val nulls = fixture(t.withColumn("k2",
+      when(col("g") === 1, lit(null)).otherwise(col("k"))), "graft_bmd_nulls")
+    val q2 = () => nulls.groupBy("g").agg(countDistinct(col("k2")).as("n"))
+    val b2 = stock(q2().collect().map(_.toString).sorted)
+    withBitmap {
+      for ((query, want) <- Seq(q -> base, q2 -> b2)) {
+        val df = query()
+        val got = df.collect().map(_.toString).sorted
+        val plan = df.queryExecution.executedPlan.toString
+        assert(plan.contains("bitmap_distinct_count") &&
+          plan.contains("LowCardAgg"), s"columnar bitmap did not fire:\n$plan")
+        assert(got.sameElements(want))
       }
-      val g2 = nulls.groupBy("g").agg(countDistinct(col("k2")).as("n"))
-        .collect().map(_.toString).sorted
-      assert(g2.sameElements(b2))
-    } finally {
-      spark.conf.set("spark.graft.bitmapDistinct", "off")
-      spark.conf.set("spark.graft.lowCardAgg", "off")
     }
   }
 
@@ -187,12 +162,12 @@ class BitmapDistinctSpec extends AnyFunSuite {
     for (_ <- 1 to 3) {
       val n = 2000 + rnd.nextInt(3000)
       val mod = 1 + rnd.nextInt(4000)
-      val df = (1 to n).map { _ =>
+      val df = fixture((1 to n).map { _ =>
         (rnd.nextInt(4), if (rnd.nextInt(20) == 0) None
           else Some(rnd.nextLong() % mod))
-      }.toDF("g", "k")
-      val base = df.groupBy("g").agg(countDistinct(col("k")).as("n"))
-        .collect().map(_.toString).sorted
+      }.toDF("g", "k"), "graft_bmd_fuzz")
+      val base = stock(df.groupBy("g").agg(countDistinct(col("k")).as("n"))
+        .collect().map(_.toString).sorted)
       val got = withBitmap {
         df.groupBy("g").agg(countDistinct(col("k")).as("n"))
           .collect().map(_.toString).sorted

@@ -6,10 +6,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Eager aggregation: the partial aggregate lands below large inner
-  * equi-joins ONLY when column stats prove a ≥ minReduction rows-per-key
-  * collapse; results are unchanged, and every guard (outer join, DISTINCT,
-  * AVG, broadcast-sized side, mixed-side references, low reduction,
-  * missing stats) keeps the rewrite off. */
+  * equi-joins ONLY when column stats prove a ≥ 16 rows-per-key collapse;
+  * results equal Spark's plan with the rule excluded, and every guard
+  * (outer join, DISTINCT, AVG, broadcast-sized side, mixed-side
+  * references, low reduction, missing stats) keeps the rewrite off. */
 class EagerAggregationSpec extends AnyFunSuite {
 
   private lazy val spark = {
@@ -19,9 +19,7 @@ class EagerAggregationSpec extends AnyFunSuite {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    if (!s.experimental.extraOptimizations.contains(EagerAggregation))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ EagerAggregation
+    PlanRules.addOptimizerRules(s, EagerAggregation)
     s
   }
 
@@ -62,6 +60,10 @@ class EagerAggregationSpec extends AnyFunSuite {
   private lazy val thinFact = analyzedTable(
     (1 to 200).map(i => (i % 50, i.toLong)).toDF("k", "v"),
     "ea_thin", Seq("k", "v"))
+  // the same shape at 20 rows/key, just over the 16× bar
+  private lazy val barFact = analyzedTable(
+    (1 to 1000).map(i => (i % 50, i.toLong)).toDF("k", "v"),
+    "ea_bar", Seq("k", "v"))
   // stats-free fact (path read, nothing ANALYZEd)
   private lazy val rawFact = viaParquet(
     (1 to 3200).map(i => (i % 50, i.toLong)).toDF("k", "v"), "raw")
@@ -75,20 +77,12 @@ class EagerAggregationSpec extends AnyFunSuite {
           if l.isInstanceOf[Aggregate] || r.isInstanceOf[Aggregate] => true
     }.nonEmpty
 
-  private def withEager[T](flag: String)(body: => T): T = {
-    val bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    spark.conf.set("spark.graft.eagerAggregation", flag)
-    try body
-    finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
-      spark.conf.unset("spark.sql.cbo.enabled")
-      spark.conf.unset("spark.graft.eagerAggregation")
-    }
-  }
+  /** CBO on and no broadcast joins; `on = false` is Spark's plan with
+    * the rule excluded. */
   private def withEager[T](on: Boolean)(body: => T): T =
-    withEager(on.toString)(body)
+    PlanRules.withConf(spark,
+      Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1", PlanRules.Cbo) ++
+        (if (on) Nil else Seq(PlanRules.excluded(EagerAggregation))): _*)(body)
 
   private def rollup(f: DataFrame = fact): DataFrame =
     f.join(dim, f("k") === dim("k"))
@@ -103,7 +97,7 @@ class EagerAggregationSpec extends AnyFunSuite {
     }
     val want = withEager(on = false) {
       val df = rollup()
-      assert(!preAggregated(df), "flag off must disable the rewrite")
+      assert(!preAggregated(df), "an excluded rule must not rewrite")
       df.collect().toSeq
     }
     assert(plan, "expected a pre-aggregate below the join")
@@ -130,11 +124,9 @@ class EagerAggregationSpec extends AnyFunSuite {
       val df = thinFact.join(dim, thinFact("k") === dim("k"))
         .groupBy("g").agg(sum(thinFact("v")).as("s"))
       assert(!preAggregated(df), "low-reduction join must keep Catalyst's plan")
-      // a lowered bar re-enables it — the ratio is the only blocker
-      spark.conf.set("spark.graft.eagerAggregation.minReduction", "2")
-      try assert(preAggregated(thinFact.join(dim, thinFact("k") === dim("k"))
-        .groupBy("g").agg(sum(thinFact("v")).as("s"))))
-      finally spark.conf.unset("spark.graft.eagerAggregation.minReduction")
+      // the same shape over the bar rewrites — the ratio is the only blocker
+      assert(preAggregated(barFact.join(dim, barFact("k") === dim("k"))
+        .groupBy("g").agg(sum(barFact("v")).as("s"))))
     }
   }
 
@@ -146,12 +138,6 @@ class EagerAggregationSpec extends AnyFunSuite {
         .groupBy("g").agg(sum(rawFact("v")).as("s"))
       assert(!preAggregated(df))
     }
-  }
-
-  test("flag parsing accepts any boolean spelling") {
-    withEager("TRUE") { assert(preAggregated(rollup())) }
-    withEager("False") { assert(!preAggregated(rollup())) }
-    withEager("not-a-bool") { assert(!preAggregated(rollup())) }
   }
 
   test("guards: outer join, distinct, avg, mixed sides, broadcast size") {
@@ -170,12 +156,8 @@ class EagerAggregationSpec extends AnyFunSuite {
       assert(!preAggregated(mixed))
     }
     // default 10 MB broadcast threshold: tiny sides ⇒ no rewrite
-    spark.conf.set("spark.graft.eagerAggregation", "true")
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    try assert(!preAggregated(rollup()))
-    finally {
-      spark.conf.unset("spark.graft.eagerAggregation")
-      spark.conf.unset("spark.sql.cbo.enabled")
+    PlanRules.withConf(spark, PlanRules.Cbo) {
+      assert(!preAggregated(rollup()))
     }
   }
 

@@ -1,14 +1,18 @@
 package graft.plans
 
+import graft.engine.AutoStats
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Differential correctness for the columnar low-cardinality partial
-  * aggregate ([[LowCardAgg]]): every query runs force-vs-off over the
+  * aggregate ([[LowCardAgg]]): every query runs gated-vs-stock over the
   * same parquet and must produce identical rows — including NULL keys,
   * NULL aggregate inputs, strings beyond the 8-byte packing, date keys,
-  * the flush-on-overflow path, and empty scans. */
+  * the flush-on-overflow path, and empty scans. The gated side plans
+  * with each fixture's AutoStats under CBO, so the rule's NDV gate
+  * decides exactly as in a session; the stock side reads parquet
+  * row-based, which leaves the rule no columnar scan to rewrite. */
 class LowCardAggSpec extends AnyFunSuite {
 
   private lazy val spark = {
@@ -20,48 +24,24 @@ class LowCardAggSpec extends AnyFunSuite {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    if (!s.experimental.extraOptimizations.contains(TruncToFloor))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ TruncToFloor
-    if (!s.experimental.extraOptimizations.contains(DistinctToBitmap))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ DistinctToBitmap
-    injectPrepRule(s)
+    PlanRules.addOptimizerRules(s, AutoStats.AttachStats, TruncToFloor,
+      DistinctToBitmap)
+    PlanRules.addLowCardAgg(s)
     s
   }
 
-  /** The shared test JVM's session may predate this suite, and AQE
-    * query-stage-prep rules are builder-time only — splice [[LowCardAgg]]
-    * into the session's AdaptiveRulesHolder reflectively (test-only). */
-  private def injectPrepRule(s: SparkSession): Unit = {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveRulesHolder
-    val ss = s.sessionState
-    val holder = ss.adaptiveRulesHolder
-    if (!holder.queryStagePrepRules.contains(LowCardAgg)) {
-      val patched = new AdaptiveRulesHolder(
-        holder.queryStagePrepRules :+ LowCardAgg :+ SmallAggExchange,
-        holder.runtimeOptimizerRules,
-        holder.queryStageOptimizerRules,
-        holder.queryPostPlannerStrategyRules)
-      val f = ss.getClass.getDeclaredFields
-        .find(_.getName.contains("adaptiveRulesHolder"))
-        .getOrElse(throw new IllegalStateException(
-          "no adaptiveRulesHolder field on SessionState"))
-      f.setAccessible(true)
-      f.set(ss, patched)
-    }
-  }
+  /** Plan `f`'s queries with the collected stats visible to the gate. */
+  private def gated[T](f: => T): T = PlanRules.withConf(spark, PlanRules.Cbo)(f)
 
-  // queryStagePrepRules from extensions are builder-time only; register
-  // through the adaptive prep seam used by the session-shared JVM
-  private def withLowCard[T](extra: Map[String, String] = Map.empty)(
-      f: => T): T = {
-    spark.conf.set("spark.graft.lowCardAgg", "force")
-    extra.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally {
-      spark.conf.set("spark.graft.lowCardAgg", "off")
-      extra.keys.foreach(spark.conf.unset)
-    }
+  private def stock[T](f: => T): T =
+    PlanRules.withConf(spark, PlanRules.RowReader)(f)
+
+  /** A parquet fixture with its AutoStats collected, as a session's
+    * first read of a lake table does. */
+  private def fixture(dir: String): DataFrame = {
+    val df = spark.read.parquet(dir)
+    AutoStats.maybeCollect(spark, df)
+    df
   }
 
   private lazy val dataDir = {
@@ -74,6 +54,7 @@ class LowCardAggSpec extends AnyFunSuite {
       when(col("id") % 89 === 0, lit(null)).otherwise(
         concat(lit("grp_"), (col("id") % 5).cast("string"))).as("kshort"),
       concat(lit("a_longer_key_"), (col("id") % 6).cast("string")).as("klongstr"),
+      concat(lit("c"), (col("id") % 3).cast("string")).as("kstr3"),
       date_add(lit("2024-01-01").cast("date"),
         (col("id") % 11).cast("int")).as("kdate"),
       (lit("2024-03-01 00:00:00").cast("timestamp_ntz")
@@ -88,13 +69,11 @@ class LowCardAggSpec extends AnyFunSuite {
     dir
   }
 
-  private def t: DataFrame = spark.read.parquet(dataDir)
+  private def t: DataFrame = fixture(dataDir)
 
-  private def assertSame(q: => DataFrame,
-      extra: Map[String, String] = Map.empty,
-      expectFire: Boolean = true): Unit = {
-    val base = q.collect().map(_.toString).sorted
-    withLowCard(extra) {
+  private def assertSame(q: => DataFrame, expectFire: Boolean = true): Unit = {
+    val base = stock(q.collect().map(_.toString).sorted)
+    gated {
       val df = q
       val got = df.collect().map(_.toString).sorted
       val plan = df.queryExecution.executedPlan.toString
@@ -150,10 +129,24 @@ class LowCardAggSpec extends AnyFunSuite {
   }
 
   test("COUNT(DISTINCT date_trunc) via bitmap applies the floor") {
-    assertSame(
-      t.groupBy("kint").agg(
-        countDistinct(date_trunc("hour", col("ts"))).as("nd")),
-      extra = Map("spark.graft.bitmapDistinct" -> "force"))
+    // DistinctToBitmap's gate admits only a column with stats, never a
+    // computed input, so the floored input reaches the operator's bitmap
+    // spec through the bitmap aggregate itself
+    import org.apache.spark.sql.GraftColumns
+    val bitmap = GraftColumns.ofExpr(graft.functions.BitmapDistinctCount(
+      GraftColumns.exprOf(date_trunc("hour", col("ts"))))
+      .toAggregateExpression())
+    val base = stock(t.groupBy("kint")
+      .agg(countDistinct(date_trunc("hour", col("ts"))).as("nd"))
+      .collect().map(_.toString).sorted)
+    gated {
+      val df = t.groupBy("kint").agg(bitmap.as("nd"))
+      val got = df.collect().map(_.toString).sorted
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("LowCardAgg"), s"rule did not fire:\n$plan")
+      assert(got.sameElements(base),
+        s"base=${base.mkString(" ")}\ngot=${got.mkString(" ")}")
+    }
   }
 
   test("COUNT(NULL literal) stays 0 (no CountStar mapping)") {
@@ -165,15 +158,17 @@ class LowCardAggSpec extends AnyFunSuite {
   }
 
   test("flush-on-overflow: tiny cap emits mergeable partials") {
-    assertSame(t.groupBy("klong", "kint").agg(
-      count(lit(1)).as("n"), sum(col("vl")).as("s"),
-      min(col("vd")).as("mn")),
-      extra = Map("spark.graft.lowCardAgg.flushGroups" -> "3"))
+    PlanRules.withLowCardRule(spark, new LowCardAgg.WithFlushCap(3)) {
+      assertSame(t.groupBy("klong", "kint").agg(
+        count(lit(1)).as("n"), sum(col("vl")).as("s"),
+        min(col("vd")).as("mn")))
+    }
   }
 
   test("high-cardinality key stays correct through flushes") {
-    assertSame(t.groupBy("rid").agg(sum(col("vl")).as("s")),
-      extra = Map("spark.graft.lowCardAgg.flushGroups" -> "100"))
+    PlanRules.withLowCardRule(spark, new LowCardAgg.WithFlushCap(100)) {
+      assertSame(t.groupBy("rid").agg(sum(col("vl")).as("s")))
+    }
   }
 
   test("WHERE + GROUP BY rides the columnar path (residual predicate)") {
@@ -272,7 +267,7 @@ class LowCardAggSpec extends AnyFunSuite {
       (col("id") % 1000).cast("double").as("v"))
       .repartition(3).write.mode("overwrite").parquet(dir)
     assert(!hasDictPages(dir, "txt"), "fixture column came out dictionaried")
-    val hn = spark.read.parquet(dir)
+    val hn = fixture(dir)
     assertSame(hn.filter(col("txt").rlike("[0-9]{4,}") &&
         !col("txt").like("%a%b%"))
       .groupBy("k").agg(count(lit(1)).as("n"), avg(col("v")).as("a")))
@@ -296,7 +291,7 @@ class LowCardAggSpec extends AnyFunSuite {
   }
 
   test("the exchange above the operator shrinks to the configured count") {
-    withLowCard() {
+    gated {
       val df = t.groupBy("klong").agg(count(lit(1)).as("n"))
       df.collect()
       // the adaptive node hides its stages from collect — assert on the
@@ -320,7 +315,7 @@ class LowCardAggSpec extends AnyFunSuite {
               else i % 300
       (k, i % 1000)
     }.toDF("k", "v").repartition(3).write.mode("overwrite").parquet(dir)
-    val nd = spark.read.parquet(dir)
+    val nd = fixture(dir)
     assertSame(nd.groupBy("k").agg(count(lit(1)).as("n"), sum(col("v")).as("s")))
   }
 
@@ -379,17 +374,20 @@ class LowCardAggSpec extends AnyFunSuite {
   }
 
   test("two string keys fire under the default budget; three bail") {
-    // default budget 2 (dictionary fast path, round-9 addendum)
+    // budget 2 (dictionary fast path, round-9 addendum)
     assertSame(t.groupBy("kshort", "klongstr").agg(count(lit(1)).as("n")))
-    // budget gate still enforced when lowered
-    assertSame(t.groupBy("kshort", "klongstr").agg(count(lit(1)).as("n")),
-      extra = Map("spark.graft.lowCardAgg.maxStringKeys" -> "1"),
-      expectFire = false)
+    // a third string key is over the budget, though its NDV product is
+    // far under the gate's bound
+    assertSame(t.groupBy("kshort", "klongstr", "kstr3")
+      .agg(count(lit(1)).as("n")), expectFire = false)
   }
 
   test("distinct/decimal shapes bail to stock") {
-    assertSame(t.groupBy("klong").agg(
-      countDistinct(col("kint")).as("d")), expectFire = false)
+    // a distinct the bitmap rule leaves alone (its stock plan) stays stock
+    PlanRules.withConf(spark, PlanRules.excluded(DistinctToBitmap)) {
+      assertSame(t.groupBy("klong").agg(
+        countDistinct(col("kint")).as("d")), expectFire = false)
+    }
     assertSame(t.groupBy("klong").agg(
       sum(col("vl").cast("decimal(20,2)")).as("s")), expectFire = false)
   }
@@ -417,7 +415,7 @@ class LowCardAggSpec extends AnyFunSuite {
       }.toDF("k", "ks", "vl", "vd")
         .repartition(1 + rnd.nextInt(6))
         .write.mode("overwrite").parquet(dir)
-      val df = spark.read.parquet(dir)
+      val df = fixture(dir)
       // double sums/avgs rounded: partial-merge arrival order is not
       // deterministic across the two plans, so raw doubles may differ
       // in the last ulp — that is merge-order noise, not a bug
@@ -450,8 +448,8 @@ class LowCardAggSpec extends AnyFunSuite {
       }
       val seedMsg =
         s"trial=$trial keys=$keys aggs=${chosen.size} filter=$filterPick"
-      val base = q.collect().map(_.toString).sorted
-      withLowCard() {
+      val base = stock(q.collect().map(_.toString).sorted)
+      gated {
         val got = q.collect().map(_.toString).sorted
         assert(got.sameElements(base),
           s"$seedMsg\nbase=${base.take(8).mkString(" | ")}\n" +
@@ -467,12 +465,12 @@ class LowCardAggSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_lc_nodict").toString
     t.write.mode("overwrite")
       .option("parquet.enable.dictionary", "false").parquet(dir)
-    val nd = spark.read.parquet(dir)
-    val base = nd.groupBy("kshort", "klongstr")
+    val nd = fixture(dir)
+    val base = stock(nd.groupBy("kshort", "klongstr")
       .agg(count(lit(1)).as("n"), sum(col("vd")).as("s"),
         min(col("kdate")).as("d"))
-      .collect().map(_.toString).sorted
-    withLowCard(Map("spark.graft.lowCardAgg.maxStringKeys" -> "2")) {
+      .collect().map(_.toString).sorted)
+    gated {
       val df = nd.groupBy("kshort", "klongstr")
         .agg(count(lit(1)).as("n"), sum(col("vd")).as("s"),
           min(col("kdate")).as("d"))
@@ -486,7 +484,7 @@ class LowCardAggSpec extends AnyFunSuite {
     val plainDir = java.nio.file.Files.createTempDirectory("graft_lc_pe").toString
     t.write.mode("overwrite")
       .option("parquet.enable.dictionary", "false").parquet(plainDir)
-    withLowCard(Map("spark.graft.lowCardAgg.maxStringKeys" -> "2")) {
+    gated {
       // plain files are larger than dictionary files, so maxPartitionBytes
       // can pack them into different splits → different partial-agg merge
       // order → double AVG differs in the last ulps; keys/counts compare
@@ -497,7 +495,7 @@ class LowCardAggSpec extends AnyFunSuite {
             r.getDouble(1), r.getLong(2)))
           .sortBy(_._1)
       val q1 = rows(t)
-      val q2 = rows(spark.read.parquet(plainDir))
+      val q2 = rows(fixture(plainDir))
       assert(q1.length == q2.length)
       q1.zip(q2).foreach { case ((k1, a1, n1), (k2, a2, n2)) =>
         assert(k1 == k2 && n1 == n2, s"($k1,$n1) vs ($k2,$n2)")

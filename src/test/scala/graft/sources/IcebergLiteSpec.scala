@@ -32,6 +32,10 @@ class IcebergLiteSpec extends AnyFunSuite {
     s
   }
 
+  /** `f` planned by Spark without the bounds rule. */
+  private def unpruned[T](f: => T): T = graft.plans.PlanRules.withConf(spark,
+    graft.plans.PlanRules.excluded(graft.plans.BoundsFilePrune))(f)
+
   private def scannedFiles(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.queryExecution.executedPlan.collect {
       case s: org.apache.spark.sql.execution.FileSourceScanExec => s
@@ -931,10 +935,12 @@ class IcebergLiteSpec extends AnyFunSuite {
     assert(q2.count() == base.filter(col("g") === 1 && col("k") >= 2500L).count())
     val sf2 = scannedFiles(q2)
     assert(sf2.nonEmpty && sf2.length < all, sf2.toString)
-    // equivalence against the unpruned scan
-    spark.conf.set("spark.graft.boundsPrune", "false")
-    val want = try scan.filter(col("k") === 1500L).collect().map(_.toString).sorted
-    finally spark.conf.set("spark.graft.boundsPrune", "true")
+    // equivalence against the unpruned scan, which reads every file
+    val want = unpruned {
+      val u = scan.filter(col("k") === 1500L)
+      assert(scannedFiles(u).length == all, scannedFiles(u).toString)
+      u.collect().map(_.toString).sorted
+    }
     assert(q.collect().map(_.toString).sorted.sameElements(want))
   }
 
@@ -957,10 +963,8 @@ class IcebergLiteSpec extends AnyFunSuite {
         case 3 => col("d") > (rnd.nextDouble() * 60) && col("k") <= hi.toLong
       }
       val got = scan.filter(pred).agg(count(lit(1)), sum(col("k"))).collect()(0)
-      spark.conf.set("spark.graft.boundsPrune", "false")
-      val want = try scan.filter(pred)
-        .agg(count(lit(1)), sum(col("k"))).collect()(0)
-      finally spark.conf.set("spark.graft.boundsPrune", "true")
+      val want = unpruned(scan.filter(pred)
+        .agg(count(lit(1)), sum(col("k"))).collect()(0))
       assert(got == want, s"pred=$pred got=$got want=$want")
     }
   }
